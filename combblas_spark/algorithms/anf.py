@@ -40,7 +40,11 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround, pround_py
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    SMALL_VECTOR_MAX,
+    layout_vector,
+    superstep_checkpoint,
+)
 
 # Flajolet–Martin bias correction: E[2^R] = n / PHI_FM
 PHI_FM = 0.77351
@@ -106,14 +110,14 @@ def _summary_aggs(k: int, r_bits: int):
 
 
 def _or_hop(adj: DataFrame, state: DataFrame, mask_cols: list,
-            extra_cols: list, can_broadcast: bool,
-            small_vector: bool) -> DataFrame:
+            extra_cols: list, can_broadcast: bool, n: int) -> DataFrame:
     """ONE OR-semiring superstep shared by anf_sketches /
     effective_diameter / hyperball_harmonic (review r5: the hop body
     was hand-copied three times and had drifted — hyperball lacked both
     regime gates): neighbor bit_or reduce against the dst-partitioned
     cached adjacency + left-join mask merge. ``extra_cols`` pass
-    through untouched (hyperball's prev/acc accumulators)."""
+    through untouched (hyperball's prev/acc accumulators); ``n`` is the
+    vertex count."""
     mv = state.select(F.col("id").alias("src"), *mask_cols)
     if can_broadcast:
         mv = F.broadcast(mv)
@@ -124,7 +128,7 @@ def _or_hop(adj: DataFrame, state: DataFrame, mask_cols: list,
         .groupBy(F.col("dst").alias("id"))
         .agg(*[F.bit_or(c).alias(f"_n{j}") for j, c in enumerate(mask_cols)])
     )
-    stitched = F.broadcast(nbr) if small_vector else nbr
+    stitched = F.broadcast(nbr) if n <= SMALL_VECTOR_MAX else nbr
     return state.join(stitched, "id", "left").select(
         "id",
         *extra_cols,
@@ -143,7 +147,6 @@ def anf_sketches(
     seed: int = 42,
     directed: bool = False,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
     summaries: list | None = None,
 ) -> DataFrame:
     """Runs ``hops`` OR-semiring supersteps; returns the final sketch
@@ -162,10 +165,9 @@ def anf_sketches(
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
     can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
 
     state = verts.select("id", *[_init_mask(j, seed, r_bits) for j in range(k)])
-    state = state.coalesce(1) if small_vector else state.repartition(shuffle_n, "id")
+    state = layout_vector(state, n, shuffle_n)
     if summaries is not None:
         obs0 = Observation()
         state = state.observe(obs0, *_summary_aggs(k, r_bits))
@@ -179,7 +181,7 @@ def anf_sketches(
 
     mask_cols = [f"m{j}" for j in range(k)]
     for h in range(1, hops + 1):
-        new_state = _or_hop(adj, state, mask_cols, [], can_broadcast, small_vector)
+        new_state = _or_hop(adj, state, mask_cols, [], can_broadcast, n)
         obs = None
         if summaries is not None:
             obs = Observation()
@@ -248,14 +250,13 @@ def effective_diameter(
     adj.count()
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    small_vector = n <= 100_000
     # same regime gate as anf_sketches: beyond the threshold the sketch
     # state (8*k bytes/vertex) no longer fits a broadcast — fall back to
     # a shuffle join against the dst-partitioned cached adjacency.
     can_broadcast = n <= broadcast_max_vertices
 
     state = verts.select("id", *[_init_mask(j, seed, r_bits) for j in range(k)])
-    state = state.coalesce(1) if small_vector else state.repartition(shuffle_n, "id")
+    state = layout_vector(state, n, shuffle_n)
     obs0 = Observation()
     state = state.observe(obs0, *_summary_aggs(k, r_bits)).localCheckpoint(eager=True)
     got = obs0.get
@@ -265,7 +266,7 @@ def effective_diameter(
 
     mask_cols = [f"m{j}" for j in range(k)]
     for h in range(1, max_hops + 1):
-        new_state = _or_hop(adj, state, mask_cols, [], can_broadcast, small_vector)
+        new_state = _or_hop(adj, state, mask_cols, [], can_broadcast, n)
         obs = Observation()
         new_state = new_state.observe(obs, *_summary_aggs(k, r_bits))
         state = superstep_checkpoint(new_state, h)
@@ -351,7 +352,6 @@ def hyperball_harmonic(
     # hop had drifted and paid a shuffle join even on broadcastable
     # graphs)
     can_broadcast = n <= 8_000_000
-    small_vector = n <= 100_000
 
     state = (
         verts
@@ -359,12 +359,11 @@ def hyperball_harmonic(
         .withColumn("prev", _est())
         .withColumn("acc", F.lit(0.0))
     )
-    state = (state.coalesce(1) if small_vector
-             else state.repartition(shuffle_n, "id")).localCheckpoint(eager=True)
+    state = layout_vector(state, n, shuffle_n).localCheckpoint(eager=True)
     verts.unpersist()
     for h in range(1, hops + 1):
         merged = _or_hop(adj, state, mask_cols, ["prev", "acc"],
-                         can_broadcast, small_vector).withColumn("_e", _est())
+                         can_broadcast, n).withColumn("_e", _est())
         new_state = merged.select(
             "id", *mask_cols,
             F.col("_e").alias("prev"),

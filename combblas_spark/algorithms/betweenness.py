@@ -27,23 +27,18 @@ def betweenness_centrality(
     roots: list[int] | None = None,
     directed: bool = False,
     normalize: bool = False,
-    dual_layout: bool = False,
 ) -> DataFrame:
     """Returns (id, bc). roots=None uses every vertex as a source (exact
     BC, small graphs); pass a subset for the reference's sampled/batched
     mode (BetwCent.cpp batchSize x nBatches).
 
-    dual_layout: the forward wave joins edges on src, the backward
-    dependency pass joins them on dst (w) — two aggregation dimensions,
-    so on paper the HITS trade (hits.py) applies: a second
-    dst-partitioned copy spares the backward levels an edge-sized
-    exchange. MEASURED AND LEFT OFF BY DEFAULT (scripts/
-    betweenness_bench.py, BENCH.md): at RMAT-16 local[32] the A/B gives
-    0.89x/1.06x/0.95x at 64/128/256 roots — parity within host noise —
-    because the per-level set is broadcastable (the edge side is never
-    exchanged) and the backward wall is dominated by the (root, id)
-    expansion, unlike HITS where a dense n-vector meets the edge cache
-    every half-step. Placement-only: results are identical either way."""
+    ONE src-partitioned edge copy serves both the forward wave (joins on
+    src) and the backward dependency pass (joins on dst). The HITS trade
+    (hits.py: a second dst-partitioned copy) measured parity here
+    (BENCH.md, RMAT-16 local[32]: 0.89x/1.06x/0.95x at 64/128/256
+    roots): the per-level set is broadcastable, so the edge side is
+    never exchanged, and the backward wall is dominated by the
+    (root, id) expansion."""
     spark = edges.sparkSession
     shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # directed mode must dedup parallel (src,dst) rows too — the
@@ -54,11 +49,6 @@ def betweenness_centrality(
          else symmetrize_partitioned(edges, "src", shuffle_n).select("src", "dst"))
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
-    if dual_layout:
-        e_w = e.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
-        e_w.count()
-    else:
-        e_w = e
     # checkpoint: verts is referenced by the source frontier (roots=None),
     # the final bc stitch, and the normalize count — one distinct, not three
     verts = vertices(edges).localCheckpoint(eager=True)
@@ -105,7 +95,7 @@ def betweenness_centrality(
         preds = levels.filter(F.col("level") == lvl - 1).select(
             "root", F.col("id").alias("v"), F.col("sigma").alias("sig_v"))
         contrib = (
-            e_w.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+            e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
             .join(wset, "w")
             .join(preds, ["root", "v"])
             .select("root", F.col("v").alias("id"),
@@ -125,8 +115,6 @@ def betweenness_centrality(
         delta = superstep_checkpoint(delta, depth - lvl)
 
     e.unpersist()
-    if dual_layout:
-        e_w.unpersist()
     if delta is None:
         return verts.select("id", F.lit(0.0).alias("bc"))
     bc = (

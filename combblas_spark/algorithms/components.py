@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
 from combblas_spark.operators.semiring import SELECT2ND_MIN
 from combblas_spark.operators.spmv import spmv
 
@@ -37,7 +37,6 @@ def connected_components(
     max_iter: int = 50,
     metrics: list | None = None,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
     runner=None,
     initial_labels: DataFrame | None = None,
     assume_symmetric: bool = False,
@@ -78,7 +77,6 @@ def connected_components(
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n_est = verts.count()
     can_broadcast = n_est <= broadcast_max_vertices
-    small_vector = n_est <= small_vector_threshold
     # Edge partitioning per regime, mirroring pagerank.py:
     #  broadcast regime: partition by dst = the SpMV AGGREGATION key —
     #    the broadcast join preserves it, so the min-neighbor agg needs
@@ -115,7 +113,7 @@ def connected_components(
             )
         else:
             f = verts.select("id", F.col("id").alias("val"))
-        f = f.coalesce(1) if small_vector else f.repartition(shuffle_n, "id")
+        f = layout_vector(f, n_est, shuffle_n)
     f = f.localCheckpoint(eager=True)
     verts.unpersist()
 
@@ -147,16 +145,17 @@ def connected_components(
         # so the same aggregation yields both the new label AND the old
         # one — the changed-count then rides the superstep job itself as
         # an Observation (MPI_Allreduce fused into the superstep; no
-        # separate convergence join+count job).
+        # separate convergence join+count job). Labels stay longs end to
+        # end: a double compare would equate ids >= 2^53 less than one
+        # ulp apart and stop the loop early.
         from pyspark.sql import Observation
 
-        old_d = F.col("val").cast("double")
-        null_d = F.lit(None).cast("double")
+        no_old = F.lit(None).cast("long")
         new_f = (
-            f.withColumn("_old", old_d)
-            .unionByName(gp.withColumn("_old", null_d))
-            .unionByName(mngp.withColumn("_old", null_d))
-            .unionByName(hooks.withColumn("_old", null_d))
+            f.withColumn("_old", F.col("val"))
+            .unionByName(gp.withColumn("_old", no_old))
+            .unionByName(mngp.withColumn("_old", no_old))
+            .unionByName(hooks.withColumn("_old", no_old))
             .groupBy("id")
             .agg(F.min("val").alias("val"), F.min("_old").alias("_old"))
         )
@@ -164,12 +163,10 @@ def connected_components(
         new_f = (
             new_f.observe(
                 obs,
-                F.sum((F.col("val").cast("double") < F.col("_old"))
-                      .cast("long")).alias("changed"))
+                F.sum((F.col("val") < F.col("_old")).cast("long")).alias("changed"))
             .select("id", "val")
         )
-        if small_vector:
-            new_f = new_f.coalesce(1)
+        new_f = layout_vector(new_f, n_est)
         if runner is not None:
             new_f = runner.step(it, new_f)
         else:

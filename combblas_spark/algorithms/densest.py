@@ -46,7 +46,7 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
 
 
 def densest_subgraph(
@@ -76,10 +76,6 @@ def densest_subgraph(
     verts = vertices(edges).select("id")
     n0 = verts.count()
     can_broadcast = n0 <= broadcast_max_vertices
-    small = n0 <= 100_000
-
-    def _shape(df: DataFrame) -> DataFrame:
-        return df.coalesce(1) if small else df.repartition(shuffle_n, "id")
 
     out_schema = ("id", "round", "n", "m", "density")
     if n0 == 0:
@@ -88,7 +84,7 @@ def densest_subgraph(
             [], "id long, round int, n long, m long, density double")
         return empty.select(*out_schema)
 
-    alive = _shape(verts).localCheckpoint(eager=True)
+    alive = layout_vector(verts, n0, shuffle_n).localCheckpoint(eager=True)
     n_alive = n0
     best = None  # (raw_density, round, n, sum_deg, snapshot frame)
     converged = False
@@ -103,7 +99,7 @@ def densest_subgraph(
         )
         obs = Observation()
         deg = deg.observe(obs, F.coalesce(F.sum("_d"), F.lit(0)).alias("sum_d"))
-        deg = superstep_checkpoint(_shape(deg), r)
+        deg = superstep_checkpoint(layout_vector(deg, n0, shuffle_n), r)
         sum_d = int(obs.get["sum_d"])
         density = 0.5 * sum_d / n_alive  # exact mirror of the SQL twin
         if metrics is not None:
@@ -119,7 +115,7 @@ def densest_subgraph(
         new_alive = deg.filter(F.col("_d") > thr).select("id")
         obs2 = Observation()
         new_alive = new_alive.observe(obs2, F.count(F.lit(1)).alias("n"))
-        new_alive = superstep_checkpoint(_shape(new_alive), r)
+        new_alive = superstep_checkpoint(layout_vector(new_alive, n0, shuffle_n), r)
         n_next = int(obs2.get["n"])
         alive = new_alive
         n_alive = n_next

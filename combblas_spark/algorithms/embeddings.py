@@ -37,7 +37,11 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    SMALL_VECTOR_MAX,
+    layout_vector,
+    superstep_checkpoint,
+)
 
 
 def projection_entry(idc: Column, j: int, seed: int) -> Column:
@@ -61,7 +65,6 @@ def fastrp(
     seed: int = 17,
     l2_normalized: bool = False,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
     overflow_check: str = "strict",
 ) -> DataFrame:
     """FastRP embeddings over IN-link adjacency powers.
@@ -125,7 +128,6 @@ def fastrp(
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
     can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
 
     xcols = [f"x{j}" for j in range(d)]
     acols = [f"e{j}" for j in range(d)]
@@ -135,8 +137,7 @@ def fastrp(
           for j, x in enumerate(xcols)],
         *[F.lit(0).cast("long").alias(a) for a in acols],
     )
-    state = state.coalesce(1) if small_vector else state.repartition(shuffle_n, "id")
-    state = state.localCheckpoint(eager=True)
+    state = layout_vector(state, n, shuffle_n).localCheckpoint(eager=True)
 
     for it in range(n_iter):
         w = 1 << (n_iter - 1 - it)
@@ -149,7 +150,7 @@ def fastrp(
             .groupBy(F.col("dst").alias("id"))
             .agg(*[F.sum("_" + x).alias("i" + x) for x in xcols])
         )
-        stitched = F.broadcast(inflow) if small_vector else inflow
+        stitched = F.broadcast(inflow) if n <= SMALL_VECTOR_MAX else inflow
         newx = {x: F.coalesce(F.col("i" + x), F.lit(0)).cast("long") for x in xcols}
         state = superstep_checkpoint(
             state.join(stitched, "id", "left").select(

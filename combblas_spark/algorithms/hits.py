@@ -38,15 +38,17 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    SMALL_VECTOR_MAX,
+    layout_vector,
+    superstep_checkpoint,
+)
 
 
 def hits(
     edges: DataFrame,
     n_iter: int = 5,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
-    dual_layout: bool = True,
 ) -> DataFrame:
     """Returns (id, hub, auth) over the vertex set src UNION dst after
     ``n_iter`` synchronous iterations, each L2-normalized (vertices with
@@ -58,17 +60,12 @@ def hits(
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.select("src", "dst")
-    # dual layout: one copy per aggregation dimension (see module doc).
-    # dual_layout=False is the A/B baseline: a single dst-partitioned
-    # copy, so the hub half-step's src aggregation pays an edge-sized
-    # exchange every iteration (measured in BENCH.md §9).
+    # dual layout: one copy per aggregation dimension (see module doc;
+    # 1.57x per iteration over a single dst-partitioned copy, BENCH.md §9).
     e_dst = e.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     e_dst.count()
-    if dual_layout:
-        e_src = e.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
-        e_src.count()
-    else:
-        e_src = e_dst
+    e_src = e.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    e_src.count()
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
@@ -96,8 +93,7 @@ def hits(
             return raw
         return raw.select("id", (F.col("v") / F.lit(nrm)).alias("v"))
 
-    h = verts.select("id", F.lit(1.0).alias("v"))
-    h = h.coalesce(1) if n <= small_vector_threshold else h.repartition(shuffle_n, "id")
+    h = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
     h = h.localCheckpoint(eager=True)
     a = None
     for it in range(n_iter):
@@ -119,8 +115,7 @@ def hits(
     out = out.localCheckpoint(eager=True)
     verts.unpersist()
     e_dst.unpersist()
-    if dual_layout:
-        e_src.unpersist()
+    e_src.unpersist()
     return out
 
 
@@ -129,7 +124,6 @@ def katz(
     alpha: float = 0.05,
     n_iter: int = 5,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
 ) -> DataFrame:
     """Katz centrality (Katz 1953) — the third classic link-analysis
     power iteration next to PageRank and HITS/SALSA: influence decays
@@ -157,10 +151,8 @@ def katz(
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
     can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
 
-    x = verts.select("id", F.lit(1.0).alias("v"))
-    x = x.coalesce(1) if small_vector else x.repartition(shuffle_n, "id")
+    x = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
     x = x.localCheckpoint(eager=True)
     for it in range(n_iter):
         xv = x.select(F.col("id").alias("src"), F.col("v").alias("_x"))
@@ -171,7 +163,7 @@ def katz(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("_x").alias("_in"))
         )
-        stitched = F.broadcast(inflow) if small_vector else inflow
+        stitched = F.broadcast(inflow) if n <= SMALL_VECTOR_MAX else inflow
         x = superstep_checkpoint(
             verts.join(stitched, "id", "left").select(
                 "id",
@@ -191,8 +183,6 @@ def salsa(
     edges: DataFrame,
     n_iter: int = 5,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
-    dual_layout: bool = True,
 ) -> DataFrame:
     """SALSA (Lempel & Moran 2000) — the stochastic sibling of HITS:
 
@@ -229,11 +219,8 @@ def salsa(
     ew = e.join(ind, "dst").join(outd, "src").select("src", "dst", "wc", "wr")
     e_dst = ew.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     e_dst.count()
-    if dual_layout:
-        e_src = ew.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
-        e_src.count()
-    else:
-        e_src = e_dst
+    e_src = ew.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    e_src.count()
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
@@ -251,8 +238,7 @@ def salsa(
         )
         return superstep_checkpoint(raw, step_id)
 
-    h = verts.select("id", F.lit(1.0).alias("v"))
-    h = h.coalesce(1) if n <= small_vector_threshold else h.repartition(shuffle_n, "id")
+    h = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
     h = h.localCheckpoint(eager=True)
     a = None
     for it in range(n_iter):
@@ -273,8 +259,7 @@ def salsa(
     out = out.localCheckpoint(eager=True)
     verts.unpersist()
     e_dst.unpersist()
-    if dual_layout:
-        e_src.unpersist()
+    e_src.unpersist()
     return out
 
 
@@ -282,7 +267,6 @@ def eigencentrality(
     edges: DataFrame,
     n_iter: int = 8,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
 ) -> DataFrame:
     """Eigenvector centrality (Bonacich 1972) — the fourth classic
     link-analysis power iteration next to PageRank, HITS and Katz:
@@ -323,10 +307,8 @@ def eigencentrality(
 
     n = verts.count()
     can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
 
-    x = verts.select("id", F.lit(1.0).alias("v"))
-    x = x.coalesce(1) if small_vector else x.repartition(shuffle_n, "id")
+    x = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
     x = x.localCheckpoint(eager=True)
     for it in range(n_iter):
         xv = x.select(F.col("id").alias("src"), F.col("v").alias("_x"))
@@ -337,7 +319,7 @@ def eigencentrality(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("_x").alias("_in"))
         )
-        stitched = F.broadcast(inflow) if small_vector else inflow
+        stitched = F.broadcast(inflow) if n <= SMALL_VECTOR_MAX else inflow
         x = superstep_checkpoint(
             verts.join(stitched, "id", "left").select(
                 "id",

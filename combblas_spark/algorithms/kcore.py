@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
 
 
 def _peel_loop(
@@ -56,12 +56,8 @@ def _peel_loop(
     verts = vertices(edges).select("id")
     n0 = verts.count()
     can_broadcast = n0 <= broadcast_max_vertices
-    small = n0 <= 100_000
 
-    def _shape(df: DataFrame) -> DataFrame:
-        return df.coalesce(1) if small else df.repartition(shuffle_n, "id")
-
-    alive = _shape(verts).localCheckpoint(eager=True)
+    alive = layout_vector(verts, n0, shuffle_n).localCheckpoint(eager=True)
     prev_n = None
     converged = n0 == 0
     for r in range(max_rounds):
@@ -80,7 +76,7 @@ def _peel_loop(
         new_alive = agg.filter(F.col("_d") >= threshold).select("id")
         obs = Observation()
         new_alive = new_alive.observe(obs, F.count(F.lit(1)).alias("n"))
-        new_alive = superstep_checkpoint(_shape(new_alive), r)
+        new_alive = superstep_checkpoint(layout_vector(new_alive, n0, shuffle_n), r)
         n_alive = int(obs.get["n"])
         if metrics is not None:
             metrics.append({"round": r, "alive": n_alive})

@@ -4,8 +4,7 @@ Not in the reference (north rule requires it); expressed as the "most
 frequent neighbor label" semiring from SURVEY.md §2.6: a mode/argmax
 aggregate is not a single Spark agg, so it is the documented two-stage
 groupBy (count per (vertex,label)) + per-vertex argmax — a hash-agg
-`min_by(label, struct(-count, label))` by default (`argmax="window"`
-keeps the row_number variant; A/B in BENCH.md) — with a deterministic
+`min_by(label, struct(-count, label))` — with a deterministic
 min-label tie-break, which keeps results EXACT and
 SQL-oracle-comparable.
 
@@ -15,8 +14,8 @@ can unroll the identical recurrence.
 Scale design (same recipe as pagerank.py, measured there):
 * sym edges pre-partitioned ONCE by dst — the per-round count-agg
   groups by (dst, label), and HashPartitioning(dst) satisfies that
-  clustering, so no edge-sized exchange per round; the argmax window
-  (partitionBy id=dst) reuses the same partitioning.
+  clustering, so no edge-sized exchange per round; the argmax
+  aggregate (group key id=dst) reuses the same partitioning.
 * the label vector is broadcast into the join while it fits; the final
   stitch is a broadcast (small n) or co-partitioned (large n) join.
 * resumable via runtime.SuperstepRunner (state = the label vector).
@@ -32,7 +31,11 @@ from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.portable import pround
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    SMALL_VECTOR_MAX,
+    layout_vector,
+    superstep_checkpoint,
+)
 from combblas_spark.graph import symmetrize_partitioned, vertices
 
 
@@ -41,10 +44,8 @@ def label_propagation(
     n_rounds: int = 5,
     metrics: list | None = None,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
     runner=None,
     seeds: DataFrame | None = None,
-    argmax: str = "min_by",
 ) -> DataFrame:
     """Returns (id, label). Initial label = vertex id; each round every
     vertex adopts the most frequent label among its (undirected)
@@ -72,7 +73,6 @@ def label_propagation(
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
     can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
 
     start_r = 0
     labels = None
@@ -89,7 +89,7 @@ def label_propagation(
                 "id", F.col("_sl").alias("label"), "_sl")
         else:
             labels = verts.select("id", F.col("id").alias("label"))
-        labels = labels.coalesce(1) if small_vector else labels.repartition(shuffle_n, "id")
+        labels = layout_vector(labels, n, shuffle_n)
     labels = labels.localCheckpoint(eager=True)
     verts.unpersist()
 
@@ -102,35 +102,24 @@ def label_propagation(
             lv = F.broadcast(lv)
         # count-per-(vertex,label): HashPartitioning(dst) satisfies the
         # (dst,label) clustering -> no edge-sized exchange; the argmax
-        # window then reuses the same id partitioning
+        # aggregate then reuses the same id partitioning
         nbr = (
             sym.join(lv, "src")
             .groupBy(F.col("dst").alias("id"), "label")
             .agg(F.count(F.lit(1)).alias("_c"))
         )
-        if argmax == "min_by":
-            # min_by argmax (default): lexicographic min of
-            # (-count, label) == (max count, then min label) — identical
-            # tie-break to the window variant. Plans as an exchange-free
-            # SortAggregate whose sort is on the GROUP KEY ONLY, vs the
-            # window's 3-column sort + row_number; partial min_by
-            # collapses each partition's votes to one row per id.
-            # A/B at RMAT-18: 0.20-0.67x the window round (BENCH.md
-            # round-4 "labelprop argmax"); equality asserted per run
-            # by scripts/labelprop_argmax_bench.py.
-            best = (
-                nbr.groupBy("id")
-                .agg(F.min_by("label", F.struct((-F.col("_c")).alias("_nc"),
-                                                F.col("label"))).alias("_new"))
-            )
-        else:
-            w = Window.partitionBy("id").orderBy(F.col("_c").desc(), F.col("label").asc())
-            best = (
-                nbr.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .select("id", F.col("label").alias("_new"))
-            )
-        stitched = F.broadcast(best) if small_vector else best
+        # min_by argmax: lexicographic min of (-count, label) == (max
+        # count, then min label). Plans as an exchange-free SortAggregate
+        # whose sort is on the GROUP KEY ONLY, vs a row_number window's
+        # 3-column sort; partial min_by collapses each partition's votes
+        # to one row per id. A/B at RMAT-18: 0.20-0.67x the window round
+        # (BENCH.md round-4 "labelprop argmax").
+        best = (
+            nbr.groupBy("id")
+            .agg(F.min_by("label", F.struct((-F.col("_c")).alias("_nc"),
+                                            F.col("label"))).alias("_new"))
+        )
+        stitched = F.broadcast(best) if n <= SMALL_VECTOR_MAX else best
         if seeded:
             # clamp seeds; unlabeled vertices adopt the vote if any
             new_labels = (
@@ -309,8 +298,6 @@ def _modularity_local_phase(
 
     Returns (id, c).
     """
-    from combblas_spark.runtime.plans import superstep_checkpoint
-
     degn = sym.groupBy(F.col("src").alias("id")).agg(
         F.sum("w").alias("_dw"))
     if loops is not None:

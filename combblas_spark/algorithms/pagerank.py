@@ -28,11 +28,8 @@ BENCH/BASELINE.md):
 * the groupBy(dst).sum is THE communication step; map-side partial
   aggregation absorbs in-degree skew (hub pages) exactly like the
   reference's tree-reduce.
-* vector stages are sized to the vector, not the edge-side stage width:
-  small vectors collapse to one partition (65k rows in 64 partitions is
-  pure scheduling overhead; measured 4x superstep cost at RMAT-12);
-  larger ones stay hash-partitioned by id at shuffle width so the
-  state<->inflow join is co-partitioned (zero exchange, all parallel).
+* vector stages are sized to the vector, not the edge-side stage width
+  (runtime.plans.layout_vector).
 * resumable: pass a runtime.SuperstepRunner to checkpoint rank state
   durably with config lineage + partition/skew metrics (north rule).
 """
@@ -45,7 +42,62 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    SMALL_VECTOR_MAX,
+    layout_vector,
+    superstep_checkpoint,
+)
+
+
+def _vertex_base(edges: DataFrame) -> DataFrame:
+    """Persisted (id, dg) over src UNION dst: ONE aggregation yields the
+    vertex set AND the dangling flag (dg(v) = v never appears as src) as
+    a max over 1-for-src/0-for-dst markers. Replaces the former
+    three-shuffle setup (vertices() distinct + srcs distinct + left
+    join) — measured on the sf0.1 bench as ~15% of the PageRank wall.
+    Cached: the initial state is then a pure projection of this."""
+    return (
+        edges.select(F.col("src").alias("id"), F.lit(1).alias("_s"))
+        .unionByName(edges.select(F.col("dst").alias("id"), F.lit(0).alias("_s")))
+        .groupBy("id")
+        .agg(F.max("_s").alias("_s"))
+        .select("id", (F.col("_s") == 0).alias("dg"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+def _normalized_edges(edges: DataFrame, weighted: bool, can_broadcast: bool,
+                      edge_layout: str | None = None) -> DataFrame:
+    """Edges (src, dst, w) with w = val / out-weight(src), laid out on the
+    regime key, persisted and filled — the one edge-sized setup every
+    superstep reuses.
+
+    Broadcast regime: partition by the AGGREGATION key (dst). The
+    per-superstep SpMV is then a broadcast join + an agg whose
+    partitioning is already satisfied -> ZERO exchanges inside the loop;
+    only the small rank vector moves (the SUMMA analogue: blocks stay
+    put, the vector is the allgather). Shuffle regime: pin the edges to
+    the JOIN key (src) so the big side never re-shuffles; the rank
+    vector shuffles to meet it and the agg shuffles by dst (AQE-planned,
+    skew-join enabled in session.py).
+
+    ``edge_layout="src"`` in the shuffle regime keeps the caller's
+    layout (bucketed table): the normalize join is co-partitioned with
+    the degree agg, so the whole setup runs exchange-free. Only "src"
+    survives the normalize join (it joins on src); a declared "dst"
+    layout is destroyed by that join, so honoring it would silently
+    trade ONE setup repartition for an edge-sized exchange EVERY
+    superstep of the broadcast regime — it is repartitioned instead."""
+    w = F.col("val") if weighted and "val" in edges.columns else F.lit(1.0)
+    outw = edges.groupBy("src").agg(F.sum(w).alias("_outw"))
+    enorm = edges.join(outw, "src").select("src", "dst", (w / F.col("_outw")).alias("w"))
+    key = "dst" if can_broadcast else "src"
+    if not edge_layout == key == "src":
+        shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        enorm = enorm.repartition(shuffle_n, key)
+    enorm = enorm.persist(StorageLevel.MEMORY_AND_DISK)
+    enorm.count()
+    return enorm
 
 
 def pagerank(
@@ -57,12 +109,10 @@ def pagerank(
     weighted: bool = False,
     metrics: list | None = None,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
     runner=None,
     initial_ranks: DataFrame | None = None,
     edge_layout: str | None = None,
     teleport: DataFrame | None = None,
-    loop_layout: str | None = None,
 ) -> DataFrame:
     """Returns (id, rank) over the vertex set src UNION dst.
 
@@ -97,22 +147,8 @@ def pagerank(
     declaration costs an avoidable shuffle downstream, never wrong
     results (hash partitioning only affects placement).
     """
-    spark = edges.sparkSession
-
-    # ONE aggregation yields the vertex set AND the dangling flag
-    # (dg(v) = v never appears as src): max over 1-for-src/0-for-dst
-    # markers. Replaces the former three-shuffle setup (vertices()
-    # distinct + srcs distinct + left join) — measured on the sf0.1
-    # bench as ~15% of the PageRank wall. Cached: the initial state is
-    # then a pure projection of this.
-    base = (
-        edges.select(F.col("src").alias("id"), F.lit(1).alias("_s"))
-        .unionByName(edges.select(F.col("dst").alias("id"), F.lit(0).alias("_s")))
-        .groupBy("id")
-        .agg(F.max("_s").alias("_s"))
-        .select("id", (F.col("_s") == 0).alias("dg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    base = _vertex_base(edges)
     personalized = teleport is not None
     if personalized:
         # fold the normalized restart distribution into the cached base
@@ -143,53 +179,7 @@ def pagerank(
     else:
         n = base.count()
     can_broadcast = n <= broadcast_max_vertices
-    # Small vectors collapse to one partition (tiny-stage overhead
-    # dominates otherwise); bigger vectors stay hash-partitioned by id at
-    # shuffle width so every vector stage parallelizes AND the per-
-    # superstep state<->inflow join is co-partitioned (zero exchange).
-    small_vector = n <= small_vector_threshold
-
-    w = F.col("val") if weighted and "val" in edges.columns else F.lit(1.0)
-    outw = edges.groupBy("src").agg(F.sum(w).alias("_outw"))
-    enorm = edges.join(outw, "src").select("src", "dst", (w / F.col("_outw")).alias("w"))
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # loop_layout FORCES the cached-edge partitioning for the superstep
-    # loop (A/B instrumentation, VERDICT r3 #2): "src" pins the SpMV
-    # join side (default in the shuffle regime), "dst" pins the
-    # aggregation side (default in the broadcast regime, where the join
-    # is a broadcast and free). Results are layout-invariant; only the
-    # exchange placement moves. Leave None outside experiments.
-    regime_key = loop_layout or ("dst" if can_broadcast else "src")
-    if edge_layout == regime_key == "src":
-        # caller declared the input already partitioned on the regime
-        # key (bucketed table) — keep its layout; the normalize join
-        # above is co-partitioned with the degree agg for layout "src",
-        # so the whole setup ran exchange-free. Only "src" survives the
-        # normalize join (it joins on src); a declared "dst" layout is
-        # destroyed by that join, so honoring it here would silently
-        # trade ONE setup repartition for an edge-sized exchange EVERY
-        # superstep of the broadcast regime — fall through instead.
-        pass
-    elif regime_key == "dst":
-        # broadcast regime default (or loop_layout="dst" override):
-        # pre-partition edges by the AGGREGATION key (dst). The
-        # per-superstep SpMV is then a broadcast join + an agg whose
-        # partitioning is already satisfied -> ZERO exchanges inside
-        # the loop; only the small rank vector moves (the SUMMA
-        # analogue: blocks stay put, the vector is the allgather).
-        # NOTE: branching must be on regime_key, not can_broadcast —
-        # the original branch ignored loop_layout entirely, so the
-        # first round-4 dual-layout A/B compared src against src
-        # (caught in review; re-measured after this fix, BENCH.md).
-        enorm = enorm.repartition(shuffle_n, "dst")
-    else:
-        # big-vector regime: pin the edge partitioning to the JOIN key
-        # (src) so the big side never re-shuffles; the rank vector
-        # shuffles to meet it and the agg shuffles by dst (AQE-planned,
-        # skew-join enabled in session.py).
-        enorm = enorm.repartition(shuffle_n, "src")
-    enorm = enorm.persist(StorageLevel.MEMORY_AND_DISK)
-    enorm.count()
+    enorm = _normalized_edges(edges, weighted, can_broadcast, edge_layout)
 
     # State vector (id, rank, dg): dg marks dangling vertices (appear as
     # dst but have no out-edges) so the per-superstep dangling mass is a
@@ -222,7 +212,7 @@ def pagerank(
             state = base.select("id", F.col("tp").alias("rank"), "dg", "tp")
         else:
             state = base.select("id", F.lit(1.0 / n).alias("rank"), "dg")
-        state = state.coalesce(1) if small_vector else state.repartition(shuffle_n, "id")
+        state = layout_vector(state, n, shuffle_n)
     state = state.localCheckpoint(eager=True)
     base.unpersist()
 
@@ -260,7 +250,7 @@ def pagerank(
                 .groupBy("id")
                 .agg(F.sum("_c").alias("_in"))
             )
-            stitched = F.broadcast(inflow) if small_vector else inflow
+            stitched = F.broadcast(inflow) if n <= SMALL_VECTOR_MAX else inflow
             new_state = (
                 state.join(stitched, "id", "left")
                 .crossJoin(F.broadcast(dmass))
@@ -328,7 +318,6 @@ def pagerank_batch(
     n_iter: int = 10,
     weighted: bool = False,
     broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
 ) -> DataFrame:
     """Batched single-seed personalized PageRank: B seed vertices share
     ONE power-iteration loop by carrying the rank vector as an
@@ -362,16 +351,9 @@ def pagerank_batch(
     if len(set(seeds)) != len(seeds):
         raise ValueError("pagerank_batch: duplicate seed ids")
     B = len(seeds)
-    spark = edges.sparkSession
+    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    base = (
-        edges.select(F.col("src").alias("id"), F.lit(1).alias("_s"))
-        .unionByName(edges.select(F.col("dst").alias("id"), F.lit(0).alias("_s")))
-        .groupBy("id")
-        .agg(F.max("_s").alias("_s"))
-        .select("id", (F.col("_s") == 0).alias("dg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    base = _vertex_base(edges)
     n = base.count()
     present = base.filter(F.col("id").isin(seeds)).count()
     if present != B:
@@ -379,25 +361,14 @@ def pagerank_batch(
             f"pagerank_batch: {B - present} seed id(s) not in the graph's "
             "vertex set (their chains would be identically zero)")
     can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
-
-    w = F.col("val") if weighted and "val" in edges.columns else F.lit(1.0)
-    outw = edges.groupBy("src").agg(F.sum(w).alias("_outw"))
-    enorm = edges.join(outw, "src").select(
-        "src", "dst", (w / F.col("_outw")).alias("w"))
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    enorm = (enorm.repartition(shuffle_n, "dst") if can_broadcast
-             else enorm.repartition(shuffle_n, "src"))
-    enorm = enorm.persist(StorageLevel.MEMORY_AND_DISK)
-    enorm.count()
+    enorm = _normalized_edges(edges, weighted, can_broadcast)
 
     def _t(b):
         return F.when(F.col("id") == F.lit(seeds[b]), F.lit(1.0)).otherwise(F.lit(0.0))
 
     state = base.select(
         "id", F.array(*[_t(b) for b in range(B)]).alias("ranks"), "dg")
-    state = state.coalesce(1) if small_vector else state.repartition(shuffle_n, "id")
-    state = state.localCheckpoint(eager=True)
+    state = layout_vector(state, n, shuffle_n).localCheckpoint(eager=True)
     base.unpersist()
 
     for it in range(n_iter):
@@ -415,7 +386,8 @@ def pagerank_batch(
             .groupBy("id")
             .agg(F.array(*[F.sum(F.col("_c")[b]) for b in range(B)]).alias("_in"))
         )
-        stitched = F.broadcast(inflow) if (can_broadcast and small_vector) else inflow
+        stitched = (F.broadcast(inflow) if can_broadcast and n <= SMALL_VECTOR_MAX
+                    else inflow)
         new_ranks = F.array(*[
             F.lit(1.0 - alpha) * _t(b)
             + F.lit(alpha) * (F.coalesce(F.col("_in")[b], F.lit(0.0))

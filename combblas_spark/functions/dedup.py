@@ -45,7 +45,7 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     exactly when duplicates co-locate — crawl-segment-ordered web
     corpora, where recrawls and mirror pages arrive together — and ~1
     under random placement. Measured 3-way A/B vs the window and a
-    thin-key semi-join (scripts/dedup_exact_ab.py, BENCH.md round-4):
+    thin-key semi-join (BENCH.md round-4):
     min_by is ~1.3x faster for thin rows, a wash (within host noise)
     at 2KB rows single-box; the window never beats it by more than
     noise, and min_by is the only variant whose network bytes can

@@ -116,3 +116,25 @@ def superstep_checkpoint(df: DataFrame, iteration: int,
     elif bits > stats_reset_bits:
         out = reset_plan_stats(out)
     return out
+
+
+# Vertex-sized frames (state, label and rank vectors) at or below this
+# many rows collapse to ONE partition: 65k rows spread over 64 shuffle
+# partitions is pure task-scheduling overhead (measured 4x superstep
+# cost at RMAT-12). Larger vectors stay hash-partitioned by id at
+# shuffle width, so every vector stage parallelizes AND the
+# per-superstep state<->inflow stitch join is co-partitioned (no
+# exchange). Loops that stitch by join also broadcast the inflow side
+# while the vector is this small.
+SMALL_VECTOR_MAX = 100_000
+
+
+def layout_vector(df: DataFrame, n: int, shuffle_n: int | None = None) -> DataFrame:
+    """Lay out a vertex-sized frame of ``n`` rows for an iterative loop:
+    ``coalesce(1)`` when ``n <= SMALL_VECTOR_MAX``, otherwise
+    ``repartition(shuffle_n, "id")``. ``shuffle_n=None`` leaves a large
+    frame as it is (e.g. an aggregation output that is already
+    hash-partitioned by id)."""
+    if n <= SMALL_VECTOR_MAX:
+        return df.coalesce(1)
+    return df if shuffle_n is None else df.repartition(shuffle_n, "id")

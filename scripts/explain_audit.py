@@ -518,6 +518,51 @@ def main() -> None:
           "(asserted). spgemm_phased's auto phase estimator is a "
           "histogram equi-join ending in a sanctioned 1-row scalar agg "
           "(the MPI_Allreduce analogue class).")
+
+    print("=== 20. PageRank setup placement: cached normalized edges ===")
+    # results never depend on placement, so value tests cannot see a
+    # lost repartition — assert the cached edge layout directly
+    import re
+    import shutil
+    import tempfile
+
+    from combblas_spark.algorithms.pagerank import _normalized_edges
+    from combblas_spark.sources.io import read_bucketed_edges, write_bucketed_edges
+
+    def cached_setup_plan(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("InMemoryRelation", 1)[1]
+
+    raw = events_graph(spark, sf)
+    enorm = _normalized_edges(raw, weighted=False, can_broadcast=True)
+    setup = cached_setup_plan(enorm)
+    top = next(ln for ln in setup.splitlines() if "Exchange" in ln).strip(" :+-")
+    assert re.match(r"Exchange hashpartitioning\(dst#\d+L?, 16\)", top), top
+    enorm.unpersist()
+    print("broadcast regime: cached edges hash-partitioned by dst (asserted)")
+
+    tmp = tempfile.mkdtemp(prefix="explain-audit-")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # a broadcast degree table would hide the co-partitioned join; at
+    # scale the degree table is edge-sized and never broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        # 8 buckets != 16 shuffle partitions: a repartition the skip
+        # should have dropped cannot be elided as already satisfied
+        write_bucketed_edges(raw, "explain_audit_bkt", buckets=8, key="src",
+                             path=f"{tmp}/edges")
+        enorm = _normalized_edges(read_bucketed_edges(spark, "explain_audit_bkt"),
+                                  weighted=False, can_broadcast=False,
+                                  edge_layout="src")
+        setup = cached_setup_plan(enorm)
+        assert "Exchange" not in setup, setup
+        enorm.unpersist()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        spark.sql("DROP TABLE IF EXISTS explain_audit_bkt")
+        shutil.rmtree(tmp, ignore_errors=True)
+    print("shuffle regime, bucketed-by-src + edge_layout='src': "
+          "setup plan exchange-free (asserted)")
     spark.stop()
 
 

@@ -456,38 +456,6 @@ def test_prune_recovery_reference_rule(spark):
     }
 
 
-def test_packed_spmv_matches_row_plan(spark):
-    """CSR-block packed SpMV (operators/packed.py) must be value-
-    identical to the row-plan spmv() — the experiment's correctness
-    gate (plus_times, duplicate-free RMAT graph)."""
-    import math
-
-    import pyspark.sql.functions as F
-
-    from combblas_spark.graph import build_graph
-    from combblas_spark.operators.packed import pack_adjacency, spmv_packed
-    from combblas_spark.operators.spmv import spmv
-    from combblas_spark.sources.rmat import rmat_edges
-
-    g = build_graph(rmat_edges(spark, 8, 8))
-    x = (g.select(F.col("src").alias("id")).distinct()
-         .withColumn("val", (F.col("id") % 7 + 1).cast("double")))
-    row = {r["id"]: r["val"] for r in spmv(g, x).collect()}
-    pk = {r["id"]: r["val"] for r in spmv_packed(pack_adjacency(g, 8), x).collect()}
-    assert set(row) == set(pk)
-    assert all(math.isclose(row[k], pk[k], rel_tol=1e-9) for k in row)
-    # exact-cancellation case (review r4): contributions summing to 0.0
-    # must still emit (id, 0.0) like the row plan, at ANY partitioning
-    gz = spark.createDataFrame(
-        [(0, 5, 1.0), (1, 5, -1.0)], "src long, dst long, val double")
-    xz = spark.createDataFrame([(0, 1.0), (1, 1.0)], "id long, val double")
-    rz = {r["id"]: r["val"] for r in spmv(gz, xz).collect()}
-    for nparts in (1, 2):
-        pz = {r["id"]: r["val"] for r in
-              spmv_packed(pack_adjacency(gz.repartition(nparts), 2), xz).collect()}
-        assert pz == rz == {5: 0.0}, (nparts, pz, rz)
-
-
 def test_symmetrize_partitioned_single_exchange(spark):
     """symmetrize_partitioned must dedup ON TOP of the layout
     partitioning: exactly one Exchange in the whole plan (the
