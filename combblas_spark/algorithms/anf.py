@@ -41,8 +41,9 @@ from combblas_spark.portable import pround, pround_py
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
 from combblas_spark.runtime.plans import (
-    SMALL_VECTOR_MAX,
+    broadcastable,
     layout_vector,
+    small_vector,
     superstep_checkpoint,
 )
 
@@ -128,7 +129,7 @@ def _or_hop(adj: DataFrame, state: DataFrame, mask_cols: list,
         .groupBy(F.col("dst").alias("id"))
         .agg(*[F.bit_or(c).alias(f"_n{j}") for j, c in enumerate(mask_cols)])
     )
-    stitched = F.broadcast(nbr) if n <= SMALL_VECTOR_MAX else nbr
+    stitched = F.broadcast(nbr) if small_vector(n) else nbr
     return state.join(stitched, "id", "left").select(
         "id",
         *extra_cols,
@@ -146,7 +147,6 @@ def anf_sketches(
     r_bits: int = 24,
     seed: int = 42,
     directed: bool = False,
-    broadcast_max_vertices: int = 8_000_000,
     summaries: list | None = None,
 ) -> DataFrame:
     """Runs ``hops`` OR-semiring supersteps; returns the final sketch
@@ -164,7 +164,7 @@ def anf_sketches(
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n)
 
     state = verts.select("id", *[_init_mask(j, seed, r_bits) for j in range(k)])
     state = layout_vector(state, n, shuffle_n)
@@ -230,7 +230,6 @@ def effective_diameter(
     k: int = 16,
     r_bits: int = 24,
     seed: int = 42,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> dict:
     """Smallest h with N(h) >= q * N(infinity), interpolated like the
     WebGraph convention. Runs hops until the sketches reach their
@@ -253,7 +252,7 @@ def effective_diameter(
     # same regime gate as anf_sketches: beyond the threshold the sketch
     # state (8*k bytes/vertex) no longer fits a broadcast — fall back to
     # a shuffle join against the dst-partitioned cached adjacency.
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n)
 
     state = verts.select("id", *[_init_mask(j, seed, r_bits) for j in range(k)])
     state = layout_vector(state, n, shuffle_n)
@@ -348,10 +347,7 @@ def hyperball_harmonic(
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    # same regime gates as anf_sketches (review r5: this copy of the
-    # hop had drifted and paid a shuffle join even on broadcastable
-    # graphs)
-    can_broadcast = n <= 8_000_000
+    can_broadcast = broadcastable(n)
 
     state = (
         verts

@@ -40,7 +40,6 @@ def _parent_agg(parent_rule: str, seed: str = "bfsrand"):
 
 def _bfs(edges: DataFrame, root: int, directed: bool,
          broadcast_threshold: int, max_depth: int, want_parents: bool,
-         metrics: list | None = None,
          direction_optimizing: bool = False,
          bottom_up_fraction: float = 0.05,
          parent_rule: str = "min") -> DataFrame:
@@ -109,8 +108,6 @@ def _bfs(edges: DataFrame, root: int, directed: bool,
             )
         nxt = superstep_checkpoint(nxt, level)
         frontier_n = nxt.count()
-        if metrics is not None:
-            metrics.append({"level": level, "frontier": frontier_n})
         if frontier_n == 0:
             break
         new_visited = visited.unionByName(nxt).persist()
@@ -129,7 +126,6 @@ def _bfs(edges: DataFrame, root: int, directed: bool,
 
 def bfs_levels(edges: DataFrame, root: int, directed: bool = False,
                broadcast_threshold: int = 1_000_000, max_depth: int = 1000,
-               metrics: list | None = None,
                direction_optimizing: bool = False) -> DataFrame:
     """(id, level) for vertices reachable from root.
 
@@ -138,7 +134,7 @@ def bfs_levels(edges: DataFrame, root: int, directed: bool = False,
     unvisited (DirOptBFS.cpp:376-443 heuristic) — identical results
     (min-id parents), different join order."""
     return _bfs(edges, root, directed, broadcast_threshold, max_depth, False,
-                metrics, direction_optimizing)
+                direction_optimizing)
 
 
 def bfs_parents(edges: DataFrame, root: int, directed: bool = False,

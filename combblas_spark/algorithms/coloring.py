@@ -32,7 +32,6 @@ def jp_coloring(
     edges: DataFrame,
     seed: int = 42,
     max_rounds: int = 200,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Returns (id, color) — a proper coloring of the undirected view;
     colors are 0-based wave numbers. Isolated vertices get color 0.
@@ -81,8 +80,6 @@ def jp_coloring(
             colored = colored.unionByName(winners).localCheckpoint(eager=True)
             uncolored = superstep_checkpoint(
                 uncolored.join(winners.select("id"), "id", "left_anti"), wave)
-            if metrics is not None:
-                metrics.append({"wave": wave, "colored": winners.count()})
         else:
             if not uncolored.isEmpty():  # pragma: no cover - loud failure
                 raise RuntimeError(

@@ -27,7 +27,11 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    BROADCAST_MAX_VERTICES,
+    layout_vector,
+    superstep_checkpoint,
+)
 from combblas_spark.operators.semiring import SELECT2ND_MIN
 from combblas_spark.operators.spmv import spmv
 
@@ -36,7 +40,7 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     metrics: list | None = None,
-    broadcast_max_vertices: int = 8_000_000,
+    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
     runner=None,
     initial_labels: DataFrame | None = None,
     assume_symmetric: bool = False,
@@ -189,7 +193,6 @@ def connected_components(
 def connected_components_as(
     edges: DataFrame,
     max_iter: int = 100,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Awerbuch–Shiloach / LACC-style connected components — the
     reference's second CC algorithm (Applications/CC.h:1405-1544:
@@ -307,8 +310,6 @@ def connected_components_as(
         changed = int(obs.get["changed"] or 0)
         gp.unpersist()
         f = new_f
-        if metrics is not None:
-            metrics.append({"iter": it, "changed": changed})
         if changed == 0:
             break
 

@@ -46,15 +46,17 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    broadcastable,
+    layout_vector,
+    superstep_checkpoint,
+)
 
 
 def densest_subgraph(
     edges: DataFrame,
     eps: float = 0.5,
     max_rounds: int = 64,
-    broadcast_max_vertices: int = 8_000_000,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Returns (id, round, n, m, density): the vertices of the densest
     peel snapshot of the undirected, de-looped graph underlying
@@ -75,7 +77,7 @@ def densest_subgraph(
 
     verts = vertices(edges).select("id")
     n0 = verts.count()
-    can_broadcast = n0 <= broadcast_max_vertices
+    can_broadcast = broadcastable(n0)
 
     out_schema = ("id", "round", "n", "m", "density")
     if n0 == 0:
@@ -102,9 +104,6 @@ def densest_subgraph(
         deg = superstep_checkpoint(layout_vector(deg, n0, shuffle_n), r)
         sum_d = int(obs.get["sum_d"])
         density = 0.5 * sum_d / n_alive  # exact mirror of the SQL twin
-        if metrics is not None:
-            metrics.append({"round": r, "n": n_alive, "sum_deg": sum_d,
-                            "density": density})
         if best is None or density > best[0]:
             best = (density, r, n_alive, sum_d, alive)
         if sum_d == 0:

@@ -38,8 +38,9 @@ from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
 from combblas_spark.runtime.plans import (
-    SMALL_VECTOR_MAX,
+    broadcastable,
     layout_vector,
+    small_vector,
     superstep_checkpoint,
 )
 
@@ -64,7 +65,6 @@ def fastrp(
     n_iter: int = 3,
     seed: int = 17,
     l2_normalized: bool = False,
-    broadcast_max_vertices: int = 8_000_000,
     overflow_check: str = "strict",
 ) -> DataFrame:
     """FastRP embeddings over IN-link adjacency powers.
@@ -127,7 +127,7 @@ def fastrp(
                 "risk (the actual signed sums are typically far smaller)")
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n)
 
     xcols = [f"x{j}" for j in range(d)]
     acols = [f"e{j}" for j in range(d)]
@@ -150,7 +150,7 @@ def fastrp(
             .groupBy(F.col("dst").alias("id"))
             .agg(*[F.sum("_" + x).alias("i" + x) for x in xcols])
         )
-        stitched = F.broadcast(inflow) if n <= SMALL_VECTOR_MAX else inflow
+        stitched = F.broadcast(inflow) if small_vector(n) else inflow
         newx = {x: F.coalesce(F.col("i" + x), F.lit(0)).cast("long") for x in xcols}
         state = superstep_checkpoint(
             state.join(stitched, "id", "left").select(

@@ -39,8 +39,9 @@ from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
 from combblas_spark.runtime.plans import (
-    SMALL_VECTOR_MAX,
+    broadcastable,
     layout_vector,
+    small_vector,
     superstep_checkpoint,
 )
 
@@ -48,7 +49,6 @@ from combblas_spark.runtime.plans import (
 def hits(
     edges: DataFrame,
     n_iter: int = 5,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """Returns (id, hub, auth) over the vertex set src UNION dst after
     ``n_iter`` synchronous iterations, each L2-normalized (vertices with
@@ -69,7 +69,7 @@ def hits(
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n)
 
     def _vec(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if can_broadcast else df
@@ -123,7 +123,6 @@ def katz(
     edges: DataFrame,
     alpha: float = 0.05,
     n_iter: int = 5,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """Katz centrality (Katz 1953) — the third classic link-analysis
     power iteration next to PageRank and HITS/SALSA: influence decays
@@ -150,7 +149,7 @@ def katz(
     e.count()
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n)
 
     x = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
     x = x.localCheckpoint(eager=True)
@@ -163,7 +162,7 @@ def katz(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("_x").alias("_in"))
         )
-        stitched = F.broadcast(inflow) if n <= SMALL_VECTOR_MAX else inflow
+        stitched = F.broadcast(inflow) if small_vector(n) else inflow
         x = superstep_checkpoint(
             verts.join(stitched, "id", "left").select(
                 "id",
@@ -182,7 +181,6 @@ def katz(
 def salsa(
     edges: DataFrame,
     n_iter: int = 5,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """SALSA (Lempel & Moran 2000) — the stochastic sibling of HITS:
 
@@ -224,7 +222,7 @@ def salsa(
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n)
 
     def _vec(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if can_broadcast else df
@@ -266,7 +264,6 @@ def salsa(
 def eigencentrality(
     edges: DataFrame,
     n_iter: int = 8,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """Eigenvector centrality (Bonacich 1972) — the fourth classic
     link-analysis power iteration next to PageRank, HITS and Katz:
@@ -306,7 +303,7 @@ def eigencentrality(
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
 
     n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n)
 
     x = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
     x = x.localCheckpoint(eager=True)
@@ -319,7 +316,7 @@ def eigencentrality(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("_x").alias("_in"))
         )
-        stitched = F.broadcast(inflow) if n <= SMALL_VECTOR_MAX else inflow
+        stitched = F.broadcast(inflow) if small_vector(n) else inflow
         x = superstep_checkpoint(
             verts.join(stitched, "id", "left").select(
                 "id",

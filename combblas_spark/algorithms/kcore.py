@@ -28,7 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    broadcastable,
+    layout_vector,
+    superstep_checkpoint,
+)
 
 
 def _peel_loop(
@@ -38,8 +42,6 @@ def _peel_loop(
     threshold,
     op_name: str,
     max_rounds: int,
-    broadcast_max_vertices: int,
-    metrics: list | None,
 ) -> DataFrame:
     """Shared threshold-peel driver for k_core / s_core: iterate
     (per-alive-subgraph aggregate over ``sym`` grouped by dst) >=
@@ -55,7 +57,7 @@ def _peel_loop(
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     verts = vertices(edges).select("id")
     n0 = verts.count()
-    can_broadcast = n0 <= broadcast_max_vertices
+    can_broadcast = broadcastable(n0)
 
     alive = layout_vector(verts, n0, shuffle_n).localCheckpoint(eager=True)
     prev_n = None
@@ -78,8 +80,6 @@ def _peel_loop(
         new_alive = new_alive.observe(obs, F.count(F.lit(1)).alias("n"))
         new_alive = superstep_checkpoint(layout_vector(new_alive, n0, shuffle_n), r)
         n_alive = int(obs.get["n"])
-        if metrics is not None:
-            metrics.append({"round": r, "alive": n_alive})
         alive = new_alive
         if n_alive == 0 or n_alive == prev_n:
             converged = True
@@ -101,8 +101,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     max_rounds: int = 100,
-    broadcast_max_vertices: int = 8_000_000,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Returns (id) — the vertices of the k-core of the undirected,
     de-looped graph underlying ``edges``. Empty result if no k-core."""
@@ -115,8 +113,7 @@ def k_core(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sym.count()
-    return _peel_loop(edges, sym, F.count(F.lit(1)), k, "k_core",
-                      max_rounds, broadcast_max_vertices, metrics)
+    return _peel_loop(edges, sym, F.count(F.lit(1)), k, "k_core", max_rounds)
 
 
 def s_core(
@@ -124,8 +121,6 @@ def s_core(
     s: int,
     weight_col: str | None = None,
     max_rounds: int = 100,
-    broadcast_max_vertices: int = 8_000_000,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Weighted k-core ("s-core", Eidsaa & Almaas, PRL 2013): the
     maximal subgraph in which every vertex's STRENGTH — the sum of its
@@ -174,15 +169,12 @@ def s_core(
                 f"s_core: weight_col {weight_col!r} contains negative "
                 f"values (min {mn}); the peel is only correct for "
                 "non-negative weights")
-    return _peel_loop(edges, sym, F.sum("w"), s, "s_core",
-                      max_rounds, broadcast_max_vertices, metrics)
+    return _peel_loop(edges, sym, F.sum("w"), s, "s_core", max_rounds)
 
 
 def core_numbers(
     edges: DataFrame,
     max_iters: int = 100,
-    broadcast_max_vertices: int = 8_000_000,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Full coreness decomposition (id, core) via distributed h-index
     iteration (Lü et al., "The H-index of a network node", 2016):
@@ -214,7 +206,7 @@ def core_numbers(
     )
     prev_s = int(core.agg(F.sum("core")).collect()[0][0] or 0)
 
-    can_broadcast = core.count() <= broadcast_max_vertices
+    can_broadcast = broadcastable(core.count())
     converged = prev_s == 0
     for t in range(max_iters):
         cv = core.select(F.col("id").alias("src"), F.col("core").alias("_c"))
@@ -233,8 +225,6 @@ def core_numbers(
         new_core = superstep_checkpoint(new_core, t)
         s = int(obs.get["s"] or 0)
         core = new_core
-        if metrics is not None:
-            metrics.append({"iter": t, "sum_core": s})
         if s == prev_s:
             converged = True
             break

@@ -32,8 +32,9 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.runtime.plans import (
-    SMALL_VECTOR_MAX,
+    BROADCAST_MAX_VERTICES,
     layout_vector,
+    small_vector,
     superstep_checkpoint,
 )
 from combblas_spark.graph import symmetrize_partitioned, vertices
@@ -43,7 +44,7 @@ def label_propagation(
     edges: DataFrame,
     n_rounds: int = 5,
     metrics: list | None = None,
-    broadcast_max_vertices: int = 8_000_000,
+    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
     runner=None,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
@@ -119,7 +120,7 @@ def label_propagation(
             .agg(F.min_by("label", F.struct((-F.col("_c")).alias("_nc"),
                                             F.col("label"))).alias("_new"))
         )
-        stitched = F.broadcast(best) if n <= SMALL_VECTOR_MAX else best
+        stitched = F.broadcast(best) if small_vector(n) else best
         if seeded:
             # clamp seeds; unlabeled vertices adopt the vote if any
             new_labels = (

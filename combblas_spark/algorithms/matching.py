@@ -34,7 +34,6 @@ from combblas_spark.runtime.plans import superstep_checkpoint
 def bipartite_maximal_matching(
     edges: DataFrame,
     max_iter: int = 64,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Returns matched (src, dst) pairs: a valid MAXIMAL matching of the
     bipartite graph whose row side is ``src`` and column side ``dst``
@@ -62,8 +61,6 @@ def bipartite_maximal_matching(
             .localCheckpoint(eager=True)
         )
         n_new = grants.count()
-        if metrics is not None:
-            metrics.append({"iter": it, "granted": n_new})
         if n_new == 0:
             break
         matched = matched.unionByName(grants).localCheckpoint(eager=True)
@@ -96,7 +93,6 @@ def bipartite_maximum_matching(
     edges: DataFrame,
     max_phases: int | None = None,
     max_depth: int = 32,
-    metrics: list | None = None,
 ) -> DataFrame:
     """MAXIMUM-cardinality bipartite matching — augmenting-path phases
     over the greedy maximal initializer.
@@ -205,9 +201,6 @@ def bipartite_maximum_matching(
             .select("root", F.col("c.dst").alias("dst"), F.col("c.lvl").alias("lvl"))
         )
         chosen = _ck(chosen)
-        n_aug = chosen.count()
-        if metrics is not None:
-            metrics.append({"phase": phase, "augmented": n_aug})
 
         # walk back root-ward, flipping as we go
         cur = chosen
@@ -361,7 +354,6 @@ def auction_matching(
     edges: DataFrame,
     eps: float = 1e-3,
     max_rounds: int = 64,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Bertsekas auction for the maximum-weight ASSIGNMENT problem:
     every bidder is matched when structurally feasible, even where an
@@ -452,8 +444,6 @@ def auction_matching(
         ).select("dst", F.col("b.src").alias("src"), F.col("b.bid").alias("bid"))
         wins = superstep_checkpoint(wins, 2 * rnd + 1)
         n_bids = wins.count()
-        if metrics is not None:
-            metrics.append({"round": rnd, "winning_bids": n_bids})
         if n_bids == 0:
             break
         price = superstep_checkpoint(

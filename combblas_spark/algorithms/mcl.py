@@ -80,7 +80,6 @@ def mcl(
     add_self_loops: bool = True,
     recover_num: int = 3,
     recover_pct: float = 0.9,
-    metrics: list | None = None,
     summary_iter: int | None = None,
     summary_out: list | None = None,
     iter_hook=None,
@@ -202,8 +201,6 @@ def mcl(
         if summary_out is not None and summary_iter is not None and it == summary_iter:
             summary_out.clear()
             summary_out.append(A)
-        if metrics is not None:
-            metrics.append({"iter": it, "chaos": chaos})
         if chaos < chaos_eps:
             break
 

@@ -31,7 +31,6 @@ def maximal_independent_set(
     edges: DataFrame,
     seed: int = 42,
     max_iter: int = 60,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Returns (id) — a maximal independent set of the undirected view.
 
@@ -83,8 +82,6 @@ def maximal_independent_set(
             )
             mis = mis.unionByName(winners).localCheckpoint(eager=True)
             cand = superstep_checkpoint(cand.join(dead, "id", "left_anti"), it)
-            if metrics is not None:
-                metrics.append({"iter": it, "candidates": n_cand})
         else:
             if not cand.isEmpty():
                 # returning here would violate the MAXIMALITY contract

@@ -38,7 +38,6 @@ def boruvka_msf(
     edges: DataFrame,
     max_rounds: int = 30,
     max_jumps: int = 20,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Minimum spanning forest of the undirected weighted view of
     ``edges`` (src, dst, val). Returns the forest edge list
@@ -151,8 +150,6 @@ def boruvka_msf(
                 .select("id", F.coalesce("p", "c").alias("c")),
                 r,
             )
-            if metrics is not None:
-                metrics.append({"round": r, "picked": sel.count()})
         else:
             # the loop never saw an empty cross-edge set — recheck against
             # the FINAL labels before declaring failure

@@ -43,8 +43,10 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.runtime.plans import (
-    SMALL_VECTOR_MAX,
+    BROADCAST_MAX_VERTICES,
+    broadcastable,
     layout_vector,
+    small_vector,
     superstep_checkpoint,
 )
 
@@ -108,7 +110,7 @@ def pagerank(
     max_iter: int = 100,
     weighted: bool = False,
     metrics: list | None = None,
-    broadcast_max_vertices: int = 8_000_000,
+    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
     runner=None,
     initial_ranks: DataFrame | None = None,
     edge_layout: str | None = None,
@@ -250,7 +252,7 @@ def pagerank(
                 .groupBy("id")
                 .agg(F.sum("_c").alias("_in"))
             )
-            stitched = F.broadcast(inflow) if n <= SMALL_VECTOR_MAX else inflow
+            stitched = F.broadcast(inflow) if small_vector(n) else inflow
             new_state = (
                 state.join(stitched, "id", "left")
                 .crossJoin(F.broadcast(dmass))
@@ -317,7 +319,6 @@ def pagerank_batch(
     alpha: float = 0.85,
     n_iter: int = 10,
     weighted: bool = False,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """Batched single-seed personalized PageRank: B seed vertices share
     ONE power-iteration loop by carrying the rank vector as an
@@ -360,7 +361,7 @@ def pagerank_batch(
         raise ValueError(
             f"pagerank_batch: {B - present} seed id(s) not in the graph's "
             "vertex set (their chains would be identically zero)")
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n)
     enorm = _normalized_edges(edges, weighted, can_broadcast)
 
     def _t(b):
@@ -386,7 +387,7 @@ def pagerank_batch(
             .groupBy("id")
             .agg(F.array(*[F.sum(F.col("_c")[b]) for b in range(B)]).alias("_in"))
         )
-        stitched = (F.broadcast(inflow) if can_broadcast and n <= SMALL_VECTOR_MAX
+        stitched = (F.broadcast(inflow) if can_broadcast and small_vector(n)
                     else inflow)
         new_ranks = F.array(*[
             F.lit(1.0 - alpha) * _t(b)

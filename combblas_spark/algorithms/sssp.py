@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import broadcastable, superstep_checkpoint
 
 
 def sssp(
@@ -25,9 +25,7 @@ def sssp(
     weighted: bool = True,
     max_iter: int = 60,
     directed: bool = True,
-    metrics: list | None = None,
     runner=None,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """Returns (id, dist) for vertices reachable from ``root``.
 
@@ -36,10 +34,11 @@ def sssp(
     directed=False (symmetrized first).
 
     The frontier is broadcast into the relax join only while it holds at
-    most ``broadcast_max_vertices`` rows (same gate as pagerank /
-    components); above that — near-diameter steps on dense graphs, or a
-    resume where the frontier is the whole distance vector — it falls
-    back to a shuffle join against the dst-partitioned cached edges.
+    most ``BROADCAST_MAX_VERTICES`` rows (runtime/plans.py, the same
+    gate as pagerank / components); above that — near-diameter steps
+    on dense graphs, or a resume where the frontier is the whole
+    distance vector — it falls back to a shuffle join against the
+    dst-partitioned cached edges.
     """
     spark = edges.sparkSession
     w = F.col("val") if weighted and "val" in edges.columns else F.lit(1.0)
@@ -68,8 +67,7 @@ def sssp(
     for it in range(start_it, max_iter):
         # SpMSpV over MinPlus: relax out-edges of the frontier only.
         # Broadcast only while the frontier is provably small.
-        f_in = (F.broadcast(frontier) if n_front <= broadcast_max_vertices
-                else frontier)
+        f_in = F.broadcast(frontier) if broadcastable(n_front) else frontier
         relaxed = (
             e.join(f_in.withColumnRenamed("id", "_fid"),
                    e["src"] == F.col("_fid"))
@@ -94,8 +92,6 @@ def sssp(
             .localCheckpoint(eager=True)
         )
         n_front = frontier.count()  # convergence check + next broadcast gate
-        if metrics is not None:
-            metrics.append({"iter": it, "frontier": n_front})
         dist = merged
         if n_front == 0:
             break
@@ -129,7 +125,6 @@ def delta_stepping_sssp(
     max_buckets: int = 100_000,
     max_inner: int = 200,
     metrics: list | None = None,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """Delta-stepping SSSP (Meyer & Sanders 2003) — returns the same
     (id, dist) fixpoint as sssp(), reached in far fewer supersteps on
@@ -175,8 +170,7 @@ def delta_stepping_sssp(
                n_front: int) -> DataFrame:
         """One MinPlus relaxation + merge; returns the new dist vector
         (same union-agg shape as sssp)."""
-        f_in = (F.broadcast(frontier) if n_front <= broadcast_max_vertices
-                else frontier)
+        f_in = F.broadcast(frontier) if broadcastable(n_front) else frontier
         relaxed = (
             edge_side.join(f_in.withColumnRenamed("id", "_fid"),
                            edge_side["src"] == F.col("_fid"))

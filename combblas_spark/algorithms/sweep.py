@@ -53,6 +53,11 @@ def sweep_cut(
     round(score,12)/deg descending (id tie-break). Rows cover
     0 <= pos <= n-2 (the full-set prefix has no complement); vertices
     missing from ``scores`` sweep last with score 0.
+
+    Precondition: |score| < ~9.2e6. Scores are rounded at 12 decimals
+    (``pround(.., 12)``), whose Spark/DuckDB agreement bound is
+    |x| < 2^63 / 10^12; PageRank-style probability scores sit far
+    inside it.
     """
     from combblas_spark.operators.indexing import prefix_sum, zip_with_index
 

@@ -80,7 +80,6 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 64) -> DataFrame:
 def trussness(
     edges: DataFrame,
     max_iters: int = 100,
-    metrics: list | None = None,
 ) -> DataFrame:
     """Full truss decomposition: (u, v, trussness) with u < v over the
     canonical undirected simple edge list, where trussness(e) = the
@@ -169,8 +168,6 @@ def trussness(
         new_t = superstep_checkpoint(new_t, it)
         s = int(obs.get["s"] or 0)
         t = new_t
-        if metrics is not None:
-            metrics.append({"iter": it, "sum_t": s})
         if s == prev_s:
             converged = True
         prev_s = s

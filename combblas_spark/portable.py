@@ -28,11 +28,13 @@ def pround(c: Column | str, nd: int = 6) -> Column:
     decimals: ``floor(x * 10^nd + 0.5) / 10^nd``.  Exact for
     ``|x| * 10^nd < 2^53`` (every score/fraction/rank column here).
     Engine-agreement bound: Spark's ``floor(double)`` narrows to LONG,
-    so past ``|x| * 10^nd >= 2^63`` (|x| ~ 9.2e12 at nd=6) Spark
-    saturates where DuckDB's double ``floor`` does not — between 2^53
-    and 2^63 both engines agree (an integral double ≥ 2^53 round-trips
-    the long conversion exactly), above 2^63 they diverge.  No output
-    column here approaches that (fractions/scores/ranks ≤ O(1e9))."""
+    so past ``|x| * 10^nd >= 2^63`` Spark saturates where DuckDB's
+    double ``floor`` does not — between 2^53 and 2^63 both engines
+    agree (an integral double ≥ 2^53 round-trips the long conversion
+    exactly), above 2^63 they diverge.  The bound shrinks with ``nd``:
+    |x| < 2^63 / 10^nd, i.e. ~9.2e12 at nd=6 but only ~9.2e6 at nd=12,
+    so a caller rounding at high ``nd`` must bound its inputs (see
+    ``sweep_cut``)."""
     s = F.lit(float(10 ** nd))
     c = F.col(c) if isinstance(c, str) else c
     return F.floor(c.cast("double") * s + F.lit(0.5)) / s

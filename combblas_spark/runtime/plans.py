@@ -101,8 +101,7 @@ def reset_plan_stats(df: DataFrame) -> DataFrame:
         return df
 
 
-def superstep_checkpoint(df: DataFrame, iteration: int,
-                         stats_reset_bits: int = STATS_RESET_BITS) -> DataFrame:
+def superstep_checkpoint(df: DataFrame, iteration: int) -> DataFrame:
     """localCheckpoint (eager) + stats reset ONLY when the inherited
     estimate has actually blown up — the standard per-superstep
     materialization for every iterative loop here."""
@@ -113,7 +112,7 @@ def superstep_checkpoint(df: DataFrame, iteration: int,
         # blowup stays bounded even blind (warned once above).
         if (iteration + 1) % 4 == 0:
             out = reset_plan_stats(out)
-    elif bits > stats_reset_bits:
+    elif bits > STATS_RESET_BITS:
         out = reset_plan_stats(out)
     return out
 
@@ -128,6 +127,30 @@ def superstep_checkpoint(df: DataFrame, iteration: int,
 # while the vector is this small.
 SMALL_VECTOR_MAX = 100_000
 
+# Broadcast-vs-shuffle regime of a superstep: a vertex vector of at most
+# this many rows is broadcast into the edge-side join (the AllGather
+# arm of CombBLAS's in-kernel vector-exchange choice, FastSV.h:252-333);
+# a larger one is joined by shuffle (the Alltoall arm). As in the
+# reference this is one engine-wide value; only pagerank,
+# connected_components and label_propagation take a per-call override,
+# because scripts/run_pagerank.py and the benchmark's crawl-ingest-rank
+# workload force their shuffle regime.
+BROADCAST_MAX_VERTICES = 8_000_000
+
+
+def broadcastable(n: int) -> bool:
+    """True when an ``n``-row vertex vector takes the broadcast regime.
+    Reads ``BROADCAST_MAX_VERTICES`` at call time, so a test can
+    monkeypatch it to force the shuffle regime."""
+    return n <= BROADCAST_MAX_VERTICES
+
+
+def small_vector(n: int) -> bool:
+    """True when an ``n``-row vertex vector is small enough to sit in
+    one partition and be broadcast back onto the state. Reads
+    ``SMALL_VECTOR_MAX`` at call time, so a test can monkeypatch it."""
+    return n <= SMALL_VECTOR_MAX
+
 
 def layout_vector(df: DataFrame, n: int, shuffle_n: int | None = None) -> DataFrame:
     """Lay out a vertex-sized frame of ``n`` rows for an iterative loop:
@@ -135,6 +158,6 @@ def layout_vector(df: DataFrame, n: int, shuffle_n: int | None = None) -> DataFr
     ``repartition(shuffle_n, "id")``. ``shuffle_n=None`` leaves a large
     frame as it is (e.g. an aggregation output that is already
     hash-partitioned by id)."""
-    if n <= SMALL_VECTOR_MAX:
+    if small_vector(n):
         return df.coalesce(1)
     return df if shuffle_n is None else df.repartition(shuffle_n, "id")

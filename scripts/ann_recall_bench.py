@@ -205,7 +205,7 @@ def main() -> None:
         if tok == "none":
             return None
         if tok == "auto":
-            return max(128, int(8 * args.n / 2 ** n_planes))
+            return max(128, (8 * args.n) >> n_planes)
         return int(tok)
 
     sweep = [(int(p.split(":")[0]), parse_cap(p.split(":")[1]))

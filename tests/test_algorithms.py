@@ -12,8 +12,25 @@ from combblas_spark.algorithms import (
 )
 from combblas_spark.algorithms.triangles import triangles_per_vertex
 from combblas_spark.graph import build_graph
+from combblas_spark.runtime import plans
 from combblas_spark.sources.rmat import rmat_edges
 from tests.conftest import df_edges
+
+
+def regimes(monkeypatch):
+    """Yields "broadcast" then "shuffle", forcing each superstep regime
+    in turn through ``plans.BROADCAST_MAX_VERTICES`` (0 sends every
+    vertex vector down the shuffle join), so one oracle test covers
+    both arms of an algorithm's regime gate. The shuffle case also sets
+    ``plans.SMALL_VECTOR_MAX`` to 0, as on any graph past the broadcast
+    threshold: vectors are hash-partitioned by id at shuffle width and
+    the inflow is stitched back by a co-partitioned join."""
+    for regime, bmax, small in (
+            ("broadcast", plans.BROADCAST_MAX_VERTICES, plans.SMALL_VECTOR_MAX),
+            ("shuffle", 0, 0)):
+        monkeypatch.setattr(plans, "BROADCAST_MAX_VERTICES", bmax)
+        monkeypatch.setattr(plans, "SMALL_VECTOR_MAX", small)
+        yield regime
 
 
 def numpy_pagerank(edges, n, alpha=0.85, iters=200, tol=1e-12):
@@ -383,9 +400,10 @@ def test_trussness_rmat(spark):
     assert max(got.values()) >= 4  # fixture has real truss structure
 
 
-def test_eigencentrality_numpy(spark):
+def test_eigencentrality_numpy(spark, monkeypatch):
     """Dyadic power iteration vs the numpy unroll — bit-equal at 6dp
-    on a directed fixture with cycles, danglings and an isolated pair."""
+    on a directed fixture with cycles, danglings and an isolated pair,
+    in both superstep regimes."""
     from combblas_spark.algorithms.hits import eigencentrality
 
     edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (4, 0), (5, 6)]
@@ -397,9 +415,10 @@ def test_eigencentrality_numpy(spark):
     for _ in range(iters):
         x = (A.T @ x) / 16.0
     want = {i: round(v / x.sum(), 6) for i, v in enumerate(x)}
-    got = {r["id"]: r["eigen"]
-           for r in eigencentrality(df_edges(spark, edges), n_iter=iters).collect()}
-    assert got == pytest.approx(want, abs=1e-9)
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: r["eigen"] for r in eigencentrality(
+            df_edges(spark, edges), n_iter=iters).collect()}
+        assert got == pytest.approx(want, abs=1e-9), regime
 
 
 def test_eigencentrality_walkfree_graph(spark):
@@ -486,7 +505,7 @@ def test_sssp_known_graph(spark):
     assert d == {0: 0.0, 1: 1.0, 2: 3.0, 3: 4.0}
 
 
-def test_sssp_rmat_vs_numpy_bellman_ford(spark):
+def test_sssp_rmat_vs_numpy_bellman_ford(spark, monkeypatch):
     from combblas_spark.algorithms import sssp
 
     g = build_graph(rmat_edges(spark, 8, 8)).persist()
@@ -505,11 +524,12 @@ def test_sssp_rmat_vs_numpy_bellman_ford(spark):
             break
         dist = nd
 
-    got = {r["id"]: r["dist"] for r in sssp(g, root=0).collect()}
     expected = {i: dist[i] for i in range(n) if dist[i] < INF}
-    assert got.keys() == expected.keys()
-    for k in expected:
-        assert got[k] == pytest.approx(expected[k], abs=1e-9)
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: r["dist"] for r in sssp(g, root=0).collect()}
+        assert got.keys() == expected.keys(), regime
+        for k in expected:
+            assert got[k] == pytest.approx(expected[k], abs=1e-9), regime
     g.unpersist()
 
 
@@ -1096,14 +1116,12 @@ def _rand_directed_edges(seed, n=14, m=45):
     return sorted(es)
 
 
-def test_hits_vs_numpy(spark):
+def test_hits_vs_numpy(spark, monkeypatch):
     """HITS hubs/authorities match the dense numpy power iteration to
-    1e-9 after 5 normalized iterations."""
+    1e-9 after 5 normalized iterations, in both superstep regimes."""
     from combblas_spark.algorithms.hits import hits
 
     E = _rand_directed_edges(7, n=12, m=40)
-    out = {r["id"]: (r["hub"], r["auth"])
-           for r in hits(df_edges(spark, E), n_iter=5).collect()}
     nodes = sorted({x for e in E for x in e})
     idx = {v: i for i, v in enumerate(nodes)}
     A = np.zeros((len(nodes), len(nodes)))
@@ -1115,9 +1133,12 @@ def test_hits_vs_numpy(spark):
         a = a / np.linalg.norm(a)
         h = A @ a
         h = h / np.linalg.norm(h)
-    for v in nodes:
-        assert abs(out[v][0] - h[idx[v]]) < 1e-9
-        assert abs(out[v][1] - a[idx[v]]) < 1e-9
+    for regime in regimes(monkeypatch):
+        out = {r["id"]: (r["hub"], r["auth"])
+               for r in hits(df_edges(spark, E), n_iter=5).collect()}
+        for v in nodes:
+            assert abs(out[v][0] - h[idx[v]]) < 1e-9, regime
+            assert abs(out[v][1] - a[idx[v]]) < 1e-9, regime
     # n_iter=0 has no authority vector — must refuse, not crash on None
     from combblas_spark.algorithms.hits import salsa
     with pytest.raises(ValueError, match="n_iter must be >= 1"):
@@ -1126,17 +1147,15 @@ def test_hits_vs_numpy(spark):
         salsa(df_edges(spark, E), n_iter=0)
 
 
-def test_katz_vs_numpy(spark):
+def test_katz_vs_numpy(spark, monkeypatch):
     """Katz centrality matches the dense numpy recurrence
     x_t = 1 + alpha A^T x_{t-1} exactly (alpha = 1/16 is binary-exact,
-    so the comparison is equality, not approx); a sink-only vertex
-    scores 1 + alpha * inflow, a source-only vertex stays at the
-    no-in-edges fixpoint value."""
+    so the comparison is equality, not approx) in both superstep
+    regimes; a sink-only vertex scores 1 + alpha * inflow, a
+    source-only vertex stays at the no-in-edges fixpoint value."""
     from combblas_spark.algorithms.hits import katz
 
     E = _rand_directed_edges(11, n=12, m=40) + [(50, 0), (1, 51)]
-    out = {r["id"]: r["katz"]
-           for r in katz(df_edges(spark, E), alpha=0.0625, n_iter=5).collect()}
     nodes = sorted({x for e in E for x in e})
     idx = {v: i for i, v in enumerate(nodes)}
     A = np.zeros((len(nodes), len(nodes)))
@@ -1145,18 +1164,21 @@ def test_katz_vs_numpy(spark):
     x = np.ones(len(nodes))
     for _ in range(5):
         x = 1.0 + 0.0625 * (A.T @ x)
-    for v in nodes:
-        assert out[v] == x[idx[v]], (v, out[v], x[idx[v]])
-    assert out[50] == 1.0  # source-only: no in-links ever
-    assert out[51] > 1.0   # sink reached from vertex 1
+    for regime in regimes(monkeypatch):
+        out = {r["id"]: r["katz"] for r in katz(
+            df_edges(spark, E), alpha=0.0625, n_iter=5).collect()}
+        for v in nodes:
+            assert out[v] == x[idx[v]], (regime, v, out[v], x[idx[v]])
+        assert out[50] == 1.0  # source-only: no in-links ever
+        assert out[51] > 1.0   # sink reached from vertex 1
 
 
-def test_salsa_vs_numpy(spark):
+def test_salsa_vs_numpy(spark, monkeypatch):
     """SALSA: stochastic (degree-normalized) HITS — 5 un-normalized
     Lempel-Moran iterations (a = Wr^T h, h = Wc a: each contribution
     weighted by the CONTRIBUTOR's degree) from h0=1 match the dense
     numpy recurrence; vertices with no in-edges have auth 0, no
-    out-edges hub 0. Both layouts."""
+    out-edges hub 0. Both superstep regimes."""
     from combblas_spark.algorithms.hits import salsa
 
     E = _rand_directed_edges(11, n=12, m=40)
@@ -1178,11 +1200,12 @@ def test_salsa_vs_numpy(spark):
     # which carries no ranking signal — the correct chain must rank.
     live_a = a[ind > 0]
     assert live_a.std() > 1e-6, "authority scores degenerate to uniform"
-    out = {r["id"]: (r["hub"], r["auth"])
-           for r in salsa(df_edges(spark, E), n_iter=5).collect()}
-    for v in nodes:
-        assert abs(out[v][0] - h[idx[v]]) < 1e-9
-        assert abs(out[v][1] - a[idx[v]]) < 1e-9
+    for regime in regimes(monkeypatch):
+        out = {r["id"]: (r["hub"], r["auth"])
+               for r in salsa(df_edges(spark, E), n_iter=5).collect()}
+        for v in nodes:
+            assert abs(out[v][0] - h[idx[v]]) < 1e-9, regime
+            assert abs(out[v][1] - a[idx[v]]) < 1e-9, regime
 
 
 def test_labelprop_seeded(spark):
@@ -1600,21 +1623,22 @@ def _undirected_adj(E):
     return adj
 
 
-def test_k_core_vs_peeling(spark):
+def test_k_core_vs_peeling(spark, monkeypatch):
     from combblas_spark.algorithms.kcore import k_core
 
-    for seed in (3, 11):
-        E = _rand_directed_edges(seed)
-        adj = _undirected_adj(E)
-        e = df_edges(spark, E)
-        for k in (2, 3, 4, 5, 6):
-            got = {r["id"] for r in k_core(e, k).collect()}
-            assert got == _peel(adj, k), (seed, k)
+    for regime in regimes(monkeypatch):
+        for seed in (3, 11):
+            E = _rand_directed_edges(seed)
+            adj = _undirected_adj(E)
+            e = df_edges(spark, E)
+            for k in (2, 3, 4, 5, 6):
+                got = {r["id"] for r in k_core(e, k).collect()}
+                assert got == _peel(adj, k), (regime, seed, k)
 
 
-def test_core_numbers_vs_exact(spark):
+def test_core_numbers_vs_exact(spark, monkeypatch):
     """h-index iteration converges to the exact coreness (isolated
-    vertices are absent = core 0)."""
+    vertices are absent = core 0) in both superstep regimes."""
     from combblas_spark.algorithms.kcore import core_numbers
 
     E = _rand_directed_edges(19, n=16, m=50)
@@ -1629,17 +1653,19 @@ def test_core_numbers_vs_exact(spark):
                 core[v] = k
             alive -= drop
         k += 1
-    got = {r["id"]: r["core"] for r in core_numbers(df_edges(spark, E)).collect()}
-    assert {v: got.get(v, 0) for v in adj} == core
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: r["core"]
+               for r in core_numbers(df_edges(spark, E)).collect()}
+        assert {v: got.get(v, 0) for v in adj} == core, regime
 
 
-def test_anf_matches_exact_neighborhood_function(spark):
+def test_anf_matches_exact_neighborhood_function(spark, monkeypatch):
     """With k=64 sketches the FM estimate tracks the exact N(h) within
-    35% on an RMAT graph, and sum_lzb is monotone non-decreasing."""
+    35% on an RMAT graph, and sum_lzb is monotone non-decreasing — in
+    both superstep regimes."""
     from combblas_spark.algorithms.anf import neighborhood_function
 
     g = build_graph(rmat_edges(spark, 7, 8)).persist()
-    rows = neighborhood_function(g, hops=3, k=64).orderBy("h").collect()
     # exact N(h) via BFS from every vertex (undirected)
     E = [(r["src"], r["dst"]) for r in g.select("src", "dst").collect()]
     adj = _undirected_adj(E)
@@ -1661,15 +1687,17 @@ def test_anf_matches_exact_neighborhood_function(spark):
                         dq.append((w, d + 1))
             cnt += len(seen)
         exact.append(cnt)
-    for r, ex in zip(rows, exact):
-        if r["h"] == 0:
-            # FM is biased at cardinality ~1 (E[est] ~ 2^0.5/phi per
-            # vertex): only sanity-check the seed row's magnitude
-            assert ex / 2 < r["est"] < ex * 2
-        else:
-            assert abs(r["est"] - ex) / ex < 0.35, (r["h"], r["est"], ex)
-    lzbs = [r["sum_lzb"] for r in rows]
-    assert lzbs == sorted(lzbs)
+    for regime in regimes(monkeypatch):
+        rows = neighborhood_function(g, hops=3, k=64).orderBy("h").collect()
+        for r, ex in zip(rows, exact):
+            if r["h"] == 0:
+                # FM is biased at cardinality ~1 (E[est] ~ 2^0.5/phi per
+                # vertex): only sanity-check the seed row's magnitude
+                assert ex / 2 < r["est"] < ex * 2, regime
+            else:
+                assert abs(r["est"] - ex) / ex < 0.35, (regime, r["h"], r["est"], ex)
+        lzbs = [r["sum_lzb"] for r in rows]
+        assert lzbs == sorted(lzbs), regime
     g.unpersist()
 
 
@@ -1685,17 +1713,19 @@ def test_anf_partition_invariant(spark):
            [(r["h"], r["sum_lzb"], r["est"]) for r in b]
 
 
-def test_effective_diameter_path_graph(spark):
+def test_effective_diameter_path_graph(spark, monkeypatch):
     """On a path P_n the 90% effective diameter sits well below the
-    true diameter and hops_run stops at sketch saturation."""
+    true diameter and hops_run stops at sketch saturation, in both
+    superstep regimes."""
     from combblas_spark.algorithms.anf import effective_diameter
 
     e = df_edges(spark, [(i, i + 1) for i in range(9)])  # P10, diameter 9
-    res = effective_diameter(e, q=0.9, k=32)
-    assert 3.0 <= res["effective_diameter"] <= 9.0
-    assert res["hops_run"] <= 11
-    ests = [s["est"] for s in res["nf"]]
-    assert all(b >= a * 0.999 for a, b in zip(ests, ests[1:]))
+    for regime in regimes(monkeypatch):
+        res = effective_diameter(e, q=0.9, k=32)
+        assert 3.0 <= res["effective_diameter"] <= 9.0, regime
+        assert res["hops_run"] <= 11, regime
+        ests = [s["est"] for s in res["nf"]]
+        assert all(b >= a * 0.999 for a, b in zip(ests, ests[1:])), regime
 
 
 def test_effective_diameter_stops_at_true_fixpoint(spark):
@@ -2110,28 +2140,28 @@ def test_diameter_double_sweep(spark):
     assert empty.count() == 0
 
 
-def test_s_core(spark):
+def test_s_core(spark, monkeypatch):
     """s-core with unit weights == k_core on reciprocal-free input
     (multigraph semantics DIVERGE on mutual links — documented);
-    integer weights shift the peel; negative weights and cap
-    exhaustion raise."""
+    integer weights shift the peel in both superstep regimes; negative
+    weights and cap exhaustion raise."""
     from combblas_spark.algorithms.kcore import k_core, s_core
 
     # triangle 0-1-2 plus pendant 3
     E = [(0, 1), (1, 2), (0, 2), (2, 3)]
-    got = {r["id"] for r in s_core(df_edges(spark, E), 2).collect()}
-    want = {r["id"] for r in k_core(df_edges(spark, E), 2).collect()}
-    assert got == want == {0, 1, 2}
-
     # weighted: edge (2,3) weight 5 keeps the pendant in at s=5
     # (strength(3)=5), while the triangle edges weigh 1 each
     Ew = [(0, 1, 1), (1, 2, 1), (0, 2, 1), (2, 3, 5)]
     dfw = spark.createDataFrame(Ew, "src long, dst long, w long")
-    assert {r["id"] for r in s_core(dfw, 5, weight_col="w").collect()} \
-        == {2, 3}
-    assert {r["id"] for r in s_core(dfw, 2, weight_col="w").collect()} \
-        == {0, 1, 2, 3}
-    assert s_core(dfw, 100, weight_col="w").count() == 0
+    for regime in regimes(monkeypatch):
+        got = {r["id"] for r in s_core(df_edges(spark, E), 2).collect()}
+        want = {r["id"] for r in k_core(df_edges(spark, E), 2).collect()}
+        assert got == want == {0, 1, 2}, regime
+        assert {r["id"] for r in s_core(dfw, 5, weight_col="w").collect()} \
+            == {2, 3}, regime
+        assert {r["id"] for r in s_core(dfw, 2, weight_col="w").collect()} \
+            == {0, 1, 2, 3}, regime
+        assert s_core(dfw, 100, weight_col="w").count() == 0, regime
 
     # multigraph multiplicity: parallel rows count without weight_col
     Em = [(0, 1), (0, 1), (1, 2)]
@@ -2759,7 +2789,7 @@ def test_adamic_adar_known(spark):
 
 # ----------------------------------------------------------------- delta-stepping
 
-def test_delta_stepping_equals_bellman_ford(spark):
+def test_delta_stepping_equals_bellman_ford(spark, monkeypatch):
     import pyspark.sql.functions as F
     import pytest as _pytest
 
@@ -2771,10 +2801,11 @@ def test_delta_stepping_equals_bellman_ford(spark):
         "val", ((F.col("src") * 11 + F.col("dst") * 3) % 9 + 1).cast("double")),
         drop_loops=True, sum_duplicates=False)
     want = {(r["id"], round(r["dist"], 9)) for r in sssp(g, root=0).collect()}
-    for delta in (1.0, 4.0, 100.0):
-        got = {(r["id"], round(r["dist"], 9))
-               for r in delta_stepping_sssp(g, root=0, delta=delta).collect()}
-        assert got == want, f"delta={delta}"
+    for regime in regimes(monkeypatch):
+        for delta in (1.0, 4.0, 100.0):
+            got = {(r["id"], round(r["dist"], 9))
+                   for r in delta_stepping_sssp(g, root=0, delta=delta).collect()}
+            assert got == want, f"{regime} delta={delta}"
 
     # undirected variant agrees too
     wu = {(r["id"], round(r["dist"], 9))
@@ -2838,7 +2869,7 @@ def test_delta_stepping_max_buckets_boundary_no_false_raise(spark):
     assert got == {i: float(i) for i in range(6)}
 
 
-def test_pagerank_batch_matches_single_seed(spark):
+def test_pagerank_batch_matches_single_seed(spark, monkeypatch):
     """pagerank_batch: each array component equals the single-seed
     pagerank(teleport=...) run to the same fixed iteration count
     (bit-level in the broadcast regime, both sides are the same double
@@ -2850,10 +2881,10 @@ def test_pagerank_batch_matches_single_seed(spark):
     edges = [(0, 1), (1, 2), (2, 0), (2, 3), (1, 3)]
     e = df_edges(spark, edges)
     seeds = [0, 2, 3]
-    for bmax in (0, 8_000_000):  # shuffle + broadcast regimes
+    for regime in regimes(monkeypatch):
+        bmax = plans.BROADCAST_MAX_VERTICES
         batch = {(r["seed"], r["id"]): r["rank"]
-                 for r in pagerank_batch(e, seeds, n_iter=8,
-                                         broadcast_max_vertices=bmax).collect()}
+                 for r in pagerank_batch(e, seeds, n_iter=8).collect()}
         assert len(batch) == 4 * len(seeds)
         for s in seeds:
             tele = spark.createDataFrame([(s, 1.0)], ["id", "t"])
@@ -2861,7 +2892,7 @@ def test_pagerank_batch_matches_single_seed(spark):
                       for r in pagerank(e, n_iter=8, tol=None, teleport=tele,
                                         broadcast_max_vertices=bmax).collect()}
             for v, rk in single.items():
-                if bmax:
+                if regime == "broadcast":
                     assert batch[(s, v)] == rk
                 else:
                     assert abs(batch[(s, v)] - rk) < 1e-12
@@ -2936,10 +2967,11 @@ def test_greedy_modularity(spark):
     assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10}, got
 
 
-def test_hyperball_harmonic(spark):
+def test_hyperball_harmonic(spark, monkeypatch):
     """hyperball_harmonic matches an independent pure-python replica of
     the FM sketch pipeline (md5 seeds, ball ORs, lzb estimate, 1/h
-    fold) on a small graph with a loop-only vertex (score 0)."""
+    fold) on a small graph with a loop-only vertex (score 0), in both
+    superstep regimes."""
     import hashlib
     import math
 
@@ -2984,11 +3016,12 @@ def test_hyperball_harmonic(spark):
             acc[v] = acc[v] + (e - prev[v]) / float(h)
             prev[v] = e
     want = {v: round(acc[v], 6) for v in verts}
-    got = {r["id"]: r["harmonic_est"]
-           for r in hyperball_harmonic(df, hops=HOPS, k=K, r_bits=RB,
-                                       seed=SEED).collect()}
-    assert got == want, (got, want)
-    assert got[9] == 0.0  # loop-only vertex: ball never grows
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: r["harmonic_est"]
+               for r in hyperball_harmonic(df, hops=HOPS, k=K, r_bits=RB,
+                                           seed=SEED).collect()}
+        assert got == want, (regime, got, want)
+        assert got[9] == 0.0  # loop-only vertex: ball never grows
 
 
 def _py_densest(E, eps=0.5):
@@ -3012,18 +3045,20 @@ def _py_densest(E, eps=0.5):
     return best
 
 
-def test_densest_subgraph_vs_python_peel(spark):
+def test_densest_subgraph_vs_python_peel(spark, monkeypatch):
     from combblas_spark.algorithms.densest import densest_subgraph
 
-    for seed in (3, 11, 19):
-        E = _rand_directed_edges(seed, n=18, m=60)
-        rows = densest_subgraph(df_edges(spark, E)).collect()
-        want_set, want_r, want_n, want_m, want_rho = _py_densest(E)
-        assert {r["id"] for r in rows} == want_set, seed
-        assert all(r["round"] == want_r and r["n"] == want_n
-                   and r["m"] == want_m for r in rows), seed
-        # output column carries the 6dp-rounded density
-        assert all(abs(r["density"] - want_rho) < 1e-6 for r in rows), seed
+    for regime in regimes(monkeypatch):
+        for seed in (3, 11, 19):
+            E = _rand_directed_edges(seed, n=18, m=60)
+            rows = densest_subgraph(df_edges(spark, E)).collect()
+            want_set, want_r, want_n, want_m, want_rho = _py_densest(E)
+            case = (regime, seed)
+            assert {r["id"] for r in rows} == want_set, case
+            assert all(r["round"] == want_r and r["n"] == want_n
+                       and r["m"] == want_m for r in rows), case
+            # output column carries the 6dp-rounded density
+            assert all(abs(r["density"] - want_rho) < 1e-6 for r in rows), case
 
 
 def test_densest_subgraph_finds_planted_clique(spark):
@@ -3078,17 +3113,14 @@ def test_community_graph_contraction(spark):
     assert sum(got.values()) == len(und)  # contraction conserves edges
 
 
-def test_fastrp_matches_dense_numpy_twin_exactly(spark):
+def test_fastrp_matches_dense_numpy_twin_exactly(spark, monkeypatch):
     import hashlib
     import numpy as np
     from combblas_spark.algorithms.embeddings import fastrp
 
     edges = df_edges(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (0, 3)])
     d, K, seed = 4, 3, 17
-    got = {r["id"]: [r[f"e{j}"] for j in range(d)]
-           for r in fastrp(edges, d=d, n_iter=K, seed=seed).collect()}
-
-    ids = sorted(got)
+    ids = [0, 1, 2, 3, 4]
     n = len(ids)
     A = np.zeros((n, n), dtype=np.int64)  # A[v][u]=count of u->v (in-links)
     for s, dst in [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (0, 3)]:
@@ -3101,8 +3133,12 @@ def test_fastrp_matches_dense_numpy_twin_exactly(spark):
     for k in range(1, K + 1):
         x = A @ x
         acc += (1 << (K - k)) * x
-    for i, v in enumerate(ids):
-        assert got[v] == acc[i].tolist(), f"vertex {v}"
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: [r[f"e{j}"] for j in range(d)]
+               for r in fastrp(edges, d=d, n_iter=K, seed=seed).collect()}
+        assert sorted(got) == ids, regime
+        for i, v in enumerate(ids):
+            assert got[v] == acc[i].tolist(), f"{regime} vertex {v}"
 
 
 def test_fastrp_l2_normalized_and_validation(spark):

@@ -7,6 +7,7 @@ that only fails when someone runs the script."""
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -79,5 +80,98 @@ def test_combblas_spark_imports_resolve():
                 for name in names:
                     if name not in defined and _module_path(f"{mod}.{name}") is None:
                         problems.append(f"{rel}:{node.lineno}: {mod} has no {name}")
+    assert checked > 0
+    assert not problems, "\n".join(problems)
+
+
+@functools.cache
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text())
+
+
+def _resolve_def(module: str, name: str, seen=None) -> ast.FunctionDef | None:
+    """The top-level ``def`` that ``module.name`` binds, following
+    ``from combblas_spark... import`` re-exports (``algorithms/__init__``).
+    None for classes, plain assignments and names from other packages."""
+    seen = seen or set()
+    path = _module_path(module)
+    if path is None or (module, name) in seen:
+        return None
+    seen.add((module, name))
+    for node in _parse(path).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and node.name == name:
+            return node
+        if (isinstance(node, ast.ImportFrom) and node.level == 0 and node.module
+                and node.module.startswith(PACKAGE)):
+            for a in node.names:
+                if (a.asname or a.name) == name:
+                    return _resolve_def(node.module, a.name, seen)
+    return None
+
+
+def _package_callables(tree: ast.Module, module: str | None) -> dict[str, tuple[str, str]]:
+    """Local name -> (module, name) for every ``combblas_spark`` function
+    a source can call by a bare name: ``from combblas_spark.x import f``
+    anywhere in the file, plus, inside the package, the module's own
+    top-level defs."""
+    names: dict[str, tuple[str, str]] = {}
+    if module is not None:
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names[node.name] = (module, node.name)
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.ImportFrom) and node.level == 0 and node.module
+                and node.module.startswith(PACKAGE)):
+            for a in node.names:
+                names[a.asname or a.name] = (node.module, a.name)
+    return names
+
+
+def _call_problems(call: ast.Call, fn: ast.FunctionDef) -> list[str]:
+    args = fn.args
+    if args.kwarg is not None or any(k.arg is None for k in call.keywords):
+        return []
+    problems = []
+    accepted = {a.arg for a in args.args + args.kwonlyargs}
+    for k in call.keywords:
+        if k.arg not in accepted:
+            problems.append(f"{fn.name}() has no parameter {k.arg!r}")
+    n_pos = len(args.posonlyargs) + len(args.args)
+    starred = any(isinstance(a, ast.Starred) for a in call.args)
+    if args.vararg is None and not starred and len(call.args) > n_pos:
+        problems.append(f"{fn.name}() takes {n_pos} positional arguments, "
+                        f"called with {len(call.args)}")
+    return problems
+
+
+def test_combblas_spark_call_signatures_match():
+    """Every call to a ``combblas_spark`` function from the scripts, the
+    entry points and the package passes only keywords the function
+    declares and no more positional arguments than it accepts — a
+    keyword naming a deleted parameter fails here, not when someone next
+    runs the script. Only the keyword names and the positional count are
+    checked: a positional call that still fits after a middle parameter
+    was removed binds the wrong parameter and passes. Only calls by a
+    bare imported name are seen (not ``module.f(...)``); calls with
+    ``**`` and functions taking ``**kwargs`` are skipped."""
+    problems = []
+    checked = 0
+    for src in _sources():
+        rel = src.relative_to(ROOT)
+        tree = ast.parse(src.read_text())
+        module = None
+        if rel.parts[0] == PACKAGE:
+            module = ".".join(rel.with_suffix("").parts)
+            module = module.removesuffix(".__init__")
+        names = _package_callables(tree, module)
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)):
+                continue
+            target = names.get(node.func.id)
+            fn = target and _resolve_def(*target)
+            if fn is None:
+                continue
+            checked += 1
+            problems += [f"{rel}:{node.lineno}: {p}" for p in _call_problems(node, fn)]
     assert checked > 0
     assert not problems, "\n".join(problems)
