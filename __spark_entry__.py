@@ -632,7 +632,7 @@ pairs AS (SELECT s1, s2, count(*) AS c FROM wedge GROUP BY s1, s2
           HAVING count(*) >= 2),
 contrib AS (SELECT s1 AS id, (c * (c - 1)) // 2 AS bf FROM pairs
             UNION ALL SELECT s2, (c * (c - 1)) // 2 FROM pairs),
-pv AS (SELECT id, sum(bf) AS butterflies FROM contrib GROUP BY id),
+pv AS (SELECT id, CAST(sum(bf) AS BIGINT) AS butterflies FROM contrib GROUP BY id),
 verts AS (SELECT DISTINCT id FROM
           (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges))
 SELECT v.id, coalesce(pv.butterflies, 0) AS butterflies
@@ -1183,7 +1183,7 @@ win AS (
 cnt AS (SELECT wd, count(*) AS c FROM win GROUP BY wd),
 pd AS (
   SELECT id, count(*) AS n_windows,
-         sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS n_dup_windows
+         CAST(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_windows
   FROM win JOIN cnt USING (wd) GROUP BY id
 )
 SELECT d.doc_id AS id, coalesce(n_windows, 0) AS n_windows,
@@ -2329,8 +2329,8 @@ def _sweep_cut_sql(iters: int = None, alpha: float = None) -> str:
         "FROM swp p LEFT JOIN swst st ON st.pos = p.pos "
         "LEFT JOIN swen en ON en.pos = p.pos)",
         "swacc AS (SELECT pos, id, deg, "
-        "sum(deg) OVER (ORDER BY pos ROWS UNBOUNDED PRECEDING) AS vol, "
-        "sum(d) OVER (ORDER BY pos ROWS UNBOUNDED PRECEDING) AS cut FROM swf)",
+        "CAST(sum(deg) OVER (ORDER BY pos ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vol, "
+        "CAST(sum(d) OVER (ORDER BY pos ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cut FROM swf)",
         "swtot AS (SELECT max(vol) AS tv FROM swacc)",
     ]
     return ("WITH " + ",\n".join(ctes) + """
@@ -6850,7 +6850,7 @@ tfk AS (SELECT tf.* FROM tf JOIN tfdf USING (tok)),"""
         FROM documents WHERE doc_id % 5 = 0)
   GROUP BY doc_id, tok),{df_filter}
 norms AS (SELECT id, sum(tf*tf) AS n2 FROM {src} GROUP BY id),
-dots AS (SELECT a.id AS id_a, b.id AS id_b, sum(a.tf * b.tf) AS dot
+dots AS (SELECT a.id AS id_a, b.id AS id_b, CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
          FROM {src} a JOIN {src} b ON a.tok = b.tok AND a.id < b.id
          GROUP BY a.id, b.id)
 SELECT id_a, id_b, dot,

@@ -40,10 +40,10 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround, pround_py
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
+from combblas_spark.operators.spmv import spmv_step
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
-    small_vector,
     superstep_checkpoint,
 )
 
@@ -119,18 +119,13 @@ def _or_hop(adj: DataFrame, state: DataFrame, mask_cols: list,
     cached adjacency + left-join mask merge. ``extra_cols`` pass
     through untouched (hyperball's prev/acc accumulators); ``n`` is the
     vertex count."""
-    mv = state.select(F.col("id").alias("src"), *mask_cols)
-    if can_broadcast:
-        mv = F.broadcast(mv)
     # neighbor OR-reduce: HashPartitioning(dst) satisfies the agg
     # clustering -> map-side combine then zero exchange
-    nbr = (
-        adj.join(mv, "src")
-        .groupBy(F.col("dst").alias("id"))
-        .agg(*[F.bit_or(c).alias(f"_n{j}") for j, c in enumerate(mask_cols)])
-    )
-    stitched = F.broadcast(nbr) if small_vector(n) else nbr
-    return state.join(stitched, "id", "left").select(
+    joined = spmv_step(
+        adj, state.select("id", *mask_cols),
+        [F.bit_or(c).alias(f"_n{j}") for j, c in enumerate(mask_cols)],
+        state, n, can_broadcast)
+    return joined.select(
         "id",
         *extra_cols,
         *[

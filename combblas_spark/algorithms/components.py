@@ -20,18 +20,13 @@ FastSV.h:252-333); the heavy SpMV + mins run as ONE job per superstep
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import (
-    BROADCAST_MAX_VERTICES,
-    layout_vector,
-    superstep_checkpoint,
-)
+from combblas_spark.runtime.plans import broadcastable, layout_vector, superstep_checkpoint
+from combblas_spark.runtime.superstep import Supersteps
 from combblas_spark.operators.semiring import SELECT2ND_MIN
 from combblas_spark.operators.spmv import spmv
 
@@ -40,7 +35,7 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     metrics: list | None = None,
-    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
+    broadcast_max_vertices: int | None = None,
     runner=None,
     initial_labels: DataFrame | None = None,
     assume_symmetric: bool = False,
@@ -72,6 +67,9 @@ def connected_components(
     declaration costs an avoidable shuffle, never wrong results
     (assume_symmetric excepted: that one IS a semantic claim about the
     data).
+
+    ``broadcast_max_vertices`` overrides the broadcast-regime threshold
+    (None = ``runtime.plans.BROADCAST_MAX_VERTICES``, read per call).
     """
     spark = edges.sparkSession
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -80,7 +78,7 @@ def connected_components(
     # init-checkpoint job)
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n_est = verts.count()
-    can_broadcast = n_est <= broadcast_max_vertices
+    can_broadcast = broadcastable(n_est, broadcast_max_vertices)
     # Edge partitioning per regime, mirroring pagerank.py:
     #  broadcast regime: partition by dst = the SpMV AGGREGATION key —
     #    the broadcast join preserves it, so the min-neighbor agg needs
@@ -101,12 +99,8 @@ def connected_components(
     sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
 
-    start_it = 0
-    f = None
-    if runner is not None:
-        resumed = runner.resume()
-        if resumed is not None:
-            start_it, f = resumed
+    steps = Supersteps(runner, metrics)
+    start_it, f = steps.resume()
     if f is None:
         if initial_labels is not None:
             f = (
@@ -133,7 +127,7 @@ def connected_components(
         # mngp feeds BOTH the union-min and the hooks join; broadcast-
         # regime plans have no reusable exchange, so persist it to avoid
         # running the edge-sized SpMV twice inside the superstep job.
-        mngp = spmv(sym, gp, SELECT2ND_MIN, broadcast_vector=can_broadcast or None).persist()
+        mngp = spmv(sym, gp, SELECT2ND_MIN, broadcast_vector=can_broadcast).persist()
         # hooking: push mngp[v] onto the parent f[v]
         hooks = (
             fv.select("id", F.col("val").alias("_p"))
@@ -152,8 +146,6 @@ def connected_components(
         # separate convergence join+count job). Labels stay longs end to
         # end: a double compare would equate ids >= 2^53 less than one
         # ulp apart and stop the loop early.
-        from pyspark.sql import Observation
-
         no_old = F.lit(None).cast("long")
         new_f = (
             f.withColumn("_old", F.col("val"))
@@ -170,22 +162,12 @@ def connected_components(
                 F.sum((F.col("val") < F.col("_old")).cast("long")).alias("changed"))
             .select("id", "val")
         )
-        new_f = layout_vector(new_f, n_est)
-        if runner is not None:
-            new_f = runner.step(it, new_f)
-        else:
-            new_f = superstep_checkpoint(new_f, it)
-
-        changed = int(obs.get["changed"] or 0)
+        f = steps.step(it, layout_vector(new_f, n_est), obs)
         mngp.unpersist()
-        f = new_f
-        if metrics is not None:
-            metrics.append({"iter": it, "changed": changed, "t": time.perf_counter()})
-        if changed == 0:
+        if not obs.get["changed"]:
             break
 
-    if runner is not None:
-        runner.finish(f)
+    steps.finish(f)
     sym.unpersist()
     return f.select("id", F.col("val").alias("comp"))
 
@@ -292,8 +274,6 @@ def connected_components_as(
         )
 
         # shortcut: f = f[f], with fused change detection
-        from pyspark.sql import Observation
-
         obs = Observation()
         new_f = (
             f2.select("id", F.col("val").alias("_p"))

@@ -37,10 +37,10 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
+from combblas_spark.operators.spmv import spmv_step
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
-    small_vector,
     superstep_checkpoint,
 )
 
@@ -141,19 +141,12 @@ def fastrp(
 
     for it in range(n_iter):
         w = 1 << (n_iter - 1 - it)
-        xv = state.select(F.col("id").alias("src"),
-                          *[F.col(x).alias("_" + x) for x in xcols])
-        if can_broadcast:
-            xv = F.broadcast(xv)
-        inflow = (
-            e.join(xv, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(*[F.sum("_" + x).alias("i" + x) for x in xcols])
-        )
-        stitched = F.broadcast(inflow) if small_vector(n) else inflow
+        joined = spmv_step(
+            e, state.select("id", *[F.col(x).alias("_" + x) for x in xcols]),
+            [F.sum("_" + x).alias("i" + x) for x in xcols], state, n, can_broadcast)
         newx = {x: F.coalesce(F.col("i" + x), F.lit(0)).cast("long") for x in xcols}
         state = superstep_checkpoint(
-            state.join(stitched, "id", "left").select(
+            joined.select(
                 "id",
                 *[newx[x].alias(x) for x in xcols],
                 *[(F.col(a) + F.lit(w) * newx[x]).alias(a)

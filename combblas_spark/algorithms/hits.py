@@ -38,10 +38,10 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
+from combblas_spark.operators.spmv import spmv_agg, spmv_step
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
-    small_vector,
     superstep_checkpoint,
 )
 
@@ -56,35 +56,42 @@ def hits(
     count so the DuckDB oracle can unroll the identical recurrence."""
     if n_iter < 1:
         raise ValueError("hits: n_iter must be >= 1 (no authority vector exists before the first half-step)")
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return _hub_authority(edges, edges.select("src", "dst"), n_iter, normalize=True)
 
-    e = edges.select("src", "dst")
+
+def _hub_authority(edges: DataFrame, ew: DataFrame, n_iter: int,
+                   weights: tuple[str, str] | None = None,
+                   normalize: bool = False) -> DataFrame:
+    """The dual-layout loop hits and salsa share. From h_0 = 1 each
+    iteration runs an authority half-step (hubs joined on src, summed by
+    dst over the dst-partitioned copy of ``ew``) and then a hub
+    half-step (authorities joined on dst, summed by src over the
+    src-partitioned copy). ``weights`` names the (authority, hub)
+    per-edge weight columns of ``ew`` (None: unit weights);
+    ``normalize`` L2-normalizes every half-step. Returns (id, hub, auth)
+    over the vertex set of ``edges``, checkpointed, caches released."""
+    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # dual layout: one copy per aggregation dimension (see module doc;
     # 1.57x per iteration over a single dst-partitioned copy, BENCH.md §9).
-    e_dst = e.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    e_dst = ew.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     e_dst.count()
-    e_src = e.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    e_src = ew.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
     e_src.count()
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
     can_broadcast = broadcastable(n)
 
-    def _vec(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if can_broadcast else df
-
     def _half_step(edge_copy: DataFrame, vec: DataFrame, join_key: str,
-                   agg_key: str, step_id: int) -> DataFrame:
+                   agg_key: str, wcol: str | None, step_id: int) -> DataFrame:
         """One semiring SpMV: sum vec over ``join_key`` neighbors, group
         by ``agg_key``; the copy's partitioning satisfies the agg (or
-        pins the join side in the shuffle regime). Returns the
-        L2-NORMALIZED sparse vector, checkpointed."""
-        raw = (
-            edge_copy.join(_vec(vec), edge_copy[join_key] == vec["id"])
-            .groupBy(edge_copy[agg_key].alias("id"))
-            .agg(F.sum("v").alias("v"))
-        )
+        pins the join side in the shuffle regime). Checkpointed."""
+        v = F.col("v") if wcol is None else F.col(wcol) * F.col("v")
+        raw = spmv_agg(edge_copy, vec, [F.sum(v).alias("v")], can_broadcast,
+                       on=join_key, out=agg_key)
+        if not normalize:
+            return superstep_checkpoint(raw, step_id)
         obs = Observation()
         raw = raw.observe(obs, F.sum(F.col("v") * F.col("v")).alias("ss"))
         raw = superstep_checkpoint(raw, step_id)
@@ -93,14 +100,15 @@ def hits(
             return raw
         return raw.select("id", (F.col("v") / F.lit(nrm)).alias("v"))
 
+    w_auth, w_hub = weights or (None, None)
     h = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
     h = h.localCheckpoint(eager=True)
     a = None
     for it in range(n_iter):
         # authority: join on src (hub side), aggregate by dst
-        a = _half_step(e_dst, h, "src", "dst", 2 * it)
+        a = _half_step(e_dst, h, "src", "dst", w_auth, 2 * it)
         # hub: join on dst (authority side), aggregate by src
-        h = _half_step(e_src, a, "dst", "src", 2 * it + 1)
+        h = _half_step(e_src, a, "dst", "src", w_hub, 2 * it + 1)
 
     out = (
         verts.join(h.select("id", F.col("v").alias("_h")), "id", "left")
@@ -117,6 +125,34 @@ def hits(
     e_dst.unpersist()
     e_src.unpersist()
     return out
+
+
+def _in_link_iteration(edges: DataFrame, n_iter: int, update) -> DataFrame:
+    """The power iteration katz and eigencentrality share: x_0 = 1 and
+    x_t(v) = update(sum_{u -> v} x_{t-1}(u)) over every vertex of
+    src UNION dst (a vertex with no in-edges sees inflow 0). ONE
+    dst-partitioned cached edge copy; each superstep is ``spmv_step``
+    stitched onto the cached vertex set. Returns the checkpointed
+    (id, v) after ``n_iter`` supersteps, caches released."""
+    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = edges.select("src", "dst").repartition(shuffle_n, "dst") \
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    e.count()
+    verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    n = verts.count()
+    can_broadcast = broadcastable(n)
+
+    x = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
+    x = x.localCheckpoint(eager=True)
+    for it in range(n_iter):
+        joined = spmv_step(e, x.select("id", F.col("v").alias("_x")),
+                           [F.sum("_x").alias("_in")], verts, n, can_broadcast)
+        x = superstep_checkpoint(
+            joined.select("id", update(F.coalesce(F.col("_in"), F.lit(0.0))).alias("v")),
+            it)
+    verts.unpersist()
+    e.unpersist()
+    return x
 
 
 def katz(
@@ -141,41 +177,9 @@ def katz(
     exchange per iteration in the broadcast regime; the dense-vector
     rebuild is a vector-sized left join per step (co-partitioned in the
     big-vector regime, same as pagerank's stitch)."""
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e = edges.select("src", "dst").repartition(shuffle_n, "dst") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    can_broadcast = broadcastable(n)
-
-    x = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
-    x = x.localCheckpoint(eager=True)
-    for it in range(n_iter):
-        xv = x.select(F.col("id").alias("src"), F.col("v").alias("_x"))
-        if can_broadcast:
-            xv = F.broadcast(xv)
-        inflow = (
-            e.join(xv, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("_x").alias("_in"))
-        )
-        stitched = F.broadcast(inflow) if small_vector(n) else inflow
-        x = superstep_checkpoint(
-            verts.join(stitched, "id", "left").select(
-                "id",
-                (F.lit(1.0)
-                 + F.lit(alpha) * F.coalesce(F.col("_in"), F.lit(0.0))).alias("v"),
-            ),
-            it,
-        )
-
-    out = x.select("id", F.col("v").alias("katz")).localCheckpoint(eager=True)
-    verts.unpersist()
-    e.unpersist()
-    return out
+    x = _in_link_iteration(
+        edges, n_iter, lambda inflow: F.lit(1.0) + F.lit(alpha) * inflow)
+    return x.select("id", F.col("v").alias("katz")).localCheckpoint(eager=True)
 
 
 def salsa(
@@ -208,57 +212,13 @@ def salsa(
     """
     if n_iter < 1:
         raise ValueError("salsa: n_iter must be >= 1 (no authority vector exists before the first half-step)")
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
     e = edges.select("src", "dst")
     ind = e.groupBy("dst").agg((F.lit(1.0) / F.count(F.lit(1))).alias("wc"))
     outd = e.groupBy("src").agg((F.lit(1.0) / F.count(F.lit(1))).alias("wr"))
     ew = e.join(ind, "dst").join(outd, "src").select("src", "dst", "wc", "wr")
-    e_dst = ew.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    e_dst.count()
-    e_src = ew.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    e_src.count()
-
-    verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    can_broadcast = broadcastable(n)
-
-    def _vec(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if can_broadcast else df
-
-    def _half_step(edge_copy: DataFrame, vec: DataFrame, join_key: str,
-                   agg_key: str, wcol: str, step_id: int) -> DataFrame:
-        raw = (
-            edge_copy.join(_vec(vec), edge_copy[join_key] == vec["id"])
-            .groupBy(edge_copy[agg_key].alias("id"))
-            .agg(F.sum(F.col(wcol) * F.col("v")).alias("v"))
-        )
-        return superstep_checkpoint(raw, step_id)
-
-    h = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
-    h = h.localCheckpoint(eager=True)
-    a = None
-    for it in range(n_iter):
-        # authority: join hubs on src, weight by CONTRIBUTOR 1/outdeg(src)
-        a = _half_step(e_dst, h, "src", "dst", "wr", 2 * it)
-        # hub: join authorities on dst, weight by CONTRIBUTOR 1/indeg(dst)
-        h = _half_step(e_src, a, "dst", "src", "wc", 2 * it + 1)
-
-    out = (
-        verts.join(h.select("id", F.col("v").alias("_h")), "id", "left")
-        .join(a.select("id", F.col("v").alias("_a")), "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("_h"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("_a"), F.lit(0.0)).alias("auth"),
-        )
-    )
-    out = out.localCheckpoint(eager=True)
-    verts.unpersist()
-    e_dst.unpersist()
-    e_src.unpersist()
-    return out
+    # authorities weight hubs by the CONTRIBUTOR's 1/outdeg(src), hubs
+    # weight authorities by the CONTRIBUTOR's 1/indeg(dst)
+    return _hub_authority(edges, ew, n_iter, weights=("wr", "wc"))
 
 
 def eigencentrality(
@@ -294,46 +254,13 @@ def eigencentrality(
     """
     if n_iter < 1:
         raise ValueError(f"eigencentrality: n_iter must be >= 1, got {n_iter}")
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e = edges.select("src", "dst").repartition(shuffle_n, "dst") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-
-    n = verts.count()
-    can_broadcast = broadcastable(n)
-
-    x = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
-    x = x.localCheckpoint(eager=True)
-    for it in range(n_iter):
-        xv = x.select(F.col("id").alias("src"), F.col("v").alias("_x"))
-        if can_broadcast:
-            xv = F.broadcast(xv)
-        inflow = (
-            e.join(xv, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("_x").alias("_in"))
-        )
-        stitched = F.broadcast(inflow) if small_vector(n) else inflow
-        x = superstep_checkpoint(
-            verts.join(stitched, "id", "left").select(
-                "id",
-                (F.coalesce(F.col("_in"), F.lit(0.0)) / F.lit(16.0)).alias("v"),
-            ),
-            it,
-        )
-
+    x = _in_link_iteration(edges, n_iter, lambda inflow: inflow / F.lit(16.0))
     total = x.agg(F.sum("v").alias("t")).collect()[0]["t"]
-    out = x.select(
+    return x.select(
         "id",
         pround(
             F.when(F.lit(total) > 0, F.col("v") / F.lit(float(total)))).alias("eigen"),
     ).localCheckpoint(eager=True)
-    verts.unpersist()
-    e.unpersist()
-    return out
 
 
 def topic_hits(

@@ -17,13 +17,12 @@ Scale design (same recipe as pagerank.py, measured there):
   clustering, so no edge-sized exchange per round; the argmax
   aggregate (group key id=dst) reuses the same partitioning.
 * the label vector is broadcast into the join while it fits; the final
-  stitch is a broadcast (small n) or co-partitioned (large n) join.
+  stitch is ``operators.spmv.stitch``: a broadcast join while the vector
+  was broadcast and is small, else co-partitioned.
 * resumable via runtime.SuperstepRunner (state = the label vector).
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -31,12 +30,13 @@ from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.portable import pround
 
+from combblas_spark.operators.spmv import stitch
 from combblas_spark.runtime.plans import (
-    BROADCAST_MAX_VERTICES,
+    broadcastable,
     layout_vector,
-    small_vector,
     superstep_checkpoint,
 )
+from combblas_spark.runtime.superstep import Supersteps
 from combblas_spark.graph import symmetrize_partitioned, vertices
 
 
@@ -44,7 +44,7 @@ def label_propagation(
     edges: DataFrame,
     n_rounds: int = 5,
     metrics: list | None = None,
-    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
+    broadcast_max_vertices: int | None = None,
     runner=None,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
@@ -60,7 +60,10 @@ def label_propagation(
     adopt the most frequent labeled neighbor label (min tie-break);
     vertices never reached by any label stay null. Same plan shape —
     the clamp rides the state as one extra column, and unlabeled
-    neighbors are filtered from the vote before the join."""
+    neighbors are filtered from the vote before the join.
+
+    ``broadcast_max_vertices`` overrides the broadcast-regime threshold
+    (None = ``runtime.plans.BROADCAST_MAX_VERTICES``, read per call)."""
     spark = edges.sparkSession
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # one fused exchange: the (src,dst) dedup rides the dst partitioning
@@ -73,14 +76,10 @@ def label_propagation(
     # labels — without the persist the union+distinct runs twice
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n, broadcast_max_vertices)
 
-    start_r = 0
-    labels = None
-    if runner is not None:
-        resumed = runner.resume()
-        if resumed is not None:
-            start_r, labels = resumed
+    steps = Supersteps(runner, metrics)
+    start_r, labels = steps.resume()
     seeded = seeds is not None
     if labels is None:
         if seeded:
@@ -120,31 +119,18 @@ def label_propagation(
             .agg(F.min_by("label", F.struct((-F.col("_c")).alias("_nc"),
                                             F.col("label"))).alias("_new"))
         )
-        stitched = F.broadcast(best) if small_vector(n) else best
+        joined = stitch(labels, best, n, can_broadcast)
         if seeded:
             # clamp seeds; unlabeled vertices adopt the vote if any
-            new_labels = (
-                labels.join(stitched, "id", "left")
-                .select("id",
-                        F.coalesce(F.col("_sl"), F.col("_new"),
-                                   F.col("label")).alias("label"),
-                        "_sl")
-            )
+            new_labels = joined.select(
+                "id", F.coalesce(F.col("_sl"), F.col("_new"), F.col("label")).alias("label"),
+                "_sl")
         else:
-            new_labels = (
-                labels.join(stitched, "id", "left")
-                .select("id", F.coalesce(F.col("_new"), F.col("label")).alias("label"))
-            )
-        if runner is not None:
-            new_labels = runner.step(r, new_labels)
-        else:
-            new_labels = superstep_checkpoint(new_labels, r)
-        labels = new_labels
-        if metrics is not None:
-            metrics.append({"iter": r, "t": time.perf_counter()})
+            new_labels = joined.select(
+                "id", F.coalesce(F.col("_new"), F.col("label")).alias("label"))
+        labels = steps.step(r, new_labels)
 
-    if runner is not None:
-        runner.finish(labels)
+    steps.finish(labels)
     sym.unpersist()
     return labels.select("id", "label")
 

@@ -25,6 +25,8 @@ BENCH/BASELINE.md):
   adaptive AllGather-vs-Alltoall choice, FastSV.h:252-333, CC.h:1251);
   beyond ``broadcast_max_vertices`` it becomes a shuffle join against
   edges pre-partitioned by src, planned by AQE (skew-join enabled).
+  Both regimes run the same loop body, ``operators.spmv.spmv_step``;
+  only the setup placement (``_normalized_edges``) differs.
 * the groupBy(dst).sum is THE communication step; map-side partial
   aggregation absorbs in-degree skew (hub pages) exactly like the
   reference's tree-reduce.
@@ -36,19 +38,17 @@ BENCH/BASELINE.md):
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from combblas_spark.operators.spmv import spmv_step
 from combblas_spark.runtime.plans import (
-    BROADCAST_MAX_VERTICES,
     broadcastable,
     layout_vector,
-    small_vector,
     superstep_checkpoint,
 )
+from combblas_spark.runtime.superstep import Supersteps
 
 
 def _vertex_base(edges: DataFrame) -> DataFrame:
@@ -110,7 +110,7 @@ def pagerank(
     max_iter: int = 100,
     weighted: bool = False,
     metrics: list | None = None,
-    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
+    broadcast_max_vertices: int | None = None,
     runner=None,
     initial_ranks: DataFrame | None = None,
     edge_layout: str | None = None,
@@ -121,6 +121,9 @@ def pagerank(
     n_iter set -> EXACTLY that many synchronous iterations (used by the
     DuckDB oracle, which unrolls the same recurrence); tol set -> run to
     L1 convergence (used by correctness-vs-numpy tests and bench).
+
+    ``broadcast_max_vertices`` overrides the broadcast-regime threshold
+    (None = ``runtime.plans.BROADCAST_MAX_VERTICES``, read per call).
 
     ``teleport`` switches to PERSONALIZED PageRank: a (id, weight)
     DataFrame of non-negative restart weights (any second column name;
@@ -180,18 +183,14 @@ def pagerank(
         base0.unpersist()
     else:
         n = base.count()
-    can_broadcast = n <= broadcast_max_vertices
+    can_broadcast = broadcastable(n, broadcast_max_vertices)
     enorm = _normalized_edges(edges, weighted, can_broadcast, edge_layout)
 
     # State vector (id, rank, dg): dg marks dangling vertices (appear as
     # dst but have no out-edges) so the per-superstep dangling mass is a
     # filtered aggregate over the state itself — no join in the loop.
-    start_it = 0
-    state = None
-    if runner is not None:
-        resumed = runner.resume()
-        if resumed is not None:
-            start_it, state = resumed
+    steps = Supersteps(runner, metrics)
+    start_it, state = steps.resume()
     # personalized runs carry the normalized teleport weight as one more
     # state column — same plan shape, one wider row.
     extra = ["tp"] if personalized else []
@@ -224,7 +223,6 @@ def pagerank(
         dmass = state.agg(
             F.coalesce(F.sum(F.when(F.col("dg"), F.col("rank"))), F.lit(0.0)).alias("_dm")
         )
-        rv = state.select(F.col("id").alias("_rid"), F.col("rank").alias("_r"))
         if personalized:
             # restart AND dangling mass redistribute by t(v), not 1/n
             new_rank = (
@@ -239,76 +237,34 @@ def pagerank(
                 * (F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_dm") / F.lit(float(n)))
             ).alias("rank")
 
-        if can_broadcast:
-            # zero-exchange SpMV: broadcast join + partitioning-satisfied
-            # agg over the dst-partitioned cached edges. The vector-sized
-            # inflow is stitched back onto the state either by a second
-            # broadcast (small vectors) or by a co-partitioned join (both
-            # sides HashPartitioning(id, shuffle_n) -> still no exchange,
-            # and every vector stage stays parallel).
-            inflow = (
-                enorm.join(F.broadcast(rv), enorm["src"] == F.col("_rid"))
-                .select(F.col("dst").alias("id"), (F.col("w") * F.col("_r")).alias("_c"))
-                .groupBy("id")
-                .agg(F.sum("_c").alias("_in"))
-            )
-            stitched = F.broadcast(inflow) if small_vector(n) else inflow
-            new_state = (
-                state.join(stitched, "id", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select("id", F.col("rank").alias("_prev"), new_rank, "dg", *extra)
-            )
-        else:
-            # shuffle regime: the SpMV contributions aggregate by dst into
-            # HashPartitioning(id, shuffle_n) — the same partitioning the
-            # state carries — so stitching the dense vector back together
-            # is a co-partitioned left join with NO exchange. The state
-            # keeps that partitioning across supersteps.
-            inflow = (
-                enorm.join(rv, enorm["src"] == F.col("_rid"))
-                .select(F.col("dst").alias("id"), (F.col("w") * F.col("_r")).alias("_c"))
-                .groupBy("id")
-                .agg(F.sum("_c").alias("_in"))
-            )
-            new_state = (
-                state.join(inflow, "id", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select("id", F.col("rank").alias("_prev"), new_rank, "dg", *extra)
-            )
+        # Broadcast regime: broadcast join + an agg whose partitioning the
+        # dst-partitioned cached edges already satisfy -> no exchange of
+        # the edges. Shuffle regime: the contributions aggregate into
+        # HashPartitioning(id, shuffle_n), the layout the state is given,
+        # so a state that keeps it takes the stitch without an exchange.
+        new_state = (
+            spmv_step(enorm, state.select("id", F.col("rank").alias("_r")),
+                      [F.sum(F.col("w") * F.col("_r")).alias("_in")],
+                      state, n, can_broadcast)
+            .crossJoin(F.broadcast(dmass))
+            .select("id", F.col("rank").alias("_prev"), new_rank, "dg", *extra)
+        )
 
         # tol mode: the L1 delta rides the superstep job itself as an
         # Observation over |rank - _prev| (the old rank is already in
         # the stitch join) — no separate convergence join+count job.
         obs = None
         if n_iter is None and tol is not None:
-            from pyspark.sql import Observation
-
             obs = Observation()
             new_state = new_state.observe(
-                obs, F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("d"))
-        new_state = new_state.select("id", "rank", "dg", *extra)
-
+                obs, F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("l1_delta"))
         # materialize: THE one job per superstep (truncates lineage);
         # the runner additionally writes durable Parquet on its cadence
-        if runner is not None:
-            new_state = runner.step(it, new_state)
-        else:
-            new_state = superstep_checkpoint(new_state, it)
+        state = steps.step(it, new_state.select("id", "rank", "dg", *extra), obs)
+        if obs is not None and obs.get["l1_delta"] < tol:
+            break
 
-        if obs is not None:
-            delta = float(obs.get["d"])
-            state = new_state
-            if metrics is not None:
-                metrics.append({"iter": it, "l1_delta": delta, "t": time.perf_counter()})
-            if delta < tol:
-                break
-        else:
-            state = new_state
-            if metrics is not None:
-                metrics.append({"iter": it, "t": time.perf_counter()})
-
-    if runner is not None:
-        runner.finish(state)
+    steps.finish(state)
     enorm.unpersist()
     return state.select("id", "rank")
 
@@ -378,17 +334,6 @@ def pagerank_batch(
                 F.sum(F.when(F.col("dg"), F.col("ranks")[b])), F.lit(0.0))
             for b in range(B)
         ]).alias("_dm"))
-        rv = state.select(F.col("id").alias("_rid"), F.col("ranks").alias("_r"))
-        rv = F.broadcast(rv) if can_broadcast else rv
-        inflow = (
-            enorm.join(rv, enorm["src"] == F.col("_rid"))
-            .select(F.col("dst").alias("id"),
-                    F.transform("_r", lambda x: x * F.col("w")).alias("_c"))
-            .groupBy("id")
-            .agg(F.array(*[F.sum(F.col("_c")[b]) for b in range(B)]).alias("_in"))
-        )
-        stitched = (F.broadcast(inflow) if can_broadcast and small_vector(n)
-                    else inflow)
         new_ranks = F.array(*[
             F.lit(1.0 - alpha) * _t(b)
             + F.lit(alpha) * (F.coalesce(F.col("_in")[b], F.lit(0.0))
@@ -396,7 +341,10 @@ def pagerank_batch(
             for b in range(B)
         ]).alias("ranks")
         new_state = (
-            state.join(stitched, "id", "left")
+            spmv_step(enorm, state.select("id", F.col("ranks").alias("_r")),
+                      [F.array(*[F.sum(F.col("_r")[b] * F.col("w"))
+                                 for b in range(B)]).alias("_in")],
+                      state, n, can_broadcast)
             .crossJoin(F.broadcast(dmass))
             .select("id", new_ranks, "dg")
         )

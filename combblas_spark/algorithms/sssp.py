@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.runtime.plans import broadcastable, superstep_checkpoint
+from combblas_spark.runtime.superstep import Supersteps
 
 
 def sssp(
@@ -49,15 +50,11 @@ def sssp(
     e = e.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
 
-    start_it = 0
-    dist = None
-    if runner is not None:
-        resumed = runner.resume()
-        if resumed is not None:
-            # state = the distance vector; the frontier is not persisted —
-            # resume re-relaxes from ALL current distances once (a safe
-            # over-approximation: extra relaxations are monotone no-ops)
-            start_it, dist = resumed
+    # state = the distance vector; the frontier is not persisted — a
+    # resume re-relaxes from ALL current distances once (a safe
+    # over-approximation: extra relaxations are monotone no-ops)
+    steps = Supersteps(runner)
+    start_it, dist = steps.resume()
     if dist is None:
         dist = spark.createDataFrame([(int(root), 0.0)], "id long, dist double")
     dist = dist.localCheckpoint(eager=True)
@@ -80,10 +77,7 @@ def sssp(
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
         )
-        if runner is not None:
-            merged = runner.step(it, merged)
-        else:
-            merged = superstep_checkpoint(merged, it)
+        merged = steps.step(it, merged)
         # improved = strictly better than before (new vertices included)
         frontier = (
             merged.join(dist.withColumnRenamed("dist", "_old"), "id", "left")
@@ -110,8 +104,7 @@ def sssp(
             f"{max_iter}-hop relaxation, not the fixpoint — raise "
             f"max_iter (graph has longer shortest paths)",
             RuntimeWarning, stacklevel=2)
-    if runner is not None:
-        runner.finish(dist)
+    steps.finish(dist)
     e.unpersist()
     return dist
 

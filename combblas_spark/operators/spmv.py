@@ -19,14 +19,20 @@ With edges stored as rows ``(src, dst, val)`` where ``val = A[src][dst]``:
 The frontier/vector side is broadcast when small (the analogue of the
 reference's adaptive AllGather-vs-Alltoall choice, FastSV.h:252-333 and
 CC.h:1251-1294); otherwise it is a shuffle join that AQE plans.
+
+``spmv_step`` is the per-superstep vector exchange of the power-iteration
+loops (pagerank, katz, fastrp, ANF, ...): the regime choice and the
+stitch rule live there, not in each loop. ``spmv_agg`` and ``stitch``
+are its two halves for loops that need only one of them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.operators.semiring import Semiring, PLUS_TIMES
+from combblas_spark.runtime.plans import small_vector
 
 
 def spmv(
@@ -34,7 +40,7 @@ def spmv(
     x: DataFrame,
     sr: Semiring = PLUS_TIMES,
     transpose: bool = False,
-    broadcast_vector: bool | None = None,
+    broadcast_vector: bool = False,
     index_is_value: bool = False,
 ) -> DataFrame:
     """y = A^T x (default) or A x (transpose=True) over semiring ``sr``.
@@ -44,16 +50,16 @@ def spmv(
     x:     (id long, val)               —  sparse or dense vector rows.
     index_is_value: ignore x.val and use x.id as the multiplied value
            (BFS parent trick, "indexisvalue").
-    broadcast_vector: force/disable broadcast of x; None = let AQE pick.
+    broadcast_vector: hint a broadcast of x. Without the hint the
+           planner still broadcasts x when its size estimate is under
+           ``spark.sql.autoBroadcastJoinThreshold``.
 
     Returns (id, val) with one row per output coordinate that received
     at least one contribution (sparse output, like SpMSpV).
     """
     join_col, out_col = ("dst", "src") if transpose else ("src", "dst")
 
-    xv = x
-    if broadcast_vector is True:
-        xv = F.broadcast(xv)
+    xv = F.broadcast(x) if broadcast_vector else x
     if index_is_value:
         x_val = F.col("x.id").cast("double")
         xv = xv.select("id")
@@ -72,6 +78,43 @@ def spmv(
         .groupBy("id")
         .agg(sr.add(F.col("_prod")).alias("val"))
     )
+
+
+def spmv_agg(edges: DataFrame, x: DataFrame, aggs: list[Column], broadcast: bool,
+             on: str = "src", out: str = "dst") -> DataFrame:
+    """Join-aggregate half of a superstep: join the vertex vector ``x``
+    (``id`` plus value columns) onto ``edges[on]`` and aggregate ``aggs``
+    grouped by ``edges[out]``, returned as ``id``. The defaults move
+    values along edge direction (y = A^T x); ``on="dst", out="src"``
+    gathers the other way (y = A x). ``broadcast`` is the superstep
+    regime: the vector is broadcast into the join (AllGather), else it
+    meets the edges by shuffle (Alltoall). Over edges cached
+    hash-partitioned by ``out`` the broadcast regime moves no edges."""
+    xv = x.withColumnRenamed("id", on)
+    return (
+        edges.join(F.broadcast(xv) if broadcast else xv, on)
+        .groupBy(F.col(out).alias("id"))
+        .agg(*aggs)
+    )
+
+
+def stitch(state: DataFrame, inflow: DataFrame, n: int, broadcast: bool) -> DataFrame:
+    """Left-join a vertex-sized ``inflow`` (keyed ``id``) onto the
+    ``n``-row ``state``. The inflow is broadcast only when the vector was
+    broadcast into the edge join (``broadcast``) and ``small_vector(n)``
+    holds; otherwise a state hash-partitioned by id at shuffle width
+    takes it as a co-partitioned join, without an exchange."""
+    return state.join(F.broadcast(inflow) if broadcast and small_vector(n) else inflow,
+                      "id", "left")
+
+
+def spmv_step(edges: DataFrame, x: DataFrame, aggs: list[Column], state: DataFrame,
+              n: int, broadcast: bool) -> DataFrame:
+    """One superstep's vector exchange: ``spmv_agg`` of ``x`` along
+    ``edges`` (joined by src, aggregated by dst), stitched onto the
+    ``n``-row ``state``. Returns the state's columns plus the ``aggs``
+    columns, NULL where no edge delivered a value."""
+    return stitch(state, spmv_agg(edges, x, aggs, broadcast), n, broadcast)
 
 
 def salted_spmv(

@@ -138,11 +138,12 @@ SMALL_VECTOR_MAX = 100_000
 BROADCAST_MAX_VERTICES = 8_000_000
 
 
-def broadcastable(n: int) -> bool:
+def broadcastable(n: int, limit: int | None = None) -> bool:
     """True when an ``n``-row vertex vector takes the broadcast regime.
-    Reads ``BROADCAST_MAX_VERTICES`` at call time, so a test can
-    monkeypatch it to force the shuffle regime."""
-    return n <= BROADCAST_MAX_VERTICES
+    ``limit`` is a per-call override of ``BROADCAST_MAX_VERTICES``; the
+    constant is read at call time, so a test can monkeypatch it to force
+    the shuffle regime."""
+    return n <= (BROADCAST_MAX_VERTICES if limit is None else limit)
 
 
 def small_vector(n: int) -> bool:

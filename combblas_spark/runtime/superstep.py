@@ -34,8 +34,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from combblas_spark.runtime.plans import superstep_checkpoint
 
 
 def partition_histogram(df: DataFrame) -> list[int]:
@@ -139,7 +141,6 @@ class SuperstepRunner:
         self._last_step = iteration
         if (iteration + 1) % self.every == 0:
             return self._durable(iteration, state, extra)  # bills + resets
-        from combblas_spark.runtime.plans import superstep_checkpoint
         out = superstep_checkpoint(state, iteration)
         # The loop bodies are fully lazy — the eager localCheckpoint
         # above (or the Parquet write on the durable path) is THE job
@@ -213,3 +214,44 @@ class SuperstepRunner:
         # _durable added a third wall for two supersteps run)
         self._durable(self._last_step, state, {"final": True, **extra},
                       bill=False)
+
+
+class Supersteps:
+    """The resume / checkpoint / finish steps every resumable loop
+    shares, and its ``metrics`` stamps. With a ``SuperstepRunner`` the
+    state is checkpointed durably on the runner's cadence; without one
+    by ``superstep_checkpoint``. ``resume()`` gives (0, None) on a cold
+    start; ``step()`` per superstep; ``finish()`` after the loop."""
+
+    def __init__(self, runner: SuperstepRunner | None = None,
+                 metrics: list | None = None) -> None:
+        self.runner = runner
+        self.metrics = metrics
+
+    def resume(self) -> tuple[int, DataFrame | None]:
+        """(first superstep, state) from the runner's latest durable
+        checkpoint, or (0, None) when there is none to resume."""
+        resumed = self.runner.resume() if self.runner is not None else None
+        return resumed if resumed is not None else (0, None)
+
+    def step(self, it: int, state: DataFrame,
+             obs: Observation | None = None) -> DataFrame:
+        """Materialize superstep ``it`` (the one job that runs its lazy
+        plan) and append ``{"iter", <obs metrics>, "t"}`` to
+        ``metrics``. ``t`` is read after that job, so consecutive stamps
+        tile the supersteps; ``obs`` is an Observation on ``state``
+        whose metric names become stamp keys (an empty sum reads 0)."""
+        if self.runner is not None:
+            out = self.runner.step(it, state)
+        else:
+            out = superstep_checkpoint(state, it)
+        if self.metrics is not None:
+            seen = ({} if obs is None else
+                    {k: 0 if v is None else v for k, v in obs.get.items()})
+            self.metrics.append({"iter": it, **seen, "t": time.perf_counter()})
+        return out
+
+    def finish(self, state: DataFrame) -> None:
+        """Durably checkpoint the final state (runner only)."""
+        if self.runner is not None:
+            self.runner.finish(state)

@@ -5,6 +5,7 @@ count). Usage: python scripts/explain_audit.py"""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -14,6 +15,23 @@ from pyspark.sql import functions as F
 from combblas_spark import get_spark
 from combblas_spark.algorithms.triangles import lower_triangle
 from combblas_spark.graph import events_graph, vertices
+
+
+def shuffles(df) -> list[str]:
+    """The shuffle Exchanges of ``df``'s physical plan, expression and
+    plan ids stripped. A cached input's own plan is not a child of its
+    scan, so it is not counted."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.initialPlan()
+    out, stack = [], [root]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Exchange":
+            out.append(re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", node.simpleString(25)))
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return out
 
 
 def main() -> None:
@@ -28,12 +46,10 @@ def main() -> None:
     print("=== 2. zero-exchange SpMV (dst-partitioned cached edges + broadcast vector) ===")
     g = events_graph(spark, sf).repartition(16, "dst").persist()
     g.count()
-    rv = vertices(g).select(F.col("id").alias("_rid"), F.lit(1.0).alias("_r"))
-    (
-        g.join(F.broadcast(rv), g["src"] == F.col("_rid"))
-        .select(F.col("dst").alias("id"), (F.col("val") * F.col("_r")).alias("_c"))
-        .groupBy("id").agg(F.sum("_c").alias("v"))
-    ).explain("formatted")
+    from combblas_spark.operators.spmv import spmv_agg, spmv_step
+
+    spmv_agg(g, vertices(g).select("id", F.lit(1.0).alias("_r")),
+             [F.sum(F.col("val") * F.col("_r")).alias("v")], True).explain("formatted")
 
     print("=== 3. triangle count: mask as semi-join before aggregation ===")
     L = lower_triangle(g)
@@ -61,43 +77,78 @@ def main() -> None:
                ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"))
     print("dictionary plan + lineage: PYTHON-FREE (asserted)")
 
-    print("=== 5. ANF hop / HITS half-step / k-core round: "
-          "zero exchange above the cache, Python-free ===")
-    from combblas_spark.algorithms.anf import _init_mask
+    print("=== 5. the library's superstep vector exchange in both regimes "
+          "(ANF hop, HITS half-step, FastRP superstep) and a k-core round ===")
+    from combblas_spark.algorithms.anf import _init_mask, _or_hop
+    from combblas_spark.algorithms.embeddings import projection_entry
     from combblas_spark.graph import symmetrize_partitioned
 
     sym = symmetrize_partitioned(g, "dst", 16).select("src", "dst").persist()
     sym.count()
-    state = (
-        vertices(g).select("id", *[_init_mask(j, 42, 24) for j in range(4)])
-        .coalesce(1).localCheckpoint()
-    )
-    mv = F.broadcast(state.select(F.col("id").alias("src"), "m0", "m1", "m2", "m3"))
-    anf_hop = (
-        sym.join(mv, "src").groupBy(F.col("dst").alias("id"))
-        .agg(*[F.bit_or(f"m{j}").alias(f"_n{j}") for j in range(4)])
-    )
     e_dst = g.select("src", "dst").repartition(16, "dst").persist()
     e_dst.count()
-    vec = F.broadcast(vertices(g).select("id", F.lit(1.0).alias("v")))
-    hits_half = (
-        e_dst.join(vec, e_dst["src"] == vec["id"])
-        .groupBy(e_dst["dst"].alias("id")).agg(F.sum("v").alias("v"))
-    )
+    n_v = vertices(g).count()
+    masks, xs = [f"m{j}" for j in range(4)], [f"x{j}" for j in range(4)]
+    anf_aggs = [F.bit_or(c).alias(f"_n{j}") for j, c in enumerate(masks)]
+    frp_aggs = [F.sum("_" + x).alias("i" + x) for x in xs]
+    # Without size-based broadcasts the small test frames plan as at
+    # scale. The vectors are cached and filled: a filled cache keeps its
+    # hash partitioning, while a localCheckpointed frame reports
+    # UnknownPartitioning on Spark 4.1 (ROADMAP open item).
+    old_auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    for bc, layout in ((True, lambda df: df.coalesce(1)),
+                       (False, lambda df: df.repartition(16, "id"))):
+        def vec(*cols):
+            df = layout(vertices(g).select("id", *cols)).persist()
+            df.count()
+            return df
+
+        state = vec(*[_init_mask(j, 42, 24) for j in range(4)])
+        x = vec(*[projection_entry(F.col("id"), j, 17).alias(c) for j, c in enumerate(xs)])
+        xv = x.select("id", *[F.col(c).alias("_" + c) for c in xs])
+        # name -> (superstep, its join-aggregate half)
+        steps = {
+            "anf_hop": (_or_hop(sym, state, masks, [], bc, n_v),
+                        spmv_agg(sym, state.select("id", *masks), anf_aggs, bc)),
+            "fastrp_superstep": (spmv_step(e_dst, xv, frp_aggs, x, n_v, bc),
+                                 spmv_agg(e_dst, xv, frp_aggs, bc)),
+            "hits_half_step": (spmv_agg(e_dst, vec(F.lit(1.0).alias("v")),
+                                        [F.sum("v").alias("v")], bc), None),
+        }
+        for name, (df, half) in steps.items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert all(m not in plan for m in
+                       ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")), name
+            if bc:
+                # vector broadcast in, agg satisfied by the dst-partitioned
+                # cache, small inflow broadcast back onto the state
+                assert shuffles(df) == [], (name, shuffles(df))
+            else:
+                # edges move to the join key, contributions to dst; the
+                # id-partitioned vector side is not exchanged ...
+                assert len(shuffles(half or df)) == 2, (name, shuffles(half or df))
+                # ... and the stitch adds nothing on the id-partitioned state
+                assert sorted(shuffles(df)) == sorted(shuffles(half or df)), \
+                    (name, shuffles(df))
+        print("broadcast regime: no exchange above the cached edges" if bc else
+              "shuffle regime: the stitch adds no exchange on the id-partitioned "
+              "state", "(anf_hop, fastrp_superstep, hits_half_step), PYTHON-FREE "
+              "(asserted)")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_auto)
+
     alive = F.broadcast(vertices(g).select("id").coalesce(1).localCheckpoint())
     kcore_round = (
         sym.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
         .groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).alias("_d"))
         .join(alive, "id", "left_semi")
     )
-    for name, df in (("anf_hop", anf_hop), ("hits_half_step", hits_half),
-                     ("kcore_round", kcore_round)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        above = plan.split("InMemoryRelation", 1)[0]
-        assert "Exchange" not in above, f"{name}: exchange above the cache"
-        assert all(m not in plan for m in
-                   ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")), name
-        print(f"{name}: zero-exchange above cache, PYTHON-FREE (asserted)")
+    plan = kcore_round._jdf.queryExecution().executedPlan().toString()
+    above = plan.split("InMemoryRelation", 1)[0]
+    assert "Exchange" not in above, "kcore_round: exchange above the cache"
+    assert all(m not in plan for m in
+               ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")), "kcore_round"
+    print("kcore_round: zero-exchange above cache, PYTHON-FREE (asserted)")
 
     print("=== 6. SCC color superstep / walks step / skipgram band join: "
           "Python-free, no cartesian ===")
@@ -425,25 +476,15 @@ def main() -> None:
               "(all key-partitioned), no single-partition exchange, "
               "PYTHON-FREE (asserted)")
 
-    print("=== 18. round-4g ops: langid / fastrp superstep / louvain "
+    print("=== 18. round-4g ops: langid / louvain "
           "contraction / phrase intersection / CDC chunking + dedup ===")
     from combblas_spark.functions.text import lang_id_ngram, phrase_search
     from combblas_spark.functions.dedup import cdc_chunks, chunk_dedup_pairs
     from combblas_spark.algorithms.labelprop import (
         greedy_modularity, _contract_weighted)
-    from combblas_spark.algorithms.embeddings import projection_entry
 
     docs18 = spark.read.parquet(f"{sf}/documents.parquet").localCheckpoint()
     lid = lang_id_ngram(docs18)
-    # one fastrp superstep shape: d-column inflow over broadcast state
-    st = vertices(g).select(
-        "id", *[projection_entry(F.col("id"), j, 17).alias(f"x{j}")
-                for j in range(4)]).localCheckpoint()
-    frp = (
-        g.join(F.broadcast(st.withColumnRenamed("id", "src")), "src")
-        .groupBy(F.col("dst").alias("id"))
-        .agg(*[F.sum(f"x{j}").alias(f"i{j}") for j in range(4)])
-    )
     lvsym = g.select("src", "dst").where(F.col("src") != F.col("dst")) \
         .distinct().withColumn("w", F.lit(1).cast("long")).localCheckpoint()
     lab18 = greedy_modularity(g, n_rounds=1) \
@@ -476,7 +517,6 @@ def main() -> None:
                             blm.localCheckpoint(), m_words=8)
     wtri = weighted_triangle_intensity(g)
     for name, df, win_ok in (("lang_id_ngram", lid, 0),
-                             ("fastrp_superstep", frp, 0),
                              ("louvain_contract", lcon, 0),
                              ("phrase_search", phr, 0),
                              ("cdc_chunks", cdc, 0),
@@ -522,7 +562,6 @@ def main() -> None:
     print("=== 20. PageRank setup placement: cached normalized edges ===")
     # results never depend on placement, so value tests cannot see a
     # lost repartition — assert the cached edge layout directly
-    import re
     import shutil
     import tempfile
 

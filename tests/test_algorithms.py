@@ -107,14 +107,14 @@ def test_pagerank_fixed_iters_matches_unrolled(spark):
     np.testing.assert_allclose(got, r, atol=1e-12)
 
 
-def test_pagerank_personalized_vs_numpy(spark):
+def test_pagerank_personalized_vs_numpy(spark, monkeypatch):
     """Personalized PageRank: restart AND dangling mass redistribute by
     the (normalized) teleport vector; vertices outside the teleport set
-    get rank only through in-links. Includes a dangling vertex (3)."""
+    get rank only through in-links. Includes a dangling vertex (3).
+    Runs in both superstep regimes."""
     edges = [(0, 1), (1, 2), (2, 0), (2, 3), (1, 3)]
     e = df_edges(spark, edges)
     tele = spark.createDataFrame([(0, 3.0), (2, 1.0)], ["id", "t"])
-    got = ranks_of(pagerank(e, n_iter=8, teleport=tele), 4)
 
     n, alpha = 4, 0.85
     t = np.array([3.0, 0.0, 1.0, 0.0]); t /= t.sum()
@@ -128,8 +128,10 @@ def test_pagerank_personalized_vs_numpy(spark):
         nz = out > 0
         contrib = (A[nz] / out[nz, None] * r[nz, None]).sum(axis=0)
         r = (1 - alpha) * t + alpha * (contrib + dang * t)
-    np.testing.assert_allclose(got, r, atol=1e-12)
-    assert abs(got.sum() - 1.0) < 1e-9
+    for regime in regimes(monkeypatch):
+        got = ranks_of(pagerank(e, n_iter=8, teleport=tele), 4)
+        np.testing.assert_allclose(got, r, atol=1e-12, err_msg=regime)
+        assert abs(got.sum() - 1.0) < 1e-9, regime
 
 
 def test_pagerank_personalized_tol_mode(spark):
@@ -246,12 +248,14 @@ def test_labelprop_exact(spark):
         assert got == labelprop_oracle(edges, rounds)
 
 
-def test_labelprop_rmat(spark):
+def test_labelprop_rmat(spark, monkeypatch):
     raw = rmat_edges(spark, scale=6, edgefactor=3, seed=5)
     g = build_graph(raw).persist()
     pairs = [(r["src"], r["dst"]) for r in g.select("src", "dst").collect()]
-    got = {r["id"]: r["label"] for r in label_propagation(g, n_rounds=3).collect()}
-    assert got == labelprop_oracle(pairs, 3)
+    want = labelprop_oracle(pairs, 3)
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: r["label"] for r in label_propagation(g, n_rounds=3).collect()}
+        assert got == want, regime
 
 
 def test_labelprop_argmax_variants_agree(spark):
@@ -1208,9 +1212,10 @@ def test_salsa_vs_numpy(spark, monkeypatch):
             assert abs(out[v][1] - a[idx[v]]) < 1e-9, regime
 
 
-def test_labelprop_seeded(spark):
+def test_labelprop_seeded(spark, monkeypatch):
     """Two clamped seed classes on a path; middle adopts the majority
-    labeled neighbor (min tie-break); isolated pair stays null."""
+    labeled neighbor (min tie-break); isolated pair stays null. Runs in
+    both superstep regimes."""
     from combblas_spark.algorithms.labelprop import label_propagation
 
     # path 0-1-2-3-4 plus leaf 5 off 4 (undirected via symmetrize),
@@ -1221,14 +1226,15 @@ def test_labelprop_seeded(spark):
     # clamped 20.
     E = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (8, 9)]
     seeds = spark.createDataFrame([(0, 10), (4, 20)], "id long, label long")
-    out = {r["id"]: r["label"]
-           for r in label_propagation(df_edges(spark, E), n_rounds=5,
-                                      seeds=seeds).collect()}
-    assert out[0] == 10 and out[4] == 20          # clamped
-    assert out[1] == 10 and out[2] == 10          # adopt nearest seed
-    assert out[3] == 10                           # tie 10 vs 20 -> min
-    assert out[5] == 20                           # leaf off the 20-seed
-    assert out[8] is None and out[9] is None      # unreached stay null
+    for regime in regimes(monkeypatch):
+        out = {r["id"]: r["label"]
+               for r in label_propagation(df_edges(spark, E), n_rounds=5,
+                                          seeds=seeds).collect()}
+        assert out[0] == 10 and out[4] == 20, regime       # clamped
+        assert out[1] == 10 and out[2] == 10, regime       # adopt nearest seed
+        assert out[3] == 10, regime                        # tie 10 vs 20 -> min
+        assert out[5] == 20, regime                        # leaf off the 20-seed
+        assert out[8] is None and out[9] is None, regime   # unreached stay null
 
 
 def _tarjan_scc(nodes, E):

@@ -169,6 +169,46 @@ def test_labelprop_resume_exact(spark, graph, tmp_path):
     assert resumed == full
 
 
+def test_superstep_stamps_keep_their_keys(spark, graph, tmp_path):
+    """Every loop's ``metrics`` stamp, with and without a durable
+    runner: ``iter`` counts the supersteps from the first one run, ``t``
+    rises (read after each materializing job), PageRank's tol mode adds
+    ``l1_delta`` and CC adds ``changed``."""
+    from combblas_spark.algorithms.labelprop import label_propagation
+
+    def check(stamps, first, keys):
+        assert [m["iter"] for m in stamps] == list(range(first, first + len(stamps)))
+        assert all(set(m) == {"iter", "t", *keys} for m in stamps), stamps
+        ts = [m["t"] for m in stamps]
+        assert ts == sorted(ts)
+
+    m = []
+    pagerank(graph, tol=1e-6, metrics=m)
+    check(m, 0, {"l1_delta"})
+    assert m[-1]["l1_delta"] < 1e-6 <= m[-2]["l1_delta"]
+    m = []
+    pagerank(graph, n_iter=3, metrics=m)
+    check(m, 0, set())
+    assert len(m) == 3
+    m = []
+    connected_components(graph, metrics=m)
+    check(m, 0, {"changed"})
+    assert m[-1]["changed"] == 0 and all(x["changed"] > 0 for x in m[:-1])
+    m = []
+    label_propagation(graph, n_rounds=2, metrics=m)
+    check(m, 0, set())
+    assert len(m) == 2
+
+    # a resumed run stamps only the supersteps it runs
+    ckpt = str(tmp_path / "stamps")
+    pagerank(graph, n_iter=2, runner=SuperstepRunner(spark, ckpt, "pagerank", every=2))
+    m = []
+    pagerank(graph, n_iter=4, metrics=m,
+             runner=SuperstepRunner(spark, ckpt, "pagerank", every=2))
+    check(m, 2, set())
+    assert len(m) == 2
+
+
 def test_superstep_checkpoint_bounds_plan_stats(spark):
     """The exponential-Catalyst-stats repro (BENCH.md round-2 discovery):
     a double-self-join loop multiplies inherited sizeInBytes DIGITS per
