@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -56,20 +56,33 @@ def hits(
     count so the DuckDB oracle can unroll the identical recurrence."""
     if n_iter < 1:
         raise ValueError("hits: n_iter must be >= 1 (no authority vector exists before the first half-step)")
-    return _hub_authority(edges, edges.select("src", "dst"), n_iter, normalize=True)
+    v = F.col("v")
+    return _hub_authority(edges, edges.select("src", "dst"), n_iter, v, v,
+                          _l2_normalized_checkpoint)
+
+
+def _l2_normalized_checkpoint(raw: DataFrame, step_id: int) -> DataFrame:
+    """``superstep_checkpoint`` of the (id, v) half-step output, then v
+    divided by its L2 norm (observed on the checkpoint job itself)."""
+    obs = Observation()
+    raw = superstep_checkpoint(
+        raw.observe(obs, F.sum(F.col("v") * F.col("v")).alias("ss")), step_id)
+    nrm = math.sqrt(float(obs.get["ss"] or 0.0))
+    if nrm == 0.0:
+        return raw
+    return raw.select("id", (F.col("v") / F.lit(nrm)).alias("v"))
 
 
 def _hub_authority(edges: DataFrame, ew: DataFrame, n_iter: int,
-                   weights: tuple[str, str] | None = None,
-                   normalize: bool = False) -> DataFrame:
+                   auth_v: Column, hub_v: Column, checkpoint) -> DataFrame:
     """The dual-layout loop hits and salsa share. From h_0 = 1 each
-    iteration runs an authority half-step (hubs joined on src, summed by
-    dst over the dst-partitioned copy of ``ew``) and then a hub
-    half-step (authorities joined on dst, summed by src over the
-    src-partitioned copy). ``weights`` names the (authority, hub)
-    per-edge weight columns of ``ew`` (None: unit weights);
-    ``normalize`` L2-normalizes every half-step. Returns (id, hub, auth)
-    over the vertex set of ``edges``, checkpointed, caches released."""
+    iteration runs an authority half-step (hubs joined on src, ``auth_v``
+    summed by dst over the dst-partitioned copy of ``ew``) and then a hub
+    half-step (authorities joined on dst, ``hub_v`` summed by src over
+    the src-partitioned copy); ``v`` is the incoming vector value.
+    ``checkpoint(df, step_id)`` materializes each half-step. Returns
+    (id, hub, auth) over the vertex set of ``edges``, checkpointed,
+    caches released."""
     shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # dual layout: one copy per aggregation dimension (see module doc;
     # 1.57x per iteration over a single dst-partitioned copy, BENCH.md §9).
@@ -83,32 +96,21 @@ def _hub_authority(edges: DataFrame, ew: DataFrame, n_iter: int,
     can_broadcast = broadcastable(n)
 
     def _half_step(edge_copy: DataFrame, vec: DataFrame, join_key: str,
-                   agg_key: str, wcol: str | None, step_id: int) -> DataFrame:
-        """One semiring SpMV: sum vec over ``join_key`` neighbors, group
+                   agg_key: str, v: Column, step_id: int) -> DataFrame:
+        """One semiring SpMV: sum ``v`` over ``join_key`` neighbors, group
         by ``agg_key``; the copy's partitioning satisfies the agg (or
         pins the join side in the shuffle regime). Checkpointed."""
-        v = F.col("v") if wcol is None else F.col(wcol) * F.col("v")
-        raw = spmv_agg(edge_copy, vec, [F.sum(v).alias("v")], can_broadcast,
-                       on=join_key, out=agg_key)
-        if not normalize:
-            return superstep_checkpoint(raw, step_id)
-        obs = Observation()
-        raw = raw.observe(obs, F.sum(F.col("v") * F.col("v")).alias("ss"))
-        raw = superstep_checkpoint(raw, step_id)
-        nrm = math.sqrt(float(obs.get["ss"] or 0.0))
-        if nrm == 0.0:
-            return raw
-        return raw.select("id", (F.col("v") / F.lit(nrm)).alias("v"))
+        return checkpoint(spmv_agg(edge_copy, vec, [F.sum(v).alias("v")], can_broadcast,
+                                   on=join_key, out=agg_key), step_id)
 
-    w_auth, w_hub = weights or (None, None)
     h = layout_vector(verts.select("id", F.lit(1.0).alias("v")), n, shuffle_n)
     h = h.localCheckpoint(eager=True)
     a = None
     for it in range(n_iter):
         # authority: join on src (hub side), aggregate by dst
-        a = _half_step(e_dst, h, "src", "dst", w_auth, 2 * it)
+        a = _half_step(e_dst, h, "src", "dst", auth_v, 2 * it)
         # hub: join on dst (authority side), aggregate by src
-        h = _half_step(e_src, a, "dst", "src", w_hub, 2 * it + 1)
+        h = _half_step(e_src, a, "dst", "src", hub_v, 2 * it + 1)
 
     out = (
         verts.join(h.select("id", F.col("v").alias("_h")), "id", "left")
@@ -218,7 +220,8 @@ def salsa(
     ew = e.join(ind, "dst").join(outd, "src").select("src", "dst", "wc", "wr")
     # authorities weight hubs by the CONTRIBUTOR's 1/outdeg(src), hubs
     # weight authorities by the CONTRIBUTOR's 1/indeg(dst)
-    return _hub_authority(edges, ew, n_iter, weights=("wr", "wc"))
+    return _hub_authority(edges, ew, n_iter, F.col("wr") * F.col("v"),
+                          F.col("wc") * F.col("v"), superstep_checkpoint)
 
 
 def eigencentrality(

@@ -240,8 +240,9 @@ def pagerank(
         # Broadcast regime: broadcast join + an agg whose partitioning the
         # dst-partitioned cached edges already satisfy -> no exchange of
         # the edges. Shuffle regime: the contributions aggregate into
-        # HashPartitioning(id, shuffle_n), the layout the state is given,
-        # so a state that keeps it takes the stitch without an exchange.
+        # HashPartitioning(id, shuffle_n), the layout the state is given;
+        # the checkpointed state does not keep it on Spark 4.1, so the
+        # stitch exchanges the state by id (ROADMAP open item 5).
         new_state = (
             spmv_step(enorm, state.select("id", F.col("rank").alias("_r")),
                       [F.sum(F.col("w") * F.col("_r")).alias("_in")],

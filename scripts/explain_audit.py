@@ -82,6 +82,8 @@ def main() -> None:
     from combblas_spark.algorithms.anf import _init_mask, _or_hop
     from combblas_spark.algorithms.embeddings import projection_entry
     from combblas_spark.graph import symmetrize_partitioned
+    from combblas_spark.runtime import plans
+    from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
 
     sym = symmetrize_partitioned(g, "dst", 16).select("src", "dst").persist()
     sym.count()
@@ -91,18 +93,47 @@ def main() -> None:
     masks, xs = [f"m{j}" for j in range(4)], [f"x{j}" for j in range(4)]
     anf_aggs = [F.bit_or(c).alias(f"_n{j}") for j, c in enumerate(masks)]
     frp_aggs = [F.sum("_" + x).alias("i" + x) for x in xs]
-    # Without size-based broadcasts the small test frames plan as at
-    # scale. The vectors are cached and filled: a filled cache keeps its
-    # hash partitioning, while a localCheckpointed frame reports
-    # UnknownPartitioning on Spark 4.1 (ROADMAP open item).
+
+    def loop_state(df):
+        """A vector laid out and checkpointed as the loops do it."""
+        return superstep_checkpoint(layout_vector(df, n_v, 16), 0)
+
+    def id_partitioned(df):
+        """A filled cache keeps repartition(16, "id"); a localCheckpoint
+        does not on Spark 4.1 (ROADMAP open item 5)."""
+        df = df.repartition(16, "id").persist()
+        df.count()
+        return df
+
+    by_id = "Exchange hashpartitioning(id, 16), ENSURE_REQUIREMENTS"
+    # regime, (BROADCAST_MAX_VERTICES, SMALL_VECTOR_MAX) as regimes() in
+    # the tests sets them, vector layout, exchanges of the join-aggregate
+    # half, exchanges the stitch adds. Without size-based broadcasts the
+    # small test frames plan as at scale.
+    cases = (
+        # vector broadcast in, agg satisfied by the dst-partitioned
+        # cache, small inflow broadcast back onto the state
+        ("broadcast regime: no exchange above the cached edges",
+         (plans.BROADCAST_MAX_VERTICES, plans.SMALL_VECTOR_MAX), loop_state, 0, []),
+        # edges and the checkpointed vector move to the join key,
+        # contributions to dst; the stitch re-exchanges the state by id
+        ("shuffle regime, checkpointed state as in the loops: edges, vector "
+         "and contributions exchanged, the stitch exchanges the state by id",
+         (0, 0), loop_state, 3, [by_id]),
+        # the design target of ROADMAP open item 5: the id-partitioned
+        # vector is not exchanged and the stitch adds nothing
+        ("shuffle regime, id-partitioned state (design target): the stitch "
+         "adds no exchange", (0, 0), id_partitioned, 2, []),
+    )
+    defaults = plans.BROADCAST_MAX_VERTICES, plans.SMALL_VECTOR_MAX
     old_auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    for bc, layout in ((True, lambda df: df.coalesce(1)),
-                       (False, lambda df: df.repartition(16, "id"))):
+    for label, consts, layout, n_half, stitch_adds in cases:
+        plans.BROADCAST_MAX_VERTICES, plans.SMALL_VECTOR_MAX = consts
+        bc = plans.broadcastable(n_v)
+
         def vec(*cols):
-            df = layout(vertices(g).select("id", *cols)).persist()
-            df.count()
-            return df
+            return layout(vertices(g).select("id", *cols))
 
         state = vec(*[_init_mask(j, 42, 24) for j in range(4)])
         x = vec(*[projection_entry(F.col("id"), j, 17).alias(c) for j, c in enumerate(xs)])
@@ -118,23 +149,19 @@ def main() -> None:
         }
         for name, (df, half) in steps.items():
             plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Cartesian" not in plan, name
+            assert "BroadcastNestedLoop" not in plan, name
+            assert plan.count("Window") == 0, (name, plan.count("Window"))
             assert all(m not in plan for m in
-                       ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")), name
-            if bc:
-                # vector broadcast in, agg satisfied by the dst-partitioned
-                # cache, small inflow broadcast back onto the state
-                assert shuffles(df) == [], (name, shuffles(df))
-            else:
-                # edges move to the join key, contributions to dst; the
-                # id-partitioned vector side is not exchanged ...
-                assert len(shuffles(half or df)) == 2, (name, shuffles(half or df))
-                # ... and the stitch adds nothing on the id-partitioned state
-                assert sorted(shuffles(df)) == sorted(shuffles(half or df)), \
-                    (name, shuffles(df))
-        print("broadcast regime: no exchange above the cached edges" if bc else
-              "shuffle regime: the stitch adds no exchange on the id-partitioned "
-              "state", "(anf_hop, fastrp_superstep, hits_half_step), PYTHON-FREE "
-              "(asserted)")
+                       ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                        "PythonRDD")), name
+            got_half = shuffles(half or df)
+            assert len(got_half) == n_half, (name, got_half)
+            want = sorted(got_half + (stitch_adds if half is not None else []))
+            assert sorted(shuffles(df)) == want, (name, shuffles(df))
+        print(label, "(anf_hop, fastrp_superstep, hits_half_step), equi-joins, "
+              "no window, PYTHON-FREE (asserted)")
+    plans.BROADCAST_MAX_VERTICES, plans.SMALL_VECTOR_MAX = defaults
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_auto)
 
     alive = F.broadcast(vertices(g).select("id").coalesce(1).localCheckpoint())
