@@ -8,7 +8,8 @@ EWiseMult/EWiseScale into a dense accumulator ``bcu``.
 
 Spark form: the n x batch fringe is a DataFrame keyed (root, id) — the
 batch dimension is just a second key column, so one join advances ALL
-roots' BFS waves at once (the exact analogue of the batched SpGEMM).
+roots' BFS waves at once (the exact analogue of the batched SpGEMM):
+the forward pass is ``frontier_closure`` keyed by root, summing sigma.
 Unweighted shortest paths (BFS), like the reference.
 """
 
@@ -16,9 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.graph import symmetrize_partitioned, vertices
+from combblas_spark.graph import simple_adjacency, vertices
+from combblas_spark.operators.spmv import frontier_closure
 from combblas_spark.runtime.plans import superstep_checkpoint
 
 
@@ -40,15 +41,8 @@ def betweenness_centrality(
     never exchanged, and the backward wall is dominated by the
     (root, id) expansion."""
     spark = edges.sparkSession
-    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # directed mode must dedup parallel (src,dst) rows too — the
-    # undirected path gets that from symmetrize_partitioned, and
-    # duplicate rows inflate sigma path counts (review r4)
-    e = (edges.select("src", "dst").dropDuplicates(["src", "dst"])
-         .repartition(shuffle_n, "src") if directed
-         else symmetrize_partitioned(edges, "src", shuffle_n).select("src", "dst"))
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    # distinct pairs: duplicate rows would inflate sigma path counts
+    e = simple_adjacency(edges, "src", directed)
     # checkpoint: verts is referenced by the source frontier (roots=None),
     # the final bc stitch, and the normalize count — one distinct, not three
     verts = vertices(edges).localCheckpoint(eager=True)
@@ -61,23 +55,7 @@ def betweenness_centrality(
         )
 
     # ---- forward: level-synchronous batched BFS with path counting
-    levels = fr0.withColumn("level", F.lit(0)).localCheckpoint(eager=True)
-    frontier = levels
-    depth = 0
-    while True:
-        nxt = (
-            e.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy("root", F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(levels.select("root", "id"), ["root", "id"], "left_anti")
-            .withColumn("level", F.lit(depth + 1))
-        )
-        nxt = superstep_checkpoint(nxt, depth)
-        if nxt.isEmpty():
-            break
-        levels = levels.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-        depth += 1
+    levels, depth = frontier_closure(e, fr0, [F.sum("sigma").alias("sigma")], ["root"])
 
     # ---- backward: dependency accumulation from the deepest level up
     delta = None  # (root, id, delta)

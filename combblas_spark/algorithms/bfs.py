@@ -5,12 +5,14 @@ Per superstep the reference runs
     fringe  = SpMV<Select2nd>(A, fringe, indexisvalue)
     fringe  = EWiseMult(fringe, parents, exclude=true)   # drop visited
     parents.Set(fringe)
-which maps 1:1 onto: broadcast/shuffle join frontier with edges ->
-groupBy(dst) min parent -> anti-join visited -> union into parents.
-The frontier is small relative to edges, so it is explicitly broadcast
-when below a threshold (the driver-side analogue of the reference's
-adaptive SpMSpV path, CC.h:1251-1294 / direction-switch heuristic in
-DirOptBFS.cpp:376-443).
+which is ``operators.spmv.frontier_wave``: join the frontier onto the
+cached ``simple_adjacency`` -> groupBy(dst) min parent -> anti-join
+visited; the level is then unioned into the visited set. The frontier
+is broadcast while ``broadcastable`` holds for its row count (the
+driver-side analogue of the reference's adaptive SpMSpV path,
+CC.h:1251-1294). ``_bfs`` keeps its own loop around the wave because it
+alone picks a direction per level (DirOptBFS.cpp:376-443); every other
+traversal runs ``frontier_closure``.
 """
 
 from __future__ import annotations
@@ -19,8 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.graph import symmetrize, symmetrize_partitioned
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.graph import simple_adjacency, symmetrize
+from combblas_spark.operators.spmv import frontier_wave
+from combblas_spark.runtime.plans import broadcastable, counted_checkpoint
 
 
 def _parent_agg(parent_rule: str, seed: str = "bfsrand"):
@@ -38,21 +41,15 @@ def _parent_agg(parent_rule: str, seed: str = "bfsrand"):
     return F.min("src").alias("parent")
 
 
-def _bfs(edges: DataFrame, root: int, directed: bool,
-         broadcast_threshold: int, max_depth: int, want_parents: bool,
-         direction_optimizing: bool = False,
+def _bfs(edges: DataFrame, root: int, directed: bool, max_depth: int,
+         want_parents: bool, direction_optimizing: bool = False,
          bottom_up_fraction: float = 0.05,
          parent_rule: str = "min") -> DataFrame:
     from combblas_spark.graph import vertices
 
-    # src-partitioned adjacency in the same single exchange the
-    # symmetrize dedup costs anyway — every level's frontier join on src
-    # then reads the cache shuffle-free
-    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    adj = (edges.select("src", "dst") if directed
-           else symmetrize_partitioned(edges, "src", shuffle_n).select("src", "dst"))
-    adj = adj.persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
+    # src-partitioned: every level's frontier join on src reads the
+    # cache shuffle-free
+    adj = simple_adjacency(edges, "src", directed)
     spark = edges.sparkSession
     verts = None
     n = None
@@ -61,7 +58,8 @@ def _bfs(edges: DataFrame, root: int, directed: bool,
         n = verts.count()
 
     # visited: (id, level, parent)
-    visited = spark.createDataFrame([(root, 0, root)], "id long, level int, parent long").persist()
+    visited = spark.createDataFrame(
+        [(root, 0, root)], "id long, level int, parent long").localCheckpoint(eager=True)
     frontier = visited.select("id")
     frontier_n = 1
     visited_n = 1
@@ -69,7 +67,6 @@ def _bfs(edges: DataFrame, root: int, directed: bool,
     level = 0
     while frontier_n > 0 and level < max_depth:
         level += 1
-        f = F.broadcast(frontier) if frontier_n <= broadcast_threshold else frontier
         bottom_up = (
             direction_optimizing
             and frontier_n > bottom_up_fraction * n
@@ -80,43 +77,36 @@ def _bfs(edges: DataFrame, root: int, directed: bool,
             # to the UNVISITED set's in-edges, not the frontier's
             # out-edges — filter edges by the (now smaller) unvisited dst
             # side first, then semi-check the src against the frontier.
-            # Broadcast the unvisited set only below the same ABSOLUTE
-            # threshold as the frontier: "smaller than 8x frontier" can
-            # still be hundreds of millions of ids at web scale.
+            # Each side is broadcast only while it is broadcastable:
+            # "smaller than 8x frontier" can still be hundreds of
+            # millions of ids at web scale.
             unvisited = (
                 verts.join(visited.select("id"), "id", "left_anti")
                 .withColumnRenamed("id", "dst")
             )
-            if (n - visited_n) <= broadcast_threshold:
+            if broadcastable(n - visited_n):
                 unvisited = F.broadcast(unvisited)
-            cand = adj.join(unvisited, "dst")
+            f = F.broadcast(frontier) if broadcastable(frontier_n) else frontier
             nxt = (
-                cand.join(f.withColumnRenamed("id", "src"), "src", "left_semi")
+                adj.join(unvisited, "dst")
+                .join(f.withColumnRenamed("id", "src"), "src", "left_semi")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(_parent_agg(parent_rule))
-                .withColumn("level", F.lit(level))
-                .select("id", "level", "parent")
             )
         else:
-            nxt = (
-                adj.join(f.withColumnRenamed("id", "src"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(_parent_agg(parent_rule))
-                .join(visited.select("id"), "id", "left_anti")
-                .withColumn("level", F.lit(level))
-                .select("id", "level", "parent")
-            )
-        nxt = superstep_checkpoint(nxt, level)
-        frontier_n = nxt.count()
+            nxt = frontier_wave(adj, frontier, visited, [_parent_agg(parent_rule)],
+                                broadcast=broadcastable(frontier_n))
+        nxt, frontier_n = counted_checkpoint(
+            nxt.withColumn("level", F.lit(level)).select("id", "level", "parent"), level)
         if frontier_n == 0:
             break
-        new_visited = visited.unionByName(nxt).persist()
-        visited_n = new_visited.count()
-        visited.unpersist()
-        visited = new_visited
+        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited_n += frontier_n
         frontier = nxt.select("id")
 
     adj.unpersist()
+    if verts is not None:
+        verts.unpersist()
     if want_parents:
         return visited.select("id", "parent")
     if want_parents is None:
@@ -125,7 +115,7 @@ def _bfs(edges: DataFrame, root: int, directed: bool,
 
 
 def bfs_levels(edges: DataFrame, root: int, directed: bool = False,
-               broadcast_threshold: int = 1_000_000, max_depth: int = 1000,
+               max_depth: int = 1000,
                direction_optimizing: bool = False) -> DataFrame:
     """(id, level) for vertices reachable from root.
 
@@ -133,13 +123,11 @@ def bfs_levels(edges: DataFrame, root: int, directed: bool = False,
     frontier is a large fraction of the graph and few vertices remain
     unvisited (DirOptBFS.cpp:376-443 heuristic) — identical results
     (min-id parents), different join order."""
-    return _bfs(edges, root, directed, broadcast_threshold, max_depth, False,
-                direction_optimizing)
+    return _bfs(edges, root, directed, max_depth, False, direction_optimizing)
 
 
 def bfs_parents(edges: DataFrame, root: int, directed: bool = False,
-                broadcast_threshold: int = 1_000_000, max_depth: int = 1000,
-                parent_rule: str = "min") -> DataFrame:
+                max_depth: int = 1000, parent_rule: str = "min") -> DataFrame:
     """(id, parent) — the Graph500 parent tree (root's parent is itself,
     matching parents.Set semantics TopDownBFS.cpp:433).
 
@@ -149,8 +137,7 @@ def bfs_parents(edges: DataFrame, root: int, directed: bool = False,
     random priorities), with md5-seeded priorities so the tree is
     reproducible and oracle-checkable. Either rule yields a valid
     kernel-2 tree (validate_bfs_tree passes); levels are identical."""
-    return _bfs(edges, root, directed, broadcast_threshold, max_depth, True,
-                parent_rule=parent_rule)
+    return _bfs(edges, root, directed, max_depth, True, parent_rule=parent_rule)
 
 
 def single_child_frontier(tree: DataFrame, root: int,
@@ -173,10 +160,10 @@ def single_child_frontier(tree: DataFrame, root: int,
 
 
 def bfs_tree(edges: DataFrame, root: int, directed: bool = False,
-             broadcast_threshold: int = 1_000_000, max_depth: int = 1000) -> DataFrame:
+             max_depth: int = 1000) -> DataFrame:
     """(id, level, parent) — full kernel-2 output, the input shape
     ``validate_bfs_tree`` checks."""
-    return _bfs(edges, root, directed, broadcast_threshold, max_depth, None)
+    return _bfs(edges, root, directed, max_depth, None)
 
 
 def validate_bfs_tree(edges: DataFrame, tree: DataFrame, root: int,

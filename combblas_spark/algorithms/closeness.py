@@ -13,33 +13,18 @@ the closeness column uses the reached-count numerator so partial
 reachability does not inflate scores.
 
 Scale: the batch dimension is a key column — one join advances all
-roots' waves (identical shape to betweenness's forward pass); the
-final score is one groupBy(root) over the accumulated level table.
+roots' waves (``multi_source_levels``: the ``frontier_closure`` keyed
+by root that betweenness's forward pass also runs); the final score is
+one groupBy(root) over the accumulated level table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.graph import vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
-
-
-def _prep_bfs_edges(edges: DataFrame, directed: bool) -> DataFrame:
-    """Deduped (and, for undirected, symmetrized) edge set partitioned
-    by src and persisted — the BFS-ready layout. Caller owns the
-    unpersist."""
-    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).dropDuplicates(["src", "dst"])
-    e = e.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    return e
+from combblas_spark.graph import simple_adjacency, vertices
+from combblas_spark.operators.spmv import frontier_closure
 
 
 def multi_source_levels(
@@ -50,15 +35,15 @@ def multi_source_levels(
     prepped: DataFrame | None = None,
 ) -> DataFrame:
     """Batched multi-root BFS levels: one (root, id, level) row per
-    (root, reached vertex) — the wave loop shared by
-    closeness_centrality and landmark_distances (identical shape to
-    betweenness's forward pass; all roots' waves ride ONE join +
-    dedup + anti-join per depth). roots=None starts a wave from every
-    vertex. ``max_hops`` caps the depth (None = run to fixpoint);
-    ``prepped`` reuses a _prep_bfs_edges result the caller already
-    built (and owns) instead of symmetrizing again."""
+    (root, reached vertex) — the traversal shared by
+    closeness_centrality and landmark_distances. All roots' waves ride
+    one ``frontier_closure`` keyed by ``root`` (the same closure as
+    betweenness's forward pass, minus path counts). roots=None starts a
+    wave from every vertex. ``max_hops`` caps the depth (None = run to
+    fixpoint); ``prepped`` reuses a ``simple_adjacency(edges, "src",
+    directed)`` the caller already built (and owns)."""
     spark = edges.sparkSession
-    e = prepped if prepped is not None else _prep_bfs_edges(edges, directed)
+    e = prepped if prepped is not None else simple_adjacency(edges, "src", directed)
 
     if roots is None:
         fr0 = vertices(edges).select(F.col("id").alias("root"), F.col("id"))
@@ -66,23 +51,7 @@ def multi_source_levels(
         fr0 = spark.createDataFrame(
             [(int(r), int(r)) for r in roots], "root long, id long")
 
-    levels = fr0.withColumn("level", F.lit(0)).localCheckpoint(eager=True)
-    frontier = levels
-    depth = 0
-    while max_hops is None or depth < max_hops:
-        nxt = (
-            e.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("root", F.col("dst").alias("id"))
-            .dropDuplicates(["root", "id"])
-            .join(levels.select("root", "id"), ["root", "id"], "left_anti")
-            .withColumn("level", F.lit(depth + 1))
-        )
-        nxt = superstep_checkpoint(nxt, depth)
-        if nxt.isEmpty():
-            break
-        levels = levels.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-        depth += 1
+    levels, _ = frontier_closure(e, fr0, keys=["root"], max_depth=max_hops)
     if prepped is None:
         e.unpersist()
     return levels
@@ -202,11 +171,9 @@ def landmark_distances(
     if n_landmarks < 1:
         raise ValueError(
             f"landmark_distances: n_landmarks must be >= 1, got {n_landmarks}")
-    # degree rank over the loop-free undirected view; self-loops never
-    # affect BFS levels, and for directed=True the prepped set is a
-    # superset ordering-wise identical on loop-free fixtures.
-    e = _prep_bfs_edges(
-        edges.where(F.col("src") != F.col("dst")), directed=directed)
+    # degree rank over the loop-free undirected view (self-loops never
+    # affect BFS levels; simple_adjacency drops them)
+    e = simple_adjacency(edges, "src", directed)
     deg_side = (
         e if not directed else
         e.unionByName(e.select(F.col("dst").alias("src"),

@@ -22,9 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.graph import symmetrize_partitioned, vertices
+from combblas_spark.graph import simple_adjacency, vertices
 from combblas_spark.runtime.plans import superstep_checkpoint
 
 
@@ -41,15 +40,11 @@ def jp_coloring(
     breaks the totality contract).
     """
     spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # self-loops are IGNORED (a vertex is not its own neighbor): left in,
     # a loop vertex would see its own priority as an uncolored-neighbor
     # max and could never win a wave — the run would falsely hit the
     # round cap. Loop-only vertices still get a color (wave 0).
-    sym = (symmetrize_partitioned(edges, "src", shuffle_n)
-           .filter(F.col("src") != F.col("dst"))
-           .select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK))
-    sym.count()
+    sym = simple_adjacency(edges, "src")
 
     # ONE fixed priority per vertex (not per round — that is what makes
     # this Jones-Plassmann rather than iterated Luby)

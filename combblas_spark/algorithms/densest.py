@@ -41,11 +41,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.portable import pround
 
-from combblas_spark.graph import symmetrize_partitioned, vertices
+from combblas_spark.graph import simple_adjacency, vertices
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
@@ -67,13 +66,7 @@ def densest_subgraph(
         raise ValueError(f"eps must be > 0, got {eps}")
     spark = edges.sparkSession
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        symmetrize_partitioned(edges, "dst", shuffle_n)
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    sym = simple_adjacency(edges, "dst")
 
     verts = vertices(edges).select("id")
     n0 = verts.count()

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.graph import symmetrize_partitioned, vertices
+from combblas_spark.graph import simple_adjacency, vertices
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
@@ -104,15 +104,7 @@ def k_core(
 ) -> DataFrame:
     """Returns (id) — the vertices of the k-core of the undirected,
     de-looped graph underlying ``edges``. Empty result if no k-core."""
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        symmetrize_partitioned(edges, "dst", shuffle_n)
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    sym = simple_adjacency(edges, "dst")
     return _peel_loop(edges, sym, F.count(F.lit(1)), k, "k_core", max_rounds)
 
 
@@ -189,15 +181,7 @@ def core_numbers(
     on the cached dst partitioning."""
     from pyspark.sql import Window
 
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        symmetrize_partitioned(edges, "dst", shuffle_n)
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
+    sym = simple_adjacency(edges, "dst")
 
     core = (
         sym.groupBy(F.col("dst").alias("id"))

@@ -32,9 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.graph import symmetrize_partitioned
+from combblas_spark.graph import simple_adjacency
 from combblas_spark.runtime.plans import superstep_checkpoint
 
 
@@ -47,12 +46,7 @@ def k_tips(edges: DataFrame, l: int = 4) -> DataFrame:
     the reference's -1-initialized TipSources/TipDests vectors
     (KTipsTest.cpp:110-113)."""
     spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = (symmetrize_partitioned(edges, "src", shuffle_n)
-           .where(F.col("src") != F.col("dst"))
-           .select("src", "dst")
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    sym.count()
+    sym = simple_adjacency(edges, "src")
 
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("d"))
     tips = deg.where(F.col("d") == 1).select(F.col("id").alias("tip"))

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.portable import pround
 
@@ -44,17 +43,9 @@ def adamic_adar(
     explain audit uses this) and the caller must consume the result
     promptly and unpersist nothing.
     """
-    from combblas_spark.graph import symmetrize_partitioned
+    from combblas_spark.graph import simple_adjacency
 
-    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # one fused exchange (dedup rides the src layout); loop filter is a
-    # narrow op on top, partitioning preserved
-    sym = (
-        symmetrize_partitioned(edges, "src", shuffle_n)
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sym = simple_adjacency(edges, "src")
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
     centers = deg if max_center_degree is None else deg.filter(
         F.col("deg") <= max_center_degree)

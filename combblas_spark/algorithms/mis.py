@@ -21,9 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.graph import symmetrize_partitioned, vertices
+from combblas_spark.graph import simple_adjacency, vertices
 from combblas_spark.runtime.plans import superstep_checkpoint
 
 
@@ -39,13 +38,9 @@ def maximal_independent_set(
     would see its own priority as a neighbor minimum, never win a
     round, and the run would falsely exhaust max_iter.
     """
-    # src-partitioned in the same single exchange the dedup costs anyway:
-    # every round's sym-join on src then reads the cache without a shuffle
-    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sym = (symmetrize_partitioned(edges, "src", shuffle_n)
-           .filter(F.col("src") != F.col("dst"))
-           .select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK))
-    sym.count()
+    # src-partitioned: every round's sym-join on src reads the cache
+    # without a shuffle
+    sym = simple_adjacency(edges, "src")
 
     cand = vertices(edges).localCheckpoint(eager=True)
     spark = edges.sparkSession

@@ -18,7 +18,8 @@ is the standard label-propagation formulation for BSP engines:
        reversed edges restricted to vertices of the same color; the
        visited set is EXACTLY SCC(r) (classic FW-BW intersection:
        within the class everything is forward-reachable from r).
-       All roots advance in one frontier keyed (color, id).
+       All roots advance in one frontier keyed (color, id): one
+       ``frontier_closure`` keyed by color, ``within`` the colouring.
     4. Peel every discovered SCC (one per color class, many per
        round), relabel as min member id, repeat on the remainder.
 
@@ -38,7 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.graph import vertices
+from combblas_spark.graph import simple_adjacency, vertices
+from combblas_spark.operators.spmv import frontier_closure
 from combblas_spark.runtime.plans import superstep_checkpoint
 
 
@@ -62,11 +64,7 @@ def strongly_connected_components(
     spark = edges.sparkSession
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = (edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-         .dropDuplicates(["src", "dst"])
-         .repartition(shuffle_n, "src")
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    e.count()
+    e = simple_adjacency(edges, "src", directed=True)
     act = vertices(edges).select("id").localCheckpoint(eager=True)
     done: DataFrame | None = None  # (id, scc)
     step = 0
@@ -150,29 +148,10 @@ def strongly_connected_components(
         # ---- 3. constrained backward reach from every color root
         # frontier keyed (color, id); expand along REVERSED edges into
         # same-colored vertices only
-        visited = (
-            c.where(F.col("id") == F.col("color"))
-            .select("color", "id").localCheckpoint(eager=True)
-        )
-        frontier = visited
-        for _b in range(max_inner):
-            step += 1
-            nxt = (
-                e.join(frontier.select(F.col("id").alias("dst"),
-                                       F.col("color")), "dst")
-                .select(F.col("src").alias("id"), "color")
-                .join(c.withColumnRenamed("color", "_cv"), "id")
-                .where(F.col("_cv") == F.col("color"))
-                .select("color", "id")
-                .dropDuplicates(["color", "id"])
-                .join(visited, ["color", "id"], "left_anti")
-            )
-            nxt = superstep_checkpoint(nxt, step)
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        else:
+        roots = c.where(F.col("id") == F.col("color")).select("color", "id")
+        visited, depth = frontier_closure(e, roots, keys=["color"], on="dst", out="src",
+                                          within=c, max_depth=max_inner)
+        if depth == max_inner:
             raise RuntimeError(
                 f"scc: backward reach did not close in "
                 f"max_inner={max_inner} steps; raise max_inner "
@@ -205,12 +184,10 @@ def bow_tie(
 
     IN  = reaches the core, not in it;  OUT = reached from the core;
     TENDRIL = weakly connected to the core but neither (includes the
-    tubes); DISCONNECTED = everything else. Computed as two frontier
-    walks (forward/backward from the core) + one undirected
-    connectivity check — all reusing the SCC result, no per-vertex
-    driver work."""
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    tubes); DISCONNECTED = everything else. Computed as three
+    ``frontier_closure`` calls (forward and backward from the core,
+    then undirected from everything they reached) — all reusing the
+    SCC result, no per-vertex driver work."""
     if scc is None:
         scc = strongly_connected_components(edges)
     scc = scc.persist(StorageLevel.MEMORY_AND_DISK)
@@ -222,60 +199,15 @@ def bow_tie(
     core = scc.join(F.broadcast(top), scc["scc"] == F.col("_core")) \
               .select("id").localCheckpoint(eager=True)
 
-    e = (edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-         .dropDuplicates(["src", "dst"])
-         .repartition(shuffle_n, "src")
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    e.count()
-
-    def _reach(start: DataFrame, reversed_: bool) -> DataFrame:
-        """Multi-source frontier closure along (reversed) edges."""
-        seen = start.localCheckpoint(eager=True)
-        fr = seen
-        it = 0
-        while True:
-            it += 1
-            if reversed_:
-                nxt = (e.join(fr.select(F.col("id").alias("dst")), "dst")
-                       .select(F.col("src").alias("id")))
-            else:
-                nxt = (e.join(fr.select(F.col("id").alias("src")), "src")
-                       .select(F.col("dst").alias("id")))
-            nxt = nxt.distinct().join(seen, "id", "left_anti")
-            nxt = superstep_checkpoint(nxt, it)
-            if nxt.isEmpty():
-                break
-            seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-            fr = nxt
-        return seen
-
-    fwd = _reach(core, reversed_=False)   # core + OUT
-    bwd = _reach(core, reversed_=True)    # core + IN
-
-    # weak connectivity to the core: frontier walk on the symmetrized
+    e = simple_adjacency(edges, "src", directed=True)
+    sym = simple_adjacency(edges, "src")
+    fwd, _ = frontier_closure(e, core)                          # core + OUT
+    bwd, _ = frontier_closure(e, core, on="dst", out="src")     # core + IN
+    # weak connectivity to the core: the closure on the symmetrized
     # graph seeded with core|fwd|bwd (anything already classified)
-    seed = fwd.unionByName(bwd).distinct()
-    sym = e.unionByName(e.select(F.col("dst").alias("src"),
-                                 F.col("src").alias("dst")))
-    e_dir = e
-
-    def _weak(start: DataFrame) -> DataFrame:
-        seen = start.localCheckpoint(eager=True)
-        fr = seen
-        it = 0
-        while True:
-            it += 1
-            nxt = (sym.join(fr.select(F.col("id").alias("src")), "src")
-                   .select(F.col("dst").alias("id"))
-                   .distinct().join(seen, "id", "left_anti"))
-            nxt = superstep_checkpoint(nxt, it + 1000)
-            if nxt.isEmpty():
-                break
-            seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-            fr = nxt
-        return seen
-
-    weak = _weak(seed)
+    weak, _ = frontier_closure(
+        sym, fwd.select("id").unionByName(bwd.select("id")).distinct())
+    sym.unpersist()
 
     out = (
         scc.select("id")
@@ -294,7 +226,7 @@ def bow_tie(
     )
     out = out.localCheckpoint(eager=True)
     scc.unpersist()
-    e_dir.unpersist()
+    e.unpersist()
     return out
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 # Knuth multiplicative hash constant — used by the deterministic
 # events->edges derivation (kept SQL-expressible so the DuckDB oracle
@@ -86,6 +87,26 @@ def symmetrize_partitioned(edges: DataFrame, key: str, num_partitions: int) -> D
         .dropDuplicates(["src", "dst"])
         .withColumn("val", F.lit(1.0))
     )
+
+
+def simple_adjacency(edges: DataFrame, key: str, directed: bool = False) -> DataFrame:
+    """The distinct, loop-free (src, dst) pairs of ``edges``, symmetrized
+    unless ``directed``, hash-partitioned by ``key`` in one exchange
+    (``symmetrize_partitioned``; directed: the repartition comes first
+    so the dedup rides it), persisted MEMORY_AND_DISK and counted.
+    Self-loops are dropped: a self-loop never changes a BFS level, a
+    path count, an SCC, a bow-tie region, a k-core or a colouring. The
+    caller owns the unpersist."""
+    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if directed:
+        adj = (edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
+               .repartition(shuffle_n, key).dropDuplicates(["src", "dst"]))
+    else:
+        adj = (symmetrize_partitioned(edges, key, shuffle_n)
+               .filter(F.col("src") != F.col("dst")).select("src", "dst"))
+    adj = adj.persist(StorageLevel.MEMORY_AND_DISK)
+    adj.count()
+    return adj
 
 
 def vertices(edges: DataFrame) -> DataFrame:

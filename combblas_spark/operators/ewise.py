@@ -62,14 +62,10 @@ def prune_column(edges: DataFrame, pvals: DataFrame,
     SpParMat.cpp:2578): keep edge iff keep(edge.val, pvals[dst])."""
     p = pvals.select(F.col("id").alias("dst"), F.col("val").alias("_pval"))
     return (
-        edges.join(F.broadcast(p) if _small(pvals) else p, "dst", "inner")
+        edges.join(p, "dst", "inner")
         .filter(keep(F.col("val"), F.col("_pval")))
         .drop("_pval")
     )
-
-
-def _small(df: DataFrame) -> bool:
-    return False  # conservatively let AQE decide; hook for future stats
 
 
 # ------------------------------------------------------------------ EWise ops

@@ -24,6 +24,13 @@ CC.h:1251-1294); otherwise it is a shuffle join that AQE plans.
 loops (pagerank, katz, fastrp, ANF, ...): the regime choice and the
 stitch rule live there, not in each loop. ``spmv_agg`` and ``stitch``
 are its two halves for loops that need only one of them.
+
+``frontier_wave`` is one level of the BFS family's traversal (the
+masked SpMSpV of TopDownBFS.cpp:435-447, keyed by a batch column for
+the batched waves of BetwCent.cpp:155-218), and ``frontier_closure``
+the level-synchronous loop around it: the frontier regime choice, the
+per-level checkpoint and the stop rule live there, not in each
+traversal.
 """
 
 from __future__ import annotations
@@ -32,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.operators.semiring import Semiring, PLUS_TIMES
-from combblas_spark.runtime.plans import small_vector
+from combblas_spark.runtime.plans import broadcastable, counted_checkpoint, small_vector
 
 
 def spmv(
@@ -66,21 +73,23 @@ def spmv(
 
 
 def spmv_agg(edges: DataFrame, x: DataFrame, aggs: list[Column], broadcast: bool,
-             on: str = "src", out: str = "dst") -> DataFrame:
+             on: str = "src", out: str = "dst", keys: list[str] = ()) -> DataFrame:
     """Join-aggregate half of a superstep: join the vertex vector ``x``
     (``id`` plus value columns) onto ``edges[on]`` and aggregate ``aggs``
-    grouped by ``edges[out]``, returned as ``id``. The defaults move
-    values along edge direction (y = A^T x); ``on="dst", out="src"``
-    gathers the other way (y = A x). ``broadcast`` is the superstep
+    grouped by ``keys`` and ``edges[out]``, returned as ``id``. The
+    defaults move values along edge direction (y = A^T x);
+    ``on="dst", out="src"`` gathers the other way (y = A x). ``keys``
+    are batch columns of ``x`` (a BFS root, an SCC colour): one join
+    advances every batch member at once. Empty ``aggs`` returns the
+    distinct (keys, id) pairs reached. ``broadcast`` is the superstep
     regime: the vector is broadcast into the join (AllGather), else it
     meets the edges by shuffle (Alltoall). Over edges cached
     hash-partitioned by ``out`` the broadcast regime moves no edges."""
     xv = x.withColumnRenamed("id", on)
-    return (
-        edges.join(F.broadcast(xv) if broadcast else xv, on)
-        .groupBy(F.col(out).alias("id"))
-        .agg(*aggs)
-    )
+    joined = edges.join(F.broadcast(xv) if broadcast else xv, on)
+    if not aggs:  # GroupedData.agg() rejects an empty list
+        return joined.select(*keys, F.col(out).alias("id")).distinct()
+    return joined.groupBy(*keys, F.col(out).alias("id")).agg(*aggs)
 
 
 def stitch(state: DataFrame, inflow: DataFrame, n: int, broadcast: bool) -> DataFrame:
@@ -104,6 +113,50 @@ def spmv_step(edges: DataFrame, x: DataFrame, aggs: list[Column], state: DataFra
     ``n``-row ``state``. Returns the state's columns plus the ``aggs``
     columns, NULL where no edge delivered a value."""
     return stitch(state, spmv_agg(edges, x, aggs, broadcast), n, broadcast)
+
+
+def frontier_wave(adj: DataFrame, frontier: DataFrame, visited: DataFrame,
+                  aggs: list[Column], keys: list[str] = (), broadcast: bool = False,
+                  on: str = "src", out: str = "dst",
+                  within: DataFrame | None = None) -> DataFrame:
+    """One level of a traversal: ``fringe = SpMV(A, fringe)`` then
+    ``EWiseMult(fringe, visited, exclude=true)`` (TopDownBFS.cpp:435-447).
+    ``spmv_agg`` moves the ``frontier`` (keys, id, value columns) along
+    ``adj`` and aggregates ``aggs`` per (keys, id); a ``within`` frame
+    (keys, id) then keeps only the pairs it holds (SCC's same-colour
+    rule), and the (keys, id) pairs of ``visited`` are dropped."""
+    by = [*keys, "id"]
+    nxt = spmv_agg(adj, frontier, aggs, broadcast, on, out, keys)
+    if within is not None:
+        nxt = nxt.join(within.select(*by), by, "left_semi")
+    return nxt.join(visited.select(*by), by, "left_anti")
+
+
+def frontier_closure(adj: DataFrame, start: DataFrame, aggs: list[Column] = (),
+                     keys: list[str] = (), on: str = "src", out: str = "dst",
+                     within: DataFrame | None = None,
+                     max_depth: int | None = None) -> tuple[DataFrame, int]:
+    """Level-synchronous closure from ``start`` (keys, id, value
+    columns): ``frontier_wave`` per level until a wave is empty or
+    ``max_depth`` levels ran. Returns (visited, depth): ``visited`` is
+    every reached (keys, id) with its value columns and a ``level``
+    column (``start`` at 0), ``depth`` the number of non-empty waves.
+
+    Each level broadcasts the frontier while ``broadcastable`` holds for
+    its row count, and reads that count from an Observation on the
+    level's checkpoint job: no separate count or emptiness job."""
+    visited, n = counted_checkpoint(start.withColumn("level", F.lit(0)), 0)
+    frontier, depth = visited, 0
+    while max_depth is None or depth < max_depth:
+        nxt, n = counted_checkpoint(
+            frontier_wave(adj, frontier, visited, aggs, keys, broadcastable(n), on, out, within)
+            .withColumn("level", F.lit(depth + 1)), depth + 1)
+        if n == 0:
+            break
+        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        frontier = nxt
+        depth += 1
+    return visited, depth
 
 
 def salted_spmv(

@@ -36,7 +36,8 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 STATS_RESET_BITS = 8192
 
@@ -115,6 +116,14 @@ def superstep_checkpoint(df: DataFrame, iteration: int) -> DataFrame:
     elif bits > STATS_RESET_BITS:
         out = reset_plan_stats(out)
     return out
+
+
+def counted_checkpoint(df: DataFrame, iteration: int) -> tuple[DataFrame, int]:
+    """``superstep_checkpoint`` plus the row count, read from an
+    Observation on the checkpoint job itself: no separate count job."""
+    obs = Observation()
+    out = superstep_checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")), iteration)
+    return out, obs.get["n"]
 
 
 # Vertex-sized frames (state, label and rank vectors) at or below this

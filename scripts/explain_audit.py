@@ -78,15 +78,18 @@ def main() -> None:
     print("dictionary plan + lineage: PYTHON-FREE (asserted)")
 
     print("=== 5. the library's superstep vector exchange in both regimes "
-          "(ANF hop, HITS half-step, FastRP superstep) and a k-core round ===")
+          "(ANF hop, HITS half-step, FastRP superstep, BFS-family wave) and a "
+          "k-core round ===")
     from combblas_spark.algorithms.anf import _init_mask, _or_hop
     from combblas_spark.algorithms.embeddings import projection_entry
-    from combblas_spark.graph import symmetrize_partitioned
+    from combblas_spark.graph import simple_adjacency, symmetrize_partitioned
+    from combblas_spark.operators.spmv import frontier_wave
     from combblas_spark.runtime import plans
     from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
 
     sym = symmetrize_partitioned(g, "dst", 16).select("src", "dst").persist()
     sym.count()
+    adj_src = simple_adjacency(g, "src", directed=True)
     e_dst = g.select("src", "dst").repartition(16, "dst").persist()
     e_dst.count()
     n_v = vertices(g).count()
@@ -104,6 +107,16 @@ def main() -> None:
         df = df.repartition(16, "id").persist()
         df.count()
         return df
+
+    def assert_step_shape(name, df):
+        """Equi-joins only, no window, no Python evaluation."""
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Cartesian" not in plan, name
+        assert "BroadcastNestedLoop" not in plan, name
+        assert plan.count("Window") == 0, (name, plan.count("Window"))
+        assert all(m not in plan for m in
+                   ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                    "PythonRDD")), name
 
     by_id = "Exchange hashpartitioning(id, 16), ENSURE_REQUIREMENTS"
     # regime, (BROADCAST_MAX_VERTICES, SMALL_VECTOR_MAX) as regimes() in
@@ -148,21 +161,49 @@ def main() -> None:
                                         [F.sum("v").alias("v")], bc), None),
         }
         for name, (df, half) in steps.items():
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert "Cartesian" not in plan, name
-            assert "BroadcastNestedLoop" not in plan, name
-            assert plan.count("Window") == 0, (name, plan.count("Window"))
-            assert all(m not in plan for m in
-                       ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                        "PythonRDD")), name
+            assert_step_shape(name, df)
             got_half = shuffles(half or df)
             assert len(got_half) == n_half, (name, got_half)
             want = sorted(got_half + (stitch_adds if half is not None else []))
             assert sorted(shuffles(df)) == want, (name, shuffles(df))
         print(label, "(anf_hop, fastrp_superstep, hits_half_step), equi-joins, "
               "no window, PYTHON-FREE (asserted)")
+        if layout is id_partitioned:
+            continue
+        # the BFS family's wave over src-partitioned simple adjacency, a
+        # frontier checkpointed as frontier_closure checkpoints it.
+        # Keyed (closeness): broadcast regime, the (root, id) aggregation
+        # and the visited anti-join; shuffle regime also the frontier to
+        # src. Reversed with within (SCC): broadcast regime, the
+        # aggregation, the colour semi-join and the visited anti-join;
+        # shuffle regime also the edges and the frontier to dst.
+        start = vertices(g).select(F.col("id").alias("root"), "id", F.col("id").alias("color"))
+        fr = start.withColumn("level", F.lit(0)).localCheckpoint(eager=True)
+        colour = vertices(g).select("id", F.col("id").alias("color")).localCheckpoint(eager=True)
+        waves = {
+            "closeness_wave": (frontier_wave(adj_src, fr.drop("color"), fr, [], ["root"], bc),
+                               2 if bc else 3),
+            "scc_backward_wave": (frontier_wave(adj_src, fr.drop("root"), fr, [], ["color"], bc,
+                                                on="dst", out="src", within=colour),
+                                  3 if bc else 5),
+        }
+        for name, (df, n_ex) in waves.items():
+            assert_step_shape(name, df)
+            assert len(shuffles(df)) == n_ex, (name, shuffles(df))
+            print(f"{name}: {n_ex} exchanges, equi-joins, no window, PYTHON-FREE (asserted)")
     plans.BROADCAST_MAX_VERTICES, plans.SMALL_VECTOR_MAX = defaults
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_auto)
+
+    # simple_adjacency: distinct loop-free pairs in ONE exchange, by key,
+    # from edges with no known partitioning
+    raw = g.select("src", "dst").localCheckpoint()
+    for key, directed in (("src", True), ("src", False), ("dst", True), ("dst", False)):
+        adj = simple_adjacency(raw, key, directed)
+        adj.unpersist()
+        got = shuffles(adj.select("src", "dst"))
+        assert got == [f"Exchange hashpartitioning({key}, 16), REPARTITION_BY_NUM"], (
+            key, directed, got)
+    print("simple_adjacency: one Exchange hashpartitioning(key) (asserted)")
 
     alive = F.broadcast(vertices(g).select("id").coalesce(1).localCheckpoint())
     kcore_round = (

@@ -476,10 +476,12 @@ def bfs_oracle(edges, root, n):
     return dist
 
 
-def test_bfs_levels(spark):
+def test_bfs_levels(spark, monkeypatch):
     edges = [(0, 1), (1, 2), (2, 3), (3, 4), (5, 6)]
-    got = {r["id"]: r["level"] for r in bfs_levels(df_edges(spark, edges), root=0).collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4}
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: r["level"]
+               for r in bfs_levels(df_edges(spark, edges), root=0).collect()}
+        assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4}, regime
 
 
 def test_bfs_parents_valid_tree(spark):
@@ -573,7 +575,7 @@ def _brandes_oracle(adj, n):
     return [b / 2.0 for b in bc]
 
 
-def test_betweenness_vs_brandes_oracle(spark):
+def test_betweenness_vs_brandes_oracle(spark, monkeypatch):
     from combblas_spark.algorithms.betweenness import betweenness_centrality
 
     triples = [(0, 1), (1, 2), (2, 3), (3, 4), (1, 3), (4, 5), (0, 5), (2, 6)]
@@ -584,10 +586,11 @@ def test_betweenness_vs_brandes_oracle(spark):
     expected = _brandes_oracle(adj, n)
 
     g = df_edges(spark, triples)
-    got = {r["id"]: r["bc"] for r in betweenness_centrality(g).collect()}
-    assert set(got) == set(range(n))
-    for i in range(n):
-        assert got[i] == pytest.approx(expected[i], abs=1e-9)
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: r["bc"] for r in betweenness_centrality(g).collect()}
+        assert set(got) == set(range(n)), regime
+        for i in range(n):
+            assert got[i] == pytest.approx(expected[i], abs=1e-9), regime
 
 
 def test_betweenness_sampled_roots(spark):
@@ -1280,32 +1283,64 @@ def _tarjan_scc(nodes, E):
     return out
 
 
-def test_scc_vs_tarjan(spark):
+def test_scc_vs_tarjan(spark, monkeypatch):
     """Trim+coloring+backward-reach SCC matches Tarjan labels (min
     member id) on random directed graphs across densities."""
     from combblas_spark.algorithms.scc import strongly_connected_components
 
-    for seed, m in [(3, 25), (4, 60), (5, 110)]:
-        E = _rand_directed_edges(seed, n=18, m=m)
-        nodes = sorted({x for e in E for x in e})
-        expect = _tarjan_scc(nodes, E)
-        got = {r["id"]: r["scc"]
-               for r in strongly_connected_components(
-                   df_edges(spark, E)).collect()}
-        assert got == expect, (seed, got, expect)
+    for regime in regimes(monkeypatch):
+        for seed, m in [(3, 25), (4, 60), (5, 110)]:
+            E = _rand_directed_edges(seed, n=18, m=m)
+            nodes = sorted({x for e in E for x in e})
+            expect = _tarjan_scc(nodes, E)
+            got = {r["id"]: r["scc"]
+                   for r in strongly_connected_components(
+                       df_edges(spark, E)).collect()}
+            assert got == expect, (regime, seed, got, expect)
 
 
-def test_bowtie_regions(spark):
+def test_bowtie_regions(spark, monkeypatch):
     """Hand graph: 3-cycle core, OUT 2-cycle, a tendril hanging off
     OUT, and disconnected pieces (incl. a self-loop singleton)."""
     from combblas_spark.algorithms.scc import bow_tie
 
     E = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 3), (5, 3),
          (6, 6), (7, 8), (9, 0)]
-    bt = {r["id"]: r["region"] for r in bow_tie(df_edges(spark, E)).collect()}
-    assert bt == {0: "CORE", 1: "CORE", 2: "CORE", 3: "OUT", 4: "OUT",
-                  5: "TENDRIL", 6: "DISCONNECTED", 7: "DISCONNECTED",
-                  8: "DISCONNECTED", 9: "IN"}, bt
+    for regime in regimes(monkeypatch):
+        bt = {r["id"]: r["region"] for r in bow_tie(df_edges(spark, E)).collect()}
+        assert bt == {0: "CORE", 1: "CORE", 2: "CORE", 3: "OUT", 4: "OUT",
+                      5: "TENDRIL", 6: "DISCONNECTED", 7: "DISCONNECTED",
+                      8: "DISCONNECTED", 9: "IN"}, (regime, bt)
+
+
+def test_traversal_id_offset_invariant(spark):
+    """BFS levels, closeness, betweenness, SCC and the bow-tie answer
+    the same on a random graph and on the same graph with every id
+    + 2^60, once shifted back: no id passes through a double or any
+    arithmetic that loses its low bits."""
+    from combblas_spark.algorithms.betweenness import betweenness_centrality
+    from combblas_spark.algorithms.closeness import closeness_centrality
+    from combblas_spark.algorithms.scc import bow_tie, strongly_connected_components
+
+    E = _rand_directed_edges(31, n=16, m=40) + [(3, 3)]
+    runs = []
+    for off in (0, 1 << 60):
+        g = df_edges(spark, [(s + off, d + off) for s, d in E])
+        cl = closeness_centrality(g).collect()
+        runs.append({
+            "bfs": {r["id"] - off: r["level"] for r in bfs_levels(g, off).collect()},
+            "harmonic": {r["id"] - off: r["harmonic"] for r in cl},
+            "closeness": {r["id"] - off: r["closeness"] for r in cl},
+            "bc": {r["id"] - off: r["bc"] for r in betweenness_centrality(g).collect()},
+            "scc": {r["id"] - off: r["scc"] - off
+                    for r in strongly_connected_components(g).collect()},
+            "bow_tie": {r["id"] - off: r["region"] for r in bow_tie(g).collect()},
+        })
+    base, shifted = runs
+    for k in ("bfs", "scc", "bow_tie"):
+        assert shifted[k] == base[k], k
+    for k in ("harmonic", "closeness", "bc"):
+        assert shifted[k] == pytest.approx(base[k], abs=1e-9), k
 
 
 def test_random_walks_deterministic(spark):
@@ -1556,7 +1591,7 @@ def test_ppmi(spark):
     assert final.count("BroadcastNestedLoopJoin") <= 1, final
 
 
-def test_closeness_vs_python(spark):
+def test_closeness_vs_python(spark, monkeypatch):
     """Harmonic + closeness match a python BFS per root, incl. a sink
     (harmonic 0) and partially-reachable roots."""
     from collections import deque
@@ -1568,22 +1603,24 @@ def test_closeness_vs_python(spark):
     adj = {}
     for s, d in E:
         adj.setdefault(s, set()).add(d)
-    got = {r["id"]: (r["harmonic"], r["closeness"])
-           for r in closeness_centrality(df_edges(spark, E)).collect()}
-    for r in nodes:
-        dist = {r: 0}
-        q = deque([r])
-        while q:
-            u = q.popleft()
-            for w in adj.get(u, ()):  # noqa: B905
-                if w not in dist:
-                    dist[w] = dist[u] + 1
-                    q.append(w)
-        hs = sum(1.0 / d for v, d in dist.items() if d > 0)
-        sumd = sum(dist.values())
-        reached = sum(1 for d in dist.values() if d > 0)
-        cl = reached / sumd if sumd > 0 else 0.0
-        assert abs(got[r][0] - hs) < 1e-9 and abs(got[r][1] - cl) < 1e-9, r
+    for regime in regimes(monkeypatch):
+        got = {r["id"]: (r["harmonic"], r["closeness"])
+               for r in closeness_centrality(df_edges(spark, E)).collect()}
+        for r in nodes:
+            dist = {r: 0}
+            q = deque([r])
+            while q:
+                u = q.popleft()
+                for w in adj.get(u, ()):  # noqa: B905
+                    if w not in dist:
+                        dist[w] = dist[u] + 1
+                        q.append(w)
+            hs = sum(1.0 / d for v, d in dist.items() if d > 0)
+            sumd = sum(dist.values())
+            reached = sum(1 for d in dist.values() if d > 0)
+            cl = reached / sumd if sumd > 0 else 0.0
+            assert (abs(got[r][0] - hs) < 1e-9
+                    and abs(got[r][1] - cl) < 1e-9), (regime, r)
 
 
 def _py_ktruss(E, k):
@@ -1873,7 +1910,8 @@ def test_bfs_random_parent_tree_valid(spark):
 
     E = _rand_directed_edges(23, n=14, m=60)
     g = df_edges(spark, E)
-    tree = _bfs(g, 0, False, 1_000_000, 1000, None, parent_rule="random")
+    tree = _bfs(g, 0, directed=False, max_depth=1000, want_parents=None,
+                parent_rule="random")
     chk = validate_bfs_tree(g, tree, 0)
     assert chk["ok"], chk
     lv_min = {r["id"]: r["level"] for r in bfs_levels(g, 0).collect()}
