@@ -23,8 +23,9 @@ Spark-first design (and why it scales to 10^12 vertices):
 * sketches merge by OR, so the result is partitioning- and
   order-invariant — bit-reproducible across cluster sizes (unlike
   sampled-BFS diameter estimators).
-* per-hop summaries ride the checkpoint job as an ``Observation`` —
-  no extra job, no driver collect of vertex data.
+* per-hop summaries ride the checkpoint job
+  (``runtime.plans.observed_checkpoint``) — no extra job, no driver
+  collect of vertex data.
 
 Determinism contract: bit j of vertex v's mask k is seeded from
 md5("{seed}:{k}:{v}") — reproducible across engines, so the DuckDB
@@ -33,7 +34,7 @@ oracle (driver correctness gate) unrolls the identical recurrence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -44,6 +45,7 @@ from combblas_spark.operators.spmv import spmv_step
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
+    observed_checkpoint,
     superstep_checkpoint,
 )
 
@@ -110,6 +112,12 @@ def _summary_aggs(k: int, r_bits: int):
     return sum_lzb, sum_pop, est
 
 
+def _summary(h: int, seen: dict) -> dict:
+    """One hop's summary row from the observed ``_summary_aggs``."""
+    return {"h": h, "sum_lzb": int(seen["sum_lzb"]),
+            "sum_pop": int(seen["sum_pop"]), "est": float(seen["est"])}
+
+
 def _or_hop(adj: DataFrame, state: DataFrame, mask_cols: list,
             extra_cols: list, can_broadcast: bool, n: int) -> DataFrame:
     """ONE OR-semiring superstep shared by anf_sketches /
@@ -146,8 +154,8 @@ def anf_sketches(
 ) -> DataFrame:
     """Runs ``hops`` OR-semiring supersteps; returns the final sketch
     state (id, m0..m{k-1}). If ``summaries`` is given it is appended
-    one dict per hop (h, sum_lzb, est) — measured via Observation on
-    the checkpoint job itself (h=0 is the seed state: N(0) ~= n)."""
+    one dict per hop (h, sum_lzb, est) — observed on the checkpoint
+    job itself (h=0 is the seed state: N(0) ~= n)."""
     spark = edges.sparkSession
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if directed:
@@ -162,32 +170,18 @@ def anf_sketches(
     can_broadcast = broadcastable(n)
 
     state = verts.select("id", *[_init_mask(j, seed, r_bits) for j in range(k)])
-    state = layout_vector(state, n, shuffle_n)
+    aggs = _summary_aggs(k, r_bits) if summaries is not None else ()
+    state, seen = observed_checkpoint(layout_vector(state, n, shuffle_n), 0, aggs)
     if summaries is not None:
-        obs0 = Observation()
-        state = state.observe(obs0, *_summary_aggs(k, r_bits))
-    state = state.localCheckpoint(eager=True)
-    if summaries is not None:
-        got = obs0.get
-        summaries.append({"h": 0, "sum_lzb": int(got["sum_lzb"]),
-                          "sum_pop": int(got["sum_pop"]),
-                          "est": float(got["est"])})
+        summaries.append(_summary(0, seen))
     verts.unpersist()
 
     mask_cols = [f"m{j}" for j in range(k)]
     for h in range(1, hops + 1):
-        new_state = _or_hop(adj, state, mask_cols, [], can_broadcast, n)
-        obs = None
+        state, seen = observed_checkpoint(
+            _or_hop(adj, state, mask_cols, [], can_broadcast, n), h, aggs)
         if summaries is not None:
-            obs = Observation()
-            new_state = new_state.observe(obs, *_summary_aggs(k, r_bits))
-        state = superstep_checkpoint(new_state, h)
-        if obs is not None:
-            got = obs.get
-            summaries.append(
-                {"h": h, "sum_lzb": int(got["sum_lzb"]),
-                 "sum_pop": int(got["sum_pop"]), "est": float(got["est"])}
-            )
+            summaries.append(_summary(h, seen))
 
     adj.unpersist()
     return state
@@ -250,23 +244,16 @@ def effective_diameter(
     can_broadcast = broadcastable(n)
 
     state = verts.select("id", *[_init_mask(j, seed, r_bits) for j in range(k)])
-    state = layout_vector(state, n, shuffle_n)
-    obs0 = Observation()
-    state = state.observe(obs0, *_summary_aggs(k, r_bits)).localCheckpoint(eager=True)
-    got = obs0.get
-    summaries.append({"h": 0, "sum_lzb": int(got["sum_lzb"]),
-                      "sum_pop": int(got["sum_pop"]), "est": float(got["est"])})
+    aggs = _summary_aggs(k, r_bits)
+    state, seen = observed_checkpoint(layout_vector(state, n, shuffle_n), 0, aggs)
+    summaries.append(_summary(0, seen))
     verts.unpersist()
 
     mask_cols = [f"m{j}" for j in range(k)]
     for h in range(1, max_hops + 1):
-        new_state = _or_hop(adj, state, mask_cols, [], can_broadcast, n)
-        obs = Observation()
-        new_state = new_state.observe(obs, *_summary_aggs(k, r_bits))
-        state = superstep_checkpoint(new_state, h)
-        got = obs.get
-        summaries.append({"h": h, "sum_lzb": int(got["sum_lzb"]),
-                          "sum_pop": int(got["sum_pop"]), "est": float(got["est"])})
+        state, seen = observed_checkpoint(
+            _or_hop(adj, state, mask_cols, [], can_broadcast, n), h, aggs)
+        summaries.append(_summary(h, seen))
         if summaries[-1]["sum_pop"] == summaries[-2]["sum_pop"]:
             break
     adj.unpersist()

@@ -23,7 +23,7 @@ from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import simple_adjacency, symmetrize
 from combblas_spark.operators.spmv import frontier_wave
-from combblas_spark.runtime.plans import broadcastable, counted_checkpoint
+from combblas_spark.runtime.plans import broadcastable, observed_checkpoint
 
 
 def _parent_agg(parent_rule: str, seed: str = "bfsrand"):
@@ -95,9 +95,12 @@ def _bfs(edges: DataFrame, root: int, directed: bool, max_depth: int,
             )
         else:
             nxt = frontier_wave(adj, frontier, visited, [_parent_agg(parent_rule)],
-                                broadcast=broadcastable(frontier_n))
-        nxt, frontier_n = counted_checkpoint(
-            nxt.withColumn("level", F.lit(level)).select("id", "level", "parent"), level)
+                                broadcast=broadcastable(frontier_n),
+                                broadcast_visited=broadcastable(visited_n))
+        nxt, seen = observed_checkpoint(
+            nxt.withColumn("level", F.lit(level)).select("id", "level", "parent"), level,
+            [F.count(F.lit(1)).alias("n")])
+        frontier_n = seen["n"]
         if frontier_n == 0:
             break
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.graph import simple_adjacency, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint
 
 
 def jp_coloring(
@@ -48,17 +48,16 @@ def jp_coloring(
 
     # ONE fixed priority per vertex (not per round — that is what makes
     # this Jones-Plassmann rather than iterated Luby)
-    pri = vertices(edges).select(
+    uncolored, seen = observed_checkpoint(vertices(edges).select(
         "id",
         F.md5(F.concat_ws(":", F.lit(str(seed)), F.col("id").cast("string"))
               .cast("binary")).alias("p"),
-    ).localCheckpoint(eager=True)
-
-    uncolored = pri
+    ), 0, [F.count(F.lit(1)).alias("n")])
+    n_left = seen["n"]
     colored = spark.createDataFrame([], "id long, color int")
     try:
         for wave in range(max_rounds):
-            if uncolored.isEmpty():
+            if n_left == 0:
                 break
             # max UNCOLORED-neighbor priority (edges with both ends live)
             live = (
@@ -73,10 +72,12 @@ def jp_coloring(
                 .localCheckpoint(eager=True)
             )
             colored = colored.unionByName(winners).localCheckpoint(eager=True)
-            uncolored = superstep_checkpoint(
-                uncolored.join(winners.select("id"), "id", "left_anti"), wave)
+            uncolored, seen = observed_checkpoint(
+                uncolored.join(winners.select("id"), "id", "left_anti"), wave,
+                [F.count(F.lit(1)).alias("n")])
+            n_left = seen["n"]
         else:
-            if not uncolored.isEmpty():  # pragma: no cover - loud failure
+            if n_left:  # pragma: no cover - loud failure
                 raise RuntimeError(
                     f"jp_coloring: uncolored vertices remain after "
                     f"max_rounds={max_rounds}; raise max_rounds")

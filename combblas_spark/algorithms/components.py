@@ -20,12 +20,12 @@ FastSV.h:252-333); the heavy SpMV + mins run as ONE job per superstep
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import broadcastable, layout_vector, superstep_checkpoint
+from combblas_spark.runtime.plans import broadcastable, layout_vector, observed_checkpoint
 from combblas_spark.runtime.superstep import Supersteps
 from combblas_spark.operators.semiring import SELECT2ND_MIN
 from combblas_spark.operators.spmv import spmv
@@ -141,11 +141,11 @@ def connected_components(
         # HashPartitioning(id, shuffle_n), which the state keeps across
         # supersteps. The f branch carries its value twice (val + _old),
         # so the same aggregation yields both the new label AND the old
-        # one — the changed-count then rides the superstep job itself as
-        # an Observation (MPI_Allreduce fused into the superstep; no
-        # separate convergence join+count job). Labels stay longs end to
-        # end: a double compare would equate ids >= 2^53 less than one
-        # ulp apart and stop the loop early.
+        # one — the changed-count then rides the superstep job itself,
+        # observed by ``Supersteps.step`` (MPI_Allreduce fused into the
+        # superstep; no separate convergence join+count job). Labels
+        # stay longs end to end: a double compare would equate ids >=
+        # 2^53 less than one ulp apart and stop the loop early.
         no_old = F.lit(None).cast("long")
         new_f = (
             f.withColumn("_old", F.col("val"))
@@ -155,16 +155,11 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("val").alias("val"), F.min("_old").alias("_old"))
         )
-        obs = Observation()
-        new_f = (
-            new_f.observe(
-                obs,
-                F.sum((F.col("val") < F.col("_old")).cast("long")).alias("changed"))
-            .select("id", "val")
-        )
-        f = steps.step(it, layout_vector(new_f, n_est), obs)
+        f, seen = steps.step(
+            it, layout_vector(new_f, n_est), keep=["id", "val"],
+            aggs=[F.sum((F.col("val") < F.col("_old")).cast("long")).alias("changed")])
         mngp.unpersist()
-        if not obs.get["changed"]:
+        if not seen["changed"]:
             break
 
     steps.finish(f)
@@ -274,23 +269,19 @@ def connected_components_as(
         )
 
         # shortcut: f = f[f], with fused change detection
-        obs = Observation()
         new_f = (
             f2.select("id", F.col("val").alias("_p"))
             .join(f2.select(F.col("id").alias("_p"), F.col("val").alias("_gp")), "_p")
             .select("id", F.col("_gp").alias("val"), F.col("_p").alias("_prev_link"))
         )
         old = f.select("id", F.col("val").alias("_old"))
-        new_f = (
-            new_f.join(old, "id")
-            .observe(obs, F.sum((F.col("val") != F.col("_old")).cast("long")).alias("changed"))
-            .select("id", "val")
-        )
-        new_f = superstep_checkpoint(new_f, it)
-        changed = int(obs.get["changed"] or 0)
+        new_f, seen = observed_checkpoint(
+            new_f.join(old, "id"), it,
+            [F.sum((F.col("val") != F.col("_old")).cast("long")).alias("changed")],
+            keep=["id", "val"])
         gp.unpersist()
         f = new_f
-        if changed == 0:
+        if seen["changed"] == 0:
             break
 
     sym.unpersist()

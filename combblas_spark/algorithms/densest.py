@@ -32,14 +32,15 @@ Scale shape: the symmetric adjacency is cached ONCE partitioned by
 dst (the degree-agg key — zero edge exchange per round); the alive
 set enters each round as broadcast semi-joins while vertex-sized
 (else AQE shuffle semi-joins); per round = one degree-agg job (stats
-ride it as an Observation) + one vertex-sized filter job. Only the
+ride it through ``runtime.plans.observed_checkpoint``) + one
+vertex-sized filter job. Only the
 current-best snapshot is retained (density is not monotone, but one
 localCheckpointed vertex set is all the state the argmax needs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.portable import pround
@@ -48,7 +49,7 @@ from combblas_spark.graph import simple_adjacency, vertices
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
-    superstep_checkpoint,
+    observed_checkpoint,
 )
 
 
@@ -92,10 +93,9 @@ def densest_subgraph(
             .agg(F.count(F.lit(1)).alias("_d"))
             .join(bc, "id", "left_semi")
         )
-        obs = Observation()
-        deg = deg.observe(obs, F.coalesce(F.sum("_d"), F.lit(0)).alias("sum_d"))
-        deg = superstep_checkpoint(layout_vector(deg, n0, shuffle_n), r)
-        sum_d = int(obs.get["sum_d"])
+        deg, seen = observed_checkpoint(
+            layout_vector(deg, n0, shuffle_n), r, [F.sum("_d").alias("sum_d")])
+        sum_d = int(seen["sum_d"])
         density = 0.5 * sum_d / n_alive  # exact mirror of the SQL twin
         if best is None or density > best[0]:
             best = (density, r, n_alive, sum_d, alive)
@@ -104,13 +104,10 @@ def densest_subgraph(
             converged = True
             break
         thr = (1.0 + eps) * sum_d / n_alive
-        new_alive = deg.filter(F.col("_d") > thr).select("id")
-        obs2 = Observation()
-        new_alive = new_alive.observe(obs2, F.count(F.lit(1)).alias("n"))
-        new_alive = superstep_checkpoint(layout_vector(new_alive, n0, shuffle_n), r)
-        n_next = int(obs2.get["n"])
-        alive = new_alive
-        n_alive = n_next
+        alive, seen = observed_checkpoint(
+            layout_vector(deg.filter(F.col("_d") > thr).select("id"), n0, shuffle_n), r,
+            [F.count(F.lit(1)).alias("n")])
+        n_alive = seen["n"]
         if n_alive == 0:
             converged = True
             break

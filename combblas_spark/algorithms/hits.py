@@ -22,16 +22,17 @@ already satisfies its aggregation -> ZERO edge-sized exchange per
 iteration in the broadcast regime; in the big-vector regime each copy
 pins its half-step's JOIN side so only vector-sized data moves.
 
-L2 norms ride the half-step's checkpoint job as an ``Observation`` (no
-extra pass); the scalar re-enters the next plan as a literal — Python
-float sqrt is IEEE-correctly-rounded, identical to SQL sqrt.
+L2 norms ride the half-step's checkpoint job through
+``runtime.plans.observed_checkpoint`` (no extra pass); the scalar
+re-enters the next plan as a literal — Python float sqrt is
+IEEE-correctly-rounded, identical to SQL sqrt.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -42,6 +43,7 @@ from combblas_spark.operators.spmv import spmv_agg, spmv_step
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
+    observed_checkpoint,
     superstep_checkpoint,
 )
 
@@ -64,10 +66,9 @@ def hits(
 def _l2_normalized_checkpoint(raw: DataFrame, step_id: int) -> DataFrame:
     """``superstep_checkpoint`` of the (id, v) half-step output, then v
     divided by its L2 norm (observed on the checkpoint job itself)."""
-    obs = Observation()
-    raw = superstep_checkpoint(
-        raw.observe(obs, F.sum(F.col("v") * F.col("v")).alias("ss")), step_id)
-    nrm = math.sqrt(float(obs.get["ss"] or 0.0))
+    raw, seen = observed_checkpoint(
+        raw, step_id, [F.sum(F.col("v") * F.col("v")).alias("ss")])
+    nrm = math.sqrt(float(seen["ss"]))
     if nrm == 0.0:
         return raw
     return raw.select("id", (F.col("v") / F.lit(nrm)).alias("v"))

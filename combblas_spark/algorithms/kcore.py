@@ -18,12 +18,13 @@ dst (the degree-agg key — clustering satisfied, zero edge exchange per
 round); the alive set enters each round as two broadcast semi-joins
 while it fits (vertex-sized), else AQE-planned shuffle semi-joins. The
 degree count is map-side combinable; the alive count rides the
-checkpoint job as an Observation — ONE job per peel round.
+checkpoint job (``runtime.plans.observed_checkpoint``) — ONE job per
+peel round.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -31,7 +32,7 @@ from combblas_spark.graph import simple_adjacency, vertices
 from combblas_spark.runtime.plans import (
     broadcastable,
     layout_vector,
-    superstep_checkpoint,
+    observed_checkpoint,
 )
 
 
@@ -75,12 +76,10 @@ def _peel_loop(
             .agg(round_agg.alias("_d"))
             .join(bc, "id", "left_semi")
         )
-        new_alive = agg.filter(F.col("_d") >= threshold).select("id")
-        obs = Observation()
-        new_alive = new_alive.observe(obs, F.count(F.lit(1)).alias("n"))
-        new_alive = superstep_checkpoint(layout_vector(new_alive, n0, shuffle_n), r)
-        n_alive = int(obs.get["n"])
-        alive = new_alive
+        alive, seen = observed_checkpoint(
+            layout_vector(agg.filter(F.col("_d") >= threshold).select("id"), n0, shuffle_n),
+            r, [F.count(F.lit(1)).alias("n")])
+        n_alive = seen["n"]
         if n_alive == 0 or n_alive == prev_n:
             converged = True
             break
@@ -183,14 +182,12 @@ def core_numbers(
 
     sym = simple_adjacency(edges, "dst")
 
-    core = (
-        sym.groupBy(F.col("dst").alias("id"))
-        .agg(F.count(F.lit(1)).alias("core"))
-        .localCheckpoint(eager=True)
-    )
-    prev_s = int(core.agg(F.sum("core")).collect()[0][0] or 0)
+    core, seen = observed_checkpoint(
+        sym.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).alias("core")), 0,
+        [F.sum("core").alias("s"), F.count(F.lit(1)).alias("n")])
+    prev_s = seen["s"]
 
-    can_broadcast = broadcastable(core.count())
+    can_broadcast = broadcastable(seen["n"])
     converged = prev_s == 0
     for t in range(max_iters):
         cv = core.select(F.col("id").alias("src"), F.col("core").alias("_c"))
@@ -204,11 +201,8 @@ def core_numbers(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.max("_r").alias("core"))
         )
-        obs = Observation()
-        new_core = new_core.observe(obs, F.sum("core").alias("s"))
-        new_core = superstep_checkpoint(new_core, t)
-        s = int(obs.get["s"] or 0)
-        core = new_core
+        core, seen = observed_checkpoint(new_core, t, [F.sum("core").alias("s")])
+        s = seen["s"]
         if s == prev_s:
             converged = True
             break

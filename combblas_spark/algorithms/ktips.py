@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.graph import simple_adjacency
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint, superstep_checkpoint
 
 
 def k_tips(edges: DataFrame, l: int = 4) -> DataFrame:
@@ -85,11 +85,11 @@ def k_tips(edges: DataFrame, l: int = 4) -> DataFrame:
                        F.col("cur").alias("cut_dst")))
         reported = rep if reported is None else reported.unionByName(rep)
         # Ns == 1: advance (PruneColumnByIndex keeps these columns only)
-        walk = (stepped.where(F.col("n") == 1)
-                .select("tip", F.col("cur").alias("prev"),
-                        F.col("one_nxt").alias("cur"))
-                .localCheckpoint(eager=True))
-        if walk.isEmpty():
+        walk, seen = observed_checkpoint(
+            stepped.where(F.col("n") == 1)
+            .select("tip", F.col("cur").alias("prev"), F.col("one_nxt").alias("cur")),
+            k, [F.count(F.lit(1)).alias("n")])
+        if seen["n"] == 0:
             break
         visited = (
             visited.unionByName(walk.select("tip", F.col("cur").alias("v")))

@@ -128,7 +128,7 @@ def label_propagation(
         else:
             new_labels = joined.select(
                 "id", F.coalesce(F.col("_new"), F.col("label")).alias("label"))
-        labels = steps.step(r, new_labels)
+        labels, _ = steps.step(r, new_labels)
 
     steps.finish(labels)
     sym.unpersist()

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint, superstep_checkpoint
 
 
 def bipartite_maximal_matching(
@@ -48,20 +48,17 @@ def bipartite_maximal_matching(
         .withColumn("h", prio)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    live.count()
+    n_live = live.count()
 
     matched = spark.createDataFrame([], "src long, dst long")
     for it in range(max_iter):
         proposals = live.groupBy("src").agg(
             F.min_by("dst", F.col("h")).alias("dst"),
             F.min("h").alias("h"))
-        grants = (
+        grants, seen = observed_checkpoint(
             proposals.groupBy("dst").agg(F.min_by("src", F.col("h")).alias("src"))
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        n_new = grants.count()
-        if n_new == 0:
+            .select("src", "dst"), it, [F.count(F.lit(1)).alias("n")])
+        if seen["n"] == 0:
             break
         matched = matched.unionByName(grants).localCheckpoint(eager=True)
         nxt = (
@@ -69,13 +66,13 @@ def bipartite_maximal_matching(
             .join(grants.select("dst"), "dst", "left_anti")
             .select("src", "dst", "h")
         )
-        nxt = superstep_checkpoint(nxt, it)
+        nxt, seen = observed_checkpoint(nxt, it, [F.count(F.lit(1)).alias("n")])
         live.unpersist()
-        live = nxt
-        if live.isEmpty():
+        live, n_live = nxt, seen["n"]
+        if n_live == 0:
             break
     else:
-        if not live.isEmpty():
+        if n_live:
             # live edges remaining means the result is a valid matching
             # but NOT maximal — the function's contract. Each round
             # matches at least the globally min-priority live edge, and
@@ -140,8 +137,10 @@ def bipartite_maximum_matching(
     _step = [0]
 
     def _ck(df):
+        """(checkpointed df, its row count read on the same job)"""
         _step[0] += 1
-        return superstep_checkpoint(df, _step[0])
+        out, seen = observed_checkpoint(df, _step[0], [F.count(F.lit(1)).alias("n")])
+        return out, seen["n"]
 
     phase = 0
     while max_phases is None or phase < max_phases:
@@ -152,8 +151,8 @@ def bipartite_maximum_matching(
             e.select("src").distinct().join(m_src, "src", "left_anti")
             .select(F.col("src").alias("id"), F.col("src").alias("root"))
         )
-        roots = _ck(roots)
-        if roots.isEmpty():
+        roots, n_roots = _ck(roots)
+        if n_roots == 0:
             break
 
         # matched column -> its (unique) matched row, for even steps
@@ -174,8 +173,8 @@ def bipartite_maximum_matching(
                 .agg(F.min("src").alias("psrc"), F.min_by("root", "src").alias("root"))
                 .withColumn("lvl", F.lit(t))
             )
-            new_d = _ck(new_d)
-            if new_d.isEmpty():
+            new_d, n_new = _ck(new_d)
+            if n_new == 0:
                 break
             # unions of already-checkpointed leaves: shallow lineage,
             # no materialization needed (job-count matters — each eager
@@ -184,11 +183,11 @@ def bipartite_maximum_matching(
             parent_d = parent_d.unionByName(new_d)
             endpoints = endpoints.unionByName(new_d.join(m_dst, "dst", "left_anti"))
             # even step: matched columns -> their matched row (forced edge)
-            frontier = _ck(
+            frontier, n_front = _ck(
                 new_d.join(m_of_dst, "dst")
                 .select(F.col("msrc").alias("id"), "root")
             )
-            if frontier.isEmpty():
+            if n_front == 0:
                 break
 
         if endpoints.isEmpty():
@@ -200,17 +199,17 @@ def bipartite_maximum_matching(
             .agg(F.min_by(F.struct("lvl", "dst", "psrc"), F.struct("lvl", "dst")).alias("c"))
             .select("root", F.col("c.dst").alias("dst"), F.col("c.lvl").alias("lvl"))
         )
-        chosen = _ck(chosen)
+        cur, _ = _ck(chosen)
 
-        # walk back root-ward, flipping as we go
-        cur = chosen
+        # walk back root-ward, flipping as we go; an empty step adds,
+        # removes and continues nothing, so the walk ends there
         adds = spark.createDataFrame([], "src long, dst long")
         removes = spark.createDataFrame([], "src long, dst long")
-        while not cur.isEmpty():
-            step = cur.join(
-                parent_d.select("dst", "psrc", F.col("lvl").alias("_plvl")), "dst"
-            )
-            step = _ck(step)  # one job; adds/removes/cur derive
+        while True:
+            step, n_step = _ck(cur.join(  # one job; adds/removes/cur derive
+                parent_d.select("dst", "psrc", F.col("lvl").alias("_plvl")), "dst"))
+            if n_step == 0:
+                break
             adds = adds.unionByName(
                 step.select(F.col("psrc").alias("src"), "dst"))
             back = (
@@ -222,7 +221,7 @@ def bipartite_maximum_matching(
             cur = back.select(
                 "root", F.col("mdst").alias("dst"), (F.col("_plvl") - 2).alias("lvl"))
 
-        matching = _ck(
+        matching, _ = _ck(
             matching.join(removes, ["src", "dst"], "left_anti")
             .unionByName(adds)
         )
@@ -312,13 +311,12 @@ def approx_weight_perfect_matching(
             .join(best_j, ["i", "j"], "left_semi")
             .filter(F.col("i") < F.col("j"))  # each cycle once
         )
-        swaps = superstep_checkpoint(swaps, 2 * rnd + 1)
-        stats = swaps.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("gain").alias("g")).collect()[0]
+        swaps, stats = observed_checkpoint(
+            swaps, 2 * rnd + 1, [F.count(F.lit(1)).alias("n"), F.sum("gain").alias("g")])
         n_swaps = stats["n"]
         if metrics is not None:
             metrics.append({"round": rnd, "swaps": n_swaps,
-                            "gain": stats["g"] or 0.0})
+                            "gain": float(stats["g"])})
         if n_swaps == 0:
             break
         old = (
@@ -442,9 +440,8 @@ def auction_matching(
             F.min_by(F.struct("src", "bid"),
                      F.struct(-F.col("bid"), F.col("src"))).alias("b")
         ).select("dst", F.col("b.src").alias("src"), F.col("b.bid").alias("bid"))
-        wins = superstep_checkpoint(wins, 2 * rnd + 1)
-        n_bids = wins.count()
-        if n_bids == 0:
+        wins, seen = observed_checkpoint(wins, 2 * rnd + 1, [F.count(F.lit(1)).alias("n")])
+        if seen["n"] == 0:
             break
         price = superstep_checkpoint(
             price.join(wins.select("dst", F.col("bid").alias("np")),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.graph import simple_adjacency, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint
 
 
 def maximal_independent_set(
@@ -42,13 +42,13 @@ def maximal_independent_set(
     # without a shuffle
     sym = simple_adjacency(edges, "src")
 
-    cand = vertices(edges).localCheckpoint(eager=True)
+    cand, seen = observed_checkpoint(vertices(edges), 0, [F.count(F.lit(1)).alias("n")])
+    n_cand = seen["n"]
     spark = edges.sparkSession
     mis = spark.createDataFrame([], "id long")
 
     try:
         for it in range(max_iter):
-            n_cand = cand.count()
             if n_cand == 0:
                 break
             pri = cand.select("id", F.md5(F.concat_ws(
@@ -76,9 +76,11 @@ def maximal_independent_set(
                 .select(F.col("dst").alias("id"))
             )
             mis = mis.unionByName(winners).localCheckpoint(eager=True)
-            cand = superstep_checkpoint(cand.join(dead, "id", "left_anti"), it)
+            cand, seen = observed_checkpoint(
+                cand.join(dead, "id", "left_anti"), it, [F.count(F.lit(1)).alias("n")])
+            n_cand = seen["n"]
         else:
-            if not cand.isEmpty():
+            if n_cand:
                 # returning here would violate the MAXIMALITY contract
                 # silently (the set is independent but candidates remain
                 # unexamined) — non-convergence must be loud (ADVICE-r3

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint, superstep_checkpoint
 
 
 def boruvka_msf(
@@ -82,8 +82,8 @@ def boruvka_msf(
                 .join(comp.select(F.col("id").alias("v"), F.col("c").alias("cv")), "v")
                 .filter(F.col("cu") != F.col("cv"))
             )
-            ce = superstep_checkpoint(ce, r)
-            if ce.isEmpty():
+            ce, seen = observed_checkpoint(ce, r, [F.count(F.lit(1)).alias("n")])
+            if seen["n"] == 0:
                 break
             # each component's lightest incident edge under the (w, u, v)
             # total order — min over a struct orders fields lexicographically
@@ -127,18 +127,17 @@ def boruvka_msf(
                 )
                 .localCheckpoint(eager=True)
             )
-            # pointer jumping to roots (depth halves per jump)
+            # pointer jumping to roots (depth halves per jump); every p is
+            # a c of sel, so the jump keeps every row and p is fixed once
+            # no row's grandparent differs from its parent
             for j in range(max_jumps):
-                nxt = (
+                p, seen = observed_checkpoint(
                     p.alias("a")
-                    .join(p.select(F.col("c").alias("p"), F.col("p").alias("gp")).alias("b"), "p")
-                    .select("c", F.col("gp").alias("p"))
-                    .localCheckpoint(eager=True)
-                )
-                if nxt.exceptAll(p).isEmpty():
-                    p = nxt
+                    .join(p.select(F.col("c").alias("p"), F.col("p").alias("gp")).alias("b"), "p"),
+                    j, [F.sum((F.col("p") != F.col("gp")).cast("long")).alias("moved")],
+                    keep=["c", F.col("gp").alias("p")])
+                if seen["moved"] == 0:
                     break
-                p = nxt
             else:
                 raise RuntimeError(
                     f"boruvka_msf: pointer jumping did not reach roots in "

@@ -144,12 +144,13 @@ def min_degree_ordering(
     bcsstk01 matrix in tests/test_mm.py against the natural and
     reverse orders.
     """
-    from combblas_spark.runtime.plans import superstep_checkpoint
+    from combblas_spark.runtime.plans import observed_checkpoint, superstep_checkpoint
 
     spark = edges.sparkSession
     sym = symmetrize(edges).select("src", "dst").filter(F.col("src") != F.col("dst"))
     sym = sym.localCheckpoint(eager=True)
-    verts = sym.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+    verts, seen = observed_checkpoint(
+        sym.select(F.col("src").alias("id")).distinct(), 0, [F.count(F.lit(1)).alias("n")])
 
     pos = spark.createDataFrame([], "pos long, id long")
     offset = 0
@@ -160,7 +161,7 @@ def min_degree_ordering(
         # dense graphs needing more rounds, e.g. a 500-clique, to the
         # degree-order tail despite the full-MD-permutation contract).
         # max_rounds remains an explicit opt-in ceiling below |V|.
-        n_rounds = int(verts.count())
+        n_rounds = seen["n"]
         if max_rounds is not None:
             n_rounds = min(n_rounds, max_rounds)
     else:
@@ -184,17 +185,15 @@ def min_degree_ordering(
             .join(cand.select(F.col("id").alias("dst")), "dst", "left_semi")
             .groupBy(F.col("dst").alias("id")).agg(F.min("_ps").alias("_np"))
         )
-        winners = (
+        winners, won = observed_checkpoint(
             cand.join(nbr_min, "id", "left")
             .filter(F.col("_np").isNull() | (F.col("p") < F.col("_np")))
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
+            .select("id"), k, [F.count(F.lit(1)).alias("n")])
         ranked = _perm_by(winners, [F.col("id").asc()])
         pos = pos.unionByName(
             ranked.select((F.col("pos") + F.lit(offset)).alias("pos"), "id")
         ).localCheckpoint(eager=True)
-        offset += winners.count()
+        offset += won["n"]
 
         # clique fill among each winner's neighbors (independence of the
         # winner set makes the per-winner updates non-interfering)

@@ -38,7 +38,7 @@ BENCH/BASELINE.md):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -251,18 +251,14 @@ def pagerank(
             .select("id", F.col("rank").alias("_prev"), new_rank, "dg", *extra)
         )
 
-        # tol mode: the L1 delta rides the superstep job itself as an
-        # Observation over |rank - _prev| (the old rank is already in
-        # the stitch join) — no separate convergence join+count job.
-        obs = None
-        if n_iter is None and tol is not None:
-            obs = Observation()
-            new_state = new_state.observe(
-                obs, F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("l1_delta"))
-        # materialize: THE one job per superstep (truncates lineage);
-        # the runner additionally writes durable Parquet on its cadence
-        state = steps.step(it, new_state.select("id", "rank", "dg", *extra), obs)
-        if obs is not None and obs.get["l1_delta"] < tol:
+        # tol mode: the L1 delta rides the superstep job itself, observed
+        # over |rank - _prev| (the old rank is already in the stitch
+        # join) — no separate convergence join+count job. The runner
+        # additionally writes durable Parquet on its cadence.
+        tol_mode = n_iter is None and tol is not None
+        aggs = [F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("l1_delta")] if tol_mode else []
+        state, seen = steps.step(it, new_state, aggs=aggs, keep=["id", "rank", "dg", *extra])
+        if tol_mode and seen["l1_delta"] < tol:
             break
 
     steps.finish(state)

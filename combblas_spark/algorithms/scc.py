@@ -41,7 +41,7 @@ from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import simple_adjacency, vertices
 from combblas_spark.operators.spmv import frontier_closure
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint
 
 
 def strongly_connected_components(
@@ -65,17 +65,22 @@ def strongly_connected_components(
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = simple_adjacency(edges, "src", directed=True)
-    act = vertices(edges).select("id").localCheckpoint(eager=True)
+    # n_act: rows of act, read on the job that checkpoints it
+    act, seen = observed_checkpoint(vertices(edges).select("id"), 0,
+                                    [F.count(F.lit(1)).alias("n")])
+    n_act = seen["n"]
     done: DataFrame | None = None  # (id, scc)
     step = 0
 
     def _peel(assigned: DataFrame) -> None:
         """Fold (id, scc) rows into the result and shrink the graph."""
-        nonlocal done, act, e
+        nonlocal done, act, n_act, e
         assigned = assigned.localCheckpoint(eager=True)
         done = assigned if done is None else done.unionByName(assigned)
-        act = act.join(assigned.select("id"), "id", "left_anti") \
-                 .localCheckpoint(eager=True)
+        act, seen = observed_checkpoint(
+            act.join(assigned.select("id"), "id", "left_anti"), step,
+            [F.count(F.lit(1)).alias("n")])
+        n_act = seen["n"]
         old = e
         e = (e.join(assigned.select(F.col("id").alias("src")), "src", "left_anti")
              .join(assigned.select(F.col("id").alias("dst")), "dst", "left_anti")
@@ -85,7 +90,7 @@ def strongly_connected_components(
         old.unpersist()
 
     for _ in range(max_rounds):
-        if act.isEmpty():
+        if n_act == 0:
             break
         # ---- 1. trim to fixpoint: no in- or no out-edges -> singleton
         for _t in range(max_inner):
@@ -96,8 +101,8 @@ def strongly_connected_components(
                 act.join(has_out.join(has_in, "id"), "id", "left_anti")
                 .select("id", F.col("id").alias("scc"))
             )
-            trivial = superstep_checkpoint(trivial, step)
-            if trivial.isEmpty():
+            trivial, seen = observed_checkpoint(trivial, step, [F.count(F.lit(1)).alias("n")])
+            if seen["n"] == 0:
                 break
             _peel(trivial)
         # NO raise on trim-cap exhaustion (unlike coloring/backward
@@ -107,7 +112,7 @@ def strongly_connected_components(
         # vertex is peeled once its singleton SCC's root round comes).
         # A long peel chain (e.g. a directed path deeper than
         # max_inner) therefore proceeds, just with less pre-shrinking.
-        if act.isEmpty():
+        if n_act == 0:
             break
 
         # ---- 2. forward max-coloring to fixpoint
@@ -115,27 +120,18 @@ def strongly_connected_components(
         c = c.repartition(shuffle_n, "id").localCheckpoint(eager=True)
         for _p in range(max_inner):
             step += 1
-            from pyspark.sql import Observation
             inc = (
                 e.join(c.select(F.col("id").alias("src"),
                                 F.col("color").alias("_cu")), "src")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.max("_cu").alias("_cin"))
             )
-            obs = Observation()
-            c_new = (
-                c.join(inc, "id", "left")
-                .select("id", F.greatest(F.col("color"),
-                                         F.coalesce(F.col("_cin"), F.lit(-1)))
-                        .alias("color"),
-                        (F.coalesce(F.col("_cin"), F.lit(-1)) > F.col("color"))
-                        .cast("int").alias("_chg"))
-                .observe(obs, F.sum("_chg").alias("n"))
-                .select("id", "color")
-            )
-            c_new = superstep_checkpoint(c_new, step)
-            c = c_new
-            if int(obs.get["n"] or 0) == 0:
+            cin = F.coalesce(F.col("_cin"), F.lit(-1))
+            c, seen = observed_checkpoint(
+                c.join(inc, "id", "left"), step,
+                [F.sum((cin > F.col("color")).cast("long")).alias("changed")],
+                keep=["id", F.greatest(F.col("color"), cin).alias("color")])
+            if seen["changed"] == 0:
                 break
         else:
             # stale c(v)=v rows would become FALSE color roots and step
@@ -161,9 +157,9 @@ def strongly_connected_components(
         lab = visited.groupBy("color").agg(F.min("id").alias("scc"))
         _peel(visited.join(lab, "color").select("id", "scc"))
     else:
-        if not act.isEmpty():
+        if n_act:
             raise RuntimeError(
-                f"scc: {act.count()} vertices still active after "
+                f"scc: {n_act} vertices still active after "
                 f"max_rounds={max_rounds} outer rounds; raise max_rounds "
                 f"(returning would silently omit them)")
 
@@ -284,24 +280,19 @@ def condensation_levels(cedges: DataFrame, max_rounds: int = 1024) -> DataFrame:
         .select("scc", F.lit(0).alias("level"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    for r in range(max_rounds):
         cand = (
             ce.join(lev.withColumnRenamed("scc", "src_scc"), "src_scc")
             .groupBy(F.col("dst_scc").alias("scc"))
             .agg((F.max("level") + 1).alias("_nl"))
         )
-        nxt = (
-            lev.join(cand, "scc", "left")
-            .select("scc", F.greatest("level", F.coalesce("_nl", F.lit(0)))
-                    .alias("level"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            nxt.join(lev.withColumnRenamed("level", "_old"), "scc")
-            .where(F.col("level") != F.col("_old")).limit(1).count()
-        )
-        lev = nxt
-        if changed == 0:
+        # a level changes exactly where a predecessor offers a higher
+        # one: counted on the round's own checkpoint job
+        lev, seen = observed_checkpoint(
+            lev.join(cand, "scc", "left"), r,
+            [F.sum((F.col("_nl") > F.col("level")).cast("long")).alias("changed")],
+            keep=["scc", F.greatest("level", F.coalesce("_nl", F.lit(0))).alias("level")])
+        if seen["changed"] == 0:
             ce.unpersist()
             return lev
     ce.unpersist()

@@ -7,17 +7,66 @@ Each superstep is one SpMV over MIN_PLUS merged with the previous
 distances via a groupBy-min (the same union-agg shape as FastSV in
 components.py). A frontier optimization keeps the SpMV sparse: only
 vertices whose distance improved last superstep propagate (SpMSpV,
-ParFriends.h:2180 — the sparse-vector path).
+ParFriends.h:2180 — the sparse-vector path). The merge carries the
+previous distance along, so the improved count — the loop's
+convergence read and the next broadcast gate — is observed on the
+superstep's own checkpoint job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.runtime.plans import broadcastable, superstep_checkpoint
+from combblas_spark.runtime.plans import (
+    broadcastable,
+    observed_checkpoint,
+    superstep_checkpoint,
+)
 from combblas_spark.runtime.superstep import Supersteps
+
+
+def _relax(edges: DataFrame, frontier: DataFrame, n_front: int) -> DataFrame:
+    """SpMSpV over MinPlus: the out-edges of the ``n_front``-row
+    ``frontier`` relaxed, min per reached vertex. The frontier is
+    broadcast only while it is provably small."""
+    f_in = F.broadcast(frontier) if broadcastable(n_front) else frontier
+    return (
+        edges.join(f_in.withColumnRenamed("id", "_fid"), edges["src"] == F.col("_fid"))
+        .select(F.col("dst").alias("id"), (F.col("w") + F.col("dist")).alias("dist"))
+        .groupBy("id")
+        .agg(F.min("dist").alias("dist"))
+    )
+
+
+def _min_merge(dist: DataFrame, relaxed: DataFrame) -> DataFrame:
+    """``dist`` merged with ``relaxed`` by min per id, the previous
+    distance carried along as ``_old`` (NULL for a newly reached
+    vertex), the FastSV trick: one aggregation yields both, so what
+    improved is observable on the merge's own checkpoint job."""
+    return (
+        dist.withColumn("_old", F.col("dist"))
+        .unionByName(relaxed.withColumn("_old", F.lit(None).cast("double")))
+        .groupBy("id")
+        .agg(F.min("dist").alias("dist"), F.min("_old").alias("_old"))
+    )
+
+
+def _improved() -> Column:
+    """Strictly better than before, new vertices included, over
+    (dist, _old)."""
+    return F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
+
+
+def _frontier(merged: DataFrame, dist: DataFrame, cond: Column) -> DataFrame:
+    """The (id, dist) rows of the checkpointed ``merged`` where ``cond``
+    holds against the previous ``dist``; lazy, so it runs inside the
+    next superstep's job."""
+    return (
+        merged.join(dist.withColumnRenamed("dist", "_old"), "id", "left")
+        .filter(cond).select("id", "dist")
+    )
 
 
 def sssp(
@@ -57,35 +106,16 @@ def sssp(
     start_it, dist = steps.resume()
     if dist is None:
         dist = spark.createDataFrame([(int(root), 0.0)], "id long, dist double")
-    dist = dist.localCheckpoint(eager=True)
+    dist, seen = observed_checkpoint(dist, start_it, [F.count(F.lit(1)).alias("n")])
     frontier = dist  # vertices improved last superstep
-    n_front = frontier.count()
+    n_front = seen["n"]
 
     for it in range(start_it, max_iter):
-        # SpMSpV over MinPlus: relax out-edges of the frontier only.
-        # Broadcast only while the frontier is provably small.
-        f_in = F.broadcast(frontier) if broadcastable(n_front) else frontier
-        relaxed = (
-            e.join(f_in.withColumnRenamed("id", "_fid"),
-                   e["src"] == F.col("_fid"))
-            .select(F.col("dst").alias("id"), (F.col("w") + F.col("dist")).alias("dist"))
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        merged = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        merged = steps.step(it, merged)
-        # improved = strictly better than before (new vertices included)
-        frontier = (
-            merged.join(dist.withColumnRenamed("dist", "_old"), "id", "left")
-            .filter(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-            .select("id", "dist")
-            .localCheckpoint(eager=True)
-        )
-        n_front = frontier.count()  # convergence check + next broadcast gate
+        merged, seen = steps.step(
+            it, _min_merge(dist, _relax(e, frontier, n_front)), keep=["id", "dist"],
+            aggs=[F.sum(_improved().cast("long")).alias("improved")])
+        frontier = _frontier(merged, dist, _improved())
+        n_front = seen["improved"]  # convergence check + next broadcast gate
         dist = merged
         if n_front == 0:
             break
@@ -159,21 +189,6 @@ def delta_stepping_sssp(
     heavy = e.filter(F.col("w") > delta).persist(StorageLevel.MEMORY_AND_DISK)
     light.count(), heavy.count()
 
-    def _relax(edge_side: DataFrame, frontier: DataFrame, dist: DataFrame,
-               n_front: int) -> DataFrame:
-        """One MinPlus relaxation + merge; returns the new dist vector
-        (same union-agg shape as sssp)."""
-        f_in = F.broadcast(frontier) if broadcastable(n_front) else frontier
-        relaxed = (
-            edge_side.join(f_in.withColumnRenamed("id", "_fid"),
-                           edge_side["src"] == F.col("_fid"))
-            .select(F.col("dst").alias("id"),
-                    (F.col("w") + F.col("dist")).alias("dist"))
-            .groupBy("id").agg(F.min("dist").alias("dist"))
-        )
-        return (dist.unionByName(relaxed)
-                .groupBy("id").agg(F.min("dist").alias("dist")))
-
     dist = spark.createDataFrame([(int(root), 0.0)], "id long, dist double")
     dist = dist.localCheckpoint(eager=True)
     bucket_of = lambda c: F.floor(c / F.lit(float(delta)))  # noqa: E731
@@ -181,32 +196,31 @@ def delta_stepping_sssp(
     cur = 0
     try:
         while cur < max_buckets:
-            # next non-empty bucket >= cur (1-row scalar read, same class of
-            # driver read as every convergence check here)
+            # next non-empty bucket >= cur and its size, in one 1-row
+            # driver read (same class as every convergence read here)
             row = (dist.filter(bucket_of(F.col("dist")) >= cur)
-                   .agg(F.min(bucket_of(F.col("dist"))).alias("b")).collect()[0])
-            if row["b"] is None:
+                   .groupBy(bucket_of(F.col("dist")).alias("b")).count()
+                   .orderBy("b").limit(1).collect())
+            if not row:
                 break
-            cur = int(row["b"])
-            frontier = dist.filter(bucket_of(F.col("dist")) == cur) \
-                           .localCheckpoint(eager=True)
-            n_front = frontier.count()
+            cur, n_front = int(row[0]["b"]), row[0]["count"]
+            in_bucket = bucket_of(F.col("dist")) == cur
+            frontier = dist.filter(in_bucket)
             for inner in range(max_inner + 1):
                 if inner == max_inner:
                     raise RuntimeError(
                         f"delta_stepping_sssp: bucket {cur} did not settle in "
                         f"max_inner={max_inner} light rounds; raise max_inner")
-                merged = superstep_checkpoint(
-                    _relax(light, frontier, dist, n_front), step)
+                # the frontier (improved AND still in the bucket) and the
+                # bucket's members are both counted on the merge's job
+                merged, seen = observed_checkpoint(
+                    _min_merge(dist, _relax(light, frontier, n_front)), step,
+                    [F.sum((_improved() & in_bucket).cast("long")).alias("front"),
+                     F.sum(in_bucket.cast("long")).alias("members")],
+                    keep=["id", "dist"])
                 step += 1
-                frontier = (
-                    merged.join(dist.withColumnRenamed("dist", "_old"), "id", "left")
-                    .filter((F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-                            & (bucket_of(F.col("dist")) == cur))
-                    .select("id", "dist")
-                    .localCheckpoint(eager=True)
-                )
-                n_front = frontier.count()
+                frontier = _frontier(merged, dist, _improved() & in_bucket)
+                n_front = seen["front"]
                 dist = merged
                 if metrics is not None:
                     metrics.append({"bucket": cur, "inner": inner,
@@ -214,12 +228,11 @@ def delta_stepping_sssp(
                 if n_front == 0:
                     break
             # heavy relaxation once from the settled bucket members
-            members = dist.filter(bucket_of(F.col("dist")) == cur) \
-                          .localCheckpoint(eager=True)
-            n_mem = members.count()
+            n_mem = seen["members"]
             if n_mem > 0:
                 dist = superstep_checkpoint(
-                    _relax(heavy, members, dist, n_mem), step)
+                    _min_merge(dist, _relax(heavy, dist.filter(in_bucket), n_mem))
+                    .select("id", "dist"), step)
                 step += 1
             cur += 1
         else:

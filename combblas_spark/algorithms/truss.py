@@ -23,11 +23,11 @@ rounds (extra rounds past the fixed point are no-ops).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint
 
 
 def k_truss(edges: DataFrame, k: int, max_rounds: int = 64) -> DataFrame:
@@ -39,10 +39,10 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 64) -> DataFrame:
         .where(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
-    e = e.localCheckpoint(eager=True)
     if k <= 2:
-        return e
-    n_e = e.count()
+        return e.localCheckpoint(eager=True)
+    e, seen = observed_checkpoint(e, 0, [F.count(F.lit(1)).alias("n")])
+    n_e = seen["n"]
     converged = n_e == 0
     for r in range(max_rounds):
         if n_e == 0:
@@ -60,9 +60,8 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 64) -> DataFrame:
             .where(F.col("_sup") >= k - 2)
             .select("u", "v")
         )
-        survivors = superstep_checkpoint(survivors, r)
-        n_s = survivors.count()
-        e = survivors
+        e, seen = observed_checkpoint(survivors, r, [F.count(F.lit(1)).alias("n")])
+        n_s = seen["n"]
         if n_s == n_e:
             converged = True
             break
@@ -103,9 +102,10 @@ def trussness(
     table, persisted; each round is two equi-joins of the edge-value
     vector onto the incidence plus ONE per-edge window (cardinality =
     that edge's triangle count, never global) and a map-side-combinable
-    max agg. Convergence via the same sum-fixpoint Observation trick as
-    core_numbers (values are monotone non-increasing integers); raises
-    on cap exhaustion rather than returning a wrong decomposition.
+    max agg. Convergence via the same sum-fixpoint read as core_numbers
+    (values are monotone non-increasing integers), observed on each
+    round's checkpoint job (``observed_checkpoint``); raises on cap
+    exhaustion rather than returning a wrong decomposition.
     """
     from pyspark.sql import Window
 
@@ -137,12 +137,11 @@ def trussness(
     inc.count()
 
     sup = inc.groupBy("eu", "ev").agg(F.count(F.lit(1)).alias("t"))
-    t = (
+    t, seen = observed_checkpoint(
         e.join(sup, (e["u"] == sup["eu"]) & (e["v"] == sup["ev"]), "left")
-        .select("u", "v", F.coalesce("t", F.lit(0)).cast("long").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    prev_s = int(t.agg(F.sum("t")).collect()[0][0] or 0)
+        .select("u", "v", F.coalesce("t", F.lit(0)).cast("long").alias("t")), 0,
+        [F.sum("t").alias("s")])
+    prev_s = seen["s"]
     converged = prev_s == 0  # triangle-free graph: t==0 is the fixpoint
     w = Window.partitionBy("eu", "ev").orderBy(F.col("_rho").desc())
     for it in range(max_iters):
@@ -163,11 +162,8 @@ def trussness(
             e.join(h, (e["u"] == h["eu"]) & (e["v"] == h["ev"]), "left")
             .select("u", "v", F.coalesce("_h", F.lit(0)).cast("long").alias("t"))
         )
-        obs = Observation()
-        new_t = new_t.observe(obs, F.sum("t").alias("s"))
-        new_t = superstep_checkpoint(new_t, it)
-        s = int(obs.get["s"] or 0)
-        t = new_t
+        t, seen = observed_checkpoint(new_t, it, [F.sum("t").alias("s")])
+        s = seen["s"]
         if s == prev_s:
             converged = True
         prev_s = s

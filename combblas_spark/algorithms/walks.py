@@ -27,7 +27,7 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint
 
 
 def _pick(start, k, t: int, seed: int):
@@ -84,8 +84,8 @@ def random_walks(
             .where(F.col("idx") == pick % F.col("deg"))
             .select("start", "walk", F.col("dst").alias("vertex"))
         )
-        state = superstep_checkpoint(state, t)
-        if state.isEmpty():
+        state, seen = observed_checkpoint(state, t, [F.count(F.lit(1)).alias("n")])
+        if seen["n"] == 0:
             break
         out = out.unionByName(
             state.select("start", "walk", F.lit(t).alias("step"), "vertex"))
@@ -189,8 +189,8 @@ def node2vec_walks(
         .select("start", "walk", F.col("dst").alias("vertex"),
                 adj["src"].alias("prev"))
     )
-    state = superstep_checkpoint(state, 1)
-    if not state.isEmpty():
+    state, seen = observed_checkpoint(state, 1, [F.count(F.lit(1)).alias("n")])
+    if seen["n"]:
         out = out.unionByName(
             state.select("start", "walk", F.lit(1).alias("step"), "vertex"))
 
@@ -225,8 +225,8 @@ def node2vec_walks(
                 .select("start", "walk", F.col("dst").alias("vertex"),
                         F.col("_cur").alias("prev"))
             )
-            state = superstep_checkpoint(state, t)
-            if state.isEmpty():
+            state, seen = observed_checkpoint(state, t, [F.count(F.lit(1)).alias("n")])
+            if seen["n"] == 0:
                 break
             out = out.unionByName(
                 state.select("start", "walk", F.lit(t).alias("step"), "vertex"))
@@ -306,8 +306,8 @@ def weighted_walks(
                    & (pick % F.col("_tot") < F.col("_cum")))
             .select("start", "walk", F.col("dst").alias("vertex"))
         )
-        state = superstep_checkpoint(state, t)
-        if state.isEmpty():
+        state, seen = observed_checkpoint(state, t, [F.count(F.lit(1)).alias("n")])
+        if seen["n"] == 0:
             break
         out = out.unionByName(
             state.select("start", "walk", F.lit(t).alias("step"), "vertex"))

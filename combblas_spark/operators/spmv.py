@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.operators.semiring import Semiring, PLUS_TIMES
-from combblas_spark.runtime.plans import broadcastable, counted_checkpoint, small_vector
+from combblas_spark.runtime.plans import broadcastable, observed_checkpoint, small_vector
 
 
 def spmv(
@@ -118,18 +118,23 @@ def spmv_step(edges: DataFrame, x: DataFrame, aggs: list[Column], state: DataFra
 def frontier_wave(adj: DataFrame, frontier: DataFrame, visited: DataFrame,
                   aggs: list[Column], keys: list[str] = (), broadcast: bool = False,
                   on: str = "src", out: str = "dst",
-                  within: DataFrame | None = None) -> DataFrame:
+                  within: DataFrame | None = None,
+                  broadcast_visited: bool = False) -> DataFrame:
     """One level of a traversal: ``fringe = SpMV(A, fringe)`` then
     ``EWiseMult(fringe, visited, exclude=true)`` (TopDownBFS.cpp:435-447).
     ``spmv_agg`` moves the ``frontier`` (keys, id, value columns) along
     ``adj`` and aggregates ``aggs`` per (keys, id); a ``within`` frame
     (keys, id) then keeps only the pairs it holds (SCC's same-colour
-    rule), and the (keys, id) pairs of ``visited`` are dropped."""
+    rule), and the (keys, id) pairs of ``visited`` are dropped, by a
+    broadcast anti-join when ``broadcast_visited`` (a checkpointed
+    visited set carries no size estimate the planner would broadcast
+    by), else by a shuffle one."""
     by = [*keys, "id"]
     nxt = spmv_agg(adj, frontier, aggs, broadcast, on, out, keys)
     if within is not None:
         nxt = nxt.join(within.select(*by), by, "left_semi")
-    return nxt.join(visited.select(*by), by, "left_anti")
+    seen = visited.select(*by)
+    return nxt.join(F.broadcast(seen) if broadcast_visited else seen, by, "left_anti")
 
 
 def frontier_closure(adj: DataFrame, start: DataFrame, aggs: list[Column] = (),
@@ -142,18 +147,24 @@ def frontier_closure(adj: DataFrame, start: DataFrame, aggs: list[Column] = (),
     every reached (keys, id) with its value columns and a ``level``
     column (``start`` at 0), ``depth`` the number of non-empty waves.
 
-    Each level broadcasts the frontier while ``broadcastable`` holds for
-    its row count, and reads that count from an Observation on the
-    level's checkpoint job: no separate count or emptiness job."""
-    visited, n = counted_checkpoint(start.withColumn("level", F.lit(0)), 0)
+    Each level broadcasts the frontier and the visited set while
+    ``broadcastable`` holds for their row counts, and reads the level's
+    count on its own checkpoint job (``observed_checkpoint``): no
+    separate count or emptiness job."""
+    visited, seen = observed_checkpoint(start.withColumn("level", F.lit(0)), 0,
+                                        [F.count(F.lit(1)).alias("n")])
     frontier, depth = visited, 0
+    n = n_visited = seen["n"]
     while max_depth is None or depth < max_depth:
-        nxt, n = counted_checkpoint(
-            frontier_wave(adj, frontier, visited, aggs, keys, broadcastable(n), on, out, within)
-            .withColumn("level", F.lit(depth + 1)), depth + 1)
+        nxt, seen = observed_checkpoint(
+            frontier_wave(adj, frontier, visited, aggs, keys, broadcastable(n), on, out,
+                          within, broadcastable(n_visited))
+            .withColumn("level", F.lit(depth + 1)), depth + 1, [F.count(F.lit(1)).alias("n")])
+        n = seen["n"]
         if n == 0:
             break
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        n_visited += n
         frontier = nxt
         depth += 1
     return visited, depth

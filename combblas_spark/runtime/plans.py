@@ -35,9 +35,9 @@ motivated all this stays fast (tests/test_runtime.py).
 from __future__ import annotations
 
 import warnings
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame, Observation
 
 STATS_RESET_BITS = 8192
 
@@ -118,12 +118,23 @@ def superstep_checkpoint(df: DataFrame, iteration: int) -> DataFrame:
     return out
 
 
-def counted_checkpoint(df: DataFrame, iteration: int) -> tuple[DataFrame, int]:
-    """``superstep_checkpoint`` plus the row count, read from an
-    Observation on the checkpoint job itself: no separate count job."""
-    obs = Observation()
-    out = superstep_checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")), iteration)
-    return out, obs.get["n"]
+def observed_checkpoint(df: DataFrame, iteration: int, aggs: Sequence[Column] = (),
+                        keep: Sequence[str | Column] | None = None,
+                        checkpoint=superstep_checkpoint) -> tuple[DataFrame, dict]:
+    """The convergence read of a superstep: ``checkpoint(df, iteration)``
+    (``superstep_checkpoint`` by default) with the named aggregate
+    Columns ``aggs`` observed on that same job, the MPI_Allreduce fused
+    into the superstep (FastSV.h:336-374). ``keep`` selects the columns
+    checkpointed after the aggregates have seen every column of ``df``,
+    so helper columns such as ``_old`` never reach the state. Returns
+    (checkpointed frame, {agg name: value}); an aggregate over no rows
+    reads 0. No aggregate, no Observation: an empty dict."""
+    obs = Observation() if aggs else None
+    if obs is not None:
+        df = df.observe(obs, *aggs)
+    out = checkpoint(df if keep is None else df.select(*keep), iteration)
+    seen = {} if obs is None else {k: 0 if v is None else v for k, v in obs.get.items()}
+    return out, seen
 
 
 # Vertex-sized frames (state, label and rank vectors) at or below this

@@ -31,13 +31,14 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import observed_checkpoint, superstep_checkpoint
 
 
 def partition_histogram(df: DataFrame) -> list[int]:
@@ -234,22 +235,21 @@ class Supersteps:
         resumed = self.runner.resume() if self.runner is not None else None
         return resumed if resumed is not None else (0, None)
 
-    def step(self, it: int, state: DataFrame,
-             obs: Observation | None = None) -> DataFrame:
+    def step(self, it: int, state: DataFrame, *, aggs: Sequence[Column] = (),
+             keep: Sequence[str | Column] | None = None) -> tuple[DataFrame, dict]:
         """Materialize superstep ``it`` (the one job that runs its lazy
-        plan) and append ``{"iter", <obs metrics>, "t"}`` to
-        ``metrics``. ``t`` is read after that job, so consecutive stamps
-        tile the supersteps; ``obs`` is an Observation on ``state``
-        whose metric names become stamp keys (an empty sum reads 0)."""
-        if self.runner is not None:
-            out = self.runner.step(it, state)
-        else:
-            out = superstep_checkpoint(state, it)
+        plan) through ``observed_checkpoint``: ``aggs`` are observed on
+        that job and ``keep`` selects the state's columns. Returns (state,
+        {agg name: value}) and appends ``{"iter", <agg values>, "t"}`` to
+        ``metrics``; ``t`` is read after the job, so consecutive stamps
+        tile the supersteps."""
+        runner = self.runner
+        checkpoint = (superstep_checkpoint if runner is None
+                      else lambda df, i: runner.step(i, df))
+        out, seen = observed_checkpoint(state, it, aggs, keep, checkpoint)
         if self.metrics is not None:
-            seen = ({} if obs is None else
-                    {k: 0 if v is None else v for k, v in obs.get.items()})
             self.metrics.append({"iter": it, **seen, "t": time.perf_counter()})
-        return out
+        return out, seen
 
     def finish(self, state: DataFrame) -> None:
         """Durably checkpoint the final state (runner only)."""

@@ -171,21 +171,24 @@ def main() -> None:
         if layout is id_partitioned:
             continue
         # the BFS family's wave over src-partitioned simple adjacency, a
-        # frontier checkpointed as frontier_closure checkpoints it.
-        # Keyed (closeness): broadcast regime, the (root, id) aggregation
-        # and the visited anti-join; shuffle regime also the frontier to
-        # src. Reversed with within (SCC): broadcast regime, the
-        # aggregation, the colour semi-join and the visited anti-join;
-        # shuffle regime also the edges and the frontier to dst.
+        # frontier and visited set checkpointed as frontier_closure
+        # checkpoints them (both broadcast in the broadcast regime).
+        # Keyed (closeness): broadcast regime, the (root, id) aggregation;
+        # shuffle regime also the frontier to src and the visited set for
+        # the anti-join. Reversed with within (SCC): broadcast regime, the
+        # aggregation and the colour semi-join; shuffle regime also the
+        # edges and the frontier to dst and the visited set.
         start = vertices(g).select(F.col("id").alias("root"), "id", F.col("id").alias("color"))
         fr = start.withColumn("level", F.lit(0)).localCheckpoint(eager=True)
         colour = vertices(g).select("id", F.col("id").alias("color")).localCheckpoint(eager=True)
         waves = {
-            "closeness_wave": (frontier_wave(adj_src, fr.drop("color"), fr, [], ["root"], bc),
-                               2 if bc else 3),
+            "closeness_wave": (frontier_wave(adj_src, fr.drop("color"), fr, [], ["root"], bc,
+                                             broadcast_visited=bc),
+                               1 if bc else 3),
             "scc_backward_wave": (frontier_wave(adj_src, fr.drop("root"), fr, [], ["color"], bc,
-                                                on="dst", out="src", within=colour),
-                                  3 if bc else 5),
+                                                on="dst", out="src", within=colour,
+                                                broadcast_visited=bc),
+                                  2 if bc else 5),
         }
         for name, (df, n_ex) in waves.items():
             assert_step_shape(name, df)

@@ -1343,6 +1343,40 @@ def test_traversal_id_offset_invariant(spark):
         assert shifted[k] == pytest.approx(base[k], abs=1e-9), k
 
 
+def test_fixpoint_loops_id_offset_invariant(spark):
+    """The loops whose convergence read rides their checkpoint job —
+    sssp, the k-core and coreness peels, trussness, the densest peel,
+    condensation levels and Boruvka — answer the same at id offset 0
+    and 2^60, once shifted back."""
+    from combblas_spark.algorithms.densest import densest_subgraph
+    from combblas_spark.algorithms.kcore import core_numbers, k_core
+    from combblas_spark.algorithms.mst import boruvka_msf
+    from combblas_spark.algorithms.scc import condensation, condensation_levels
+    from combblas_spark.algorithms.sssp import sssp
+    from combblas_spark.algorithms.truss import trussness
+
+    E = _rand_directed_edges(37, n=16, m=48)
+    runs = []
+    for off in (0, 1 << 60):
+        g = df_edges(spark, [(s + off, d + off, 1 + (s * 7 + d) % 5) for s, d in E])
+        ds = densest_subgraph(g).collect()
+        runs.append({
+            "sssp": {r["id"] - off: r["dist"] for r in sssp(g, E[0][0] + off).collect()},
+            "k_core": {r["id"] - off for r in k_core(g, 3).collect()},
+            "core": {r["id"] - off: r["core"] for r in core_numbers(g).collect()},
+            "truss": {(r["u"] - off, r["v"] - off): r["trussness"]
+                      for r in trussness(g).collect()},
+            "densest": ({r["id"] - off for r in ds}, ds[0]["density"]),
+            "levels": {r["scc"] - off: r["level"]
+                       for r in condensation_levels(condensation(g)).collect()},
+            "msf": {(r["u"] - off, r["v"] - off, r["w"]) for r in boruvka_msf(g).collect()},
+        })
+    base, shifted = runs
+    assert len(base["levels"]) > 1 and len(base["msf"]) == 15
+    for k in base:
+        assert shifted[k] == base[k], k
+
+
 def test_random_walks_deterministic(spark):
     """Counter-hash walks match a pure-Python md5 twin step by step;
     sink vertices terminate their walks early."""

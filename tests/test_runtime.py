@@ -9,6 +9,7 @@ import json
 import math
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -243,3 +244,52 @@ def test_superstep_checkpoint_bounds_plan_stats(spark):
     assert max(managed_bits) <= STATS_RESET_BITS * 16
     assert managed_bits[-1] < raw_bits[-1]
     assert raw.count() == 33 and managed.count() == 33
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through its own job group (a
+    RuntimeError from ``fn`` is the loop's cap being hit, expected)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    except RuntimeError:
+        pass
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_superstep_reads_convergence_on_its_checkpoint_job(spark):
+    """A superstep's convergence read (frontier size, emptiness, change
+    count) rides its checkpoint job: no count/isEmpty/exceptAll job
+    follows it. Jobs per superstep come from the difference between two
+    runs whose set-up is identical: sssp on a 12- vs a 6-hop path (13 vs
+    7 supersteps), Boruvka pointer jumping capped at 4 vs 2 jumps on a
+    63-edge chain that needs 7, and Luby MIS capped at 3 vs 1 rounds on
+    a random graph that needs 4. With the separate read job the same
+    supersteps cost 9, 6 and 16 jobs (AQE runs each shuffle stage of a
+    checkpoint as a job of its own)."""
+    from combblas_spark.algorithms.mis import maximal_independent_set
+    from combblas_spark.algorithms.mst import boruvka_msf
+    from combblas_spark.algorithms.sssp import sssp
+
+    def path(n):
+        return df_edges(spark, [(i, i + 1, i + 1) for i in range(n)])
+
+    p6, p12, chain = path(6), path(12), path(63)
+    per_hop = (_jobs(spark, lambda: sssp(p12, 0)) - _jobs(spark, lambda: sssp(p6, 0))) / 6
+    per_jump = (_jobs(spark, lambda: boruvka_msf(chain, max_jumps=4))
+                - _jobs(spark, lambda: boruvka_msf(chain, max_jumps=2))) / 2
+    rng = np.random.RandomState(3)
+    g = df_edges(spark, sorted({(int(a), int(b)) for a, b in rng.randint(0, 60, (400, 2))}))
+    with pytest.raises(RuntimeError, match="did not reach roots"):
+        boruvka_msf(chain, max_jumps=4)
+    with pytest.raises(RuntimeError, match="candidates remain"):
+        maximal_independent_set(g, max_iter=3)
+    per_round = (_jobs(spark, lambda: maximal_independent_set(g, max_iter=3))
+                 - _jobs(spark, lambda: maximal_independent_set(g, max_iter=1))) / 2
+    assert per_hop <= 6 and per_jump <= 4 and per_round <= 14, (per_hop, per_jump, per_round)
