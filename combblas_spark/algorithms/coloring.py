@@ -15,15 +15,20 @@ This is the wave-indexed JP variant (color = wave number) rather than
 the minimum-excludant variant: it trades a few extra colors for a loop
 body that is ONE join + ONE groupBy-max per wave — no per-vertex
 neighbor-color-set gather — which is the shape that survives a 10^12
-edge graph. Same per-wave plan as mis.py with max in place of min.
+edge graph. The wave is mis.py's Luby round with max in place of min,
+``operators.spmv.local_extrema``; each wave's winners are checkpointed
+once and kept as a leaf, unioned once at return.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.graph import simple_adjacency, vertices
+from combblas_spark.operators.spmv import local_extrema
 from combblas_spark.runtime.plans import observed_checkpoint
 
 
@@ -39,7 +44,6 @@ def jp_coloring(
     loud-failure convention of mis/kcore: a partial coloring silently
     breaks the totality contract).
     """
-    spark = edges.sparkSession
     # self-loops are IGNORED (a vertex is not its own neighbor): left in,
     # a loop vertex would see its own priority as an uncolored-neighbor
     # max and could never win a wave — the run would falsely hit the
@@ -54,35 +58,27 @@ def jp_coloring(
               .cast("binary")).alias("p"),
     ), 0, [F.count(F.lit(1)).alias("n")])
     n_left = seen["n"]
-    colored = spark.createDataFrame([], "id long, color int")
+    colored = []
     try:
         for wave in range(max_rounds):
-            if n_left == 0:
-                break
-            # max UNCOLORED-neighbor priority (edges with both ends live)
-            live = (
-                sym.join(uncolored.withColumnsRenamed({"id": "src", "p": "_ps"}), "src")
-                .join(uncolored.select(F.col("id").alias("dst")), "dst", "left_semi")
-            )
-            nbr_max = live.groupBy(F.col("dst").alias("id")).agg(F.max("_ps").alias("_np"))
             winners = (
-                uncolored.join(nbr_max, "id", "left")
-                .filter(F.col("_np").isNull() | (F.col("p") > F.col("_np")))
+                local_extrema(sym, uncolored, n_left, "max")
                 .select("id", F.lit(wave).cast("int").alias("color"))
                 .localCheckpoint(eager=True)
             )
-            colored = colored.unionByName(winners).localCheckpoint(eager=True)
+            colored.append(winners)
             uncolored, seen = observed_checkpoint(
                 uncolored.join(winners.select("id"), "id", "left_anti"), wave,
                 [F.count(F.lit(1)).alias("n")])
             n_left = seen["n"]
-        else:
-            if n_left:  # pragma: no cover - loud failure
-                raise RuntimeError(
-                    f"jp_coloring: uncolored vertices remain after "
-                    f"max_rounds={max_rounds}; raise max_rounds")
+            if n_left == 0:
+                break
+        else:  # pragma: no cover - loud failure
+            raise RuntimeError(
+                f"jp_coloring: uncolored vertices remain after "
+                f"max_rounds={max_rounds}; raise max_rounds")
     finally:
         # unpersist on the raise path too — the loud-failure tests run in
         # a shared session and must not accumulate dead caches
         sym.unpersist()
-    return colored
+    return reduce(DataFrame.unionByName, colored)

@@ -24,6 +24,8 @@ edge-sized work with map-side partial aggregation.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -40,7 +42,6 @@ def bipartite_maximal_matching(
     (ids live in separate namespaces; equal ids on the two sides are
     distinct vertices, as in the reference's rectangular SpParMat).
     """
-    spark = edges.sparkSession
     prio = F.md5(F.concat_ws(
         ":", F.col("src").cast("string"), F.col("dst").cast("string")).cast("binary"))
     live = (
@@ -50,7 +51,7 @@ def bipartite_maximal_matching(
     )
     n_live = live.count()
 
-    matched = spark.createDataFrame([], "src long, dst long")
+    matched = []
     for it in range(max_iter):
         proposals = live.groupBy("src").agg(
             F.min_by("dst", F.col("h")).alias("dst"),
@@ -58,9 +59,9 @@ def bipartite_maximal_matching(
         grants, seen = observed_checkpoint(
             proposals.groupBy("dst").agg(F.min_by("src", F.col("h")).alias("src"))
             .select("src", "dst"), it, [F.count(F.lit(1)).alias("n")])
+        matched.append(grants)
         if seen["n"] == 0:
             break
-        matched = matched.unionByName(grants).localCheckpoint(eager=True)
         nxt = (
             live.join(grants.select("src"), "src", "left_anti")
             .join(grants.select("dst"), "dst", "left_anti")
@@ -72,18 +73,14 @@ def bipartite_maximal_matching(
         if n_live == 0:
             break
     else:
-        if n_live:
-            # live edges remaining means the result is a valid matching
-            # but NOT maximal — the function's contract. Each round
-            # matches at least the globally min-priority live edge, and
-            # the hash priorities shrink the live set geometrically
-            # w.h.p., so exhausting 64 rounds is pathological; fail loud
-            # rather than return a silently-non-maximal matching.
-            raise RuntimeError(
-                f"bipartite_maximal_matching: live edges remain after "
-                f"max_iter={max_iter} rounds; raise max_iter")
+        # live edges remain: a valid matching but NOT maximal, the
+        # function's contract. The hash priorities shrink the live set
+        # geometrically w.h.p., so exhausting 64 rounds is pathological.
+        raise RuntimeError(
+            f"bipartite_maximal_matching: live edges remain after "
+            f"max_iter={max_iter} rounds; raise max_iter")
     live.unpersist()
-    return matched
+    return reduce(DataFrame.unionByName, matched)
 
 
 def bipartite_maximum_matching(
@@ -163,6 +160,7 @@ def bipartite_maximum_matching(
         visited_d = spark.createDataFrame([], "dst long")
         parent_d = spark.createDataFrame([], "dst long, psrc long, root long, lvl int")
         endpoints = spark.createDataFrame([], "dst long, psrc long, root long, lvl int")
+        n_free = 0
         for t in range(1, max_depth + 1, 2):
             # odd step: rows -> any adjacent unvisited column;
             # parent = min adjacent frontier row (deterministic forest)
@@ -187,10 +185,13 @@ def bipartite_maximum_matching(
                 new_d.join(m_of_dst, "dst")
                 .select(F.col("msrc").alias("id"), "root")
             )
+            # a matched column has exactly one matched row, so the
+            # level's other columns are the free endpoints
+            n_free += n_new - n_front
             if n_front == 0:
                 break
 
-        if endpoints.isEmpty():
+        if n_free == 0:
             break  # BFS exhausted without a free column -> maximum
 
         # one endpoint per tree: min (lvl, dst)

@@ -1,7 +1,7 @@
 """Maximal independent set — Luby's algorithm (FilteredMIS parity,
 Applications/FilteredMIS.cpp: the reference runs MIS through
 semantically-filtered SpMV; here the per-round structure is the classic
-Luby round expressed as two joins).
+Luby round, ``operators.spmv.local_extrema``).
 
 Per round over the remaining candidate vertices:
   1. every candidate gets a deterministic pseudo-random priority
@@ -9,9 +9,12 @@ Per round over the remaining candidate vertices:
      stable, and ANSI-SQL-expressible so the driver oracle can replay
      the rounds exactly);
   2. a candidate enters the MIS iff its priority is a strict local
-     minimum among its remaining neighbors (min-neighbor-priority via
-     one groupBy-min = an SpMV over the Select2ndMin semiring);
+     minimum among its remaining neighbors (``local_extrema``: the
+     min-neighbor-priority SpMV over the Select2ndMin semiring and the
+     compare);
   3. winners and their neighbors leave the candidate set.
+Each round's winners are checkpointed once and kept as a leaf; the
+result is their union, built once at return.
 Terminates in O(log n) rounds w.h.p.; the result is verified
 independent AND maximal in tests (property check — the algorithm's
 contract, mirroring the reference's Correctness() style checks).
@@ -19,10 +22,13 @@ contract, mirroring the reference's Correctness() style checks).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.graph import simple_adjacency, vertices
+from combblas_spark.operators.spmv import local_extrema
 from combblas_spark.runtime.plans import observed_checkpoint
 
 
@@ -44,29 +50,15 @@ def maximal_independent_set(
 
     cand, seen = observed_checkpoint(vertices(edges), 0, [F.count(F.lit(1)).alias("n")])
     n_cand = seen["n"]
-    spark = edges.sparkSession
-    mis = spark.createDataFrame([], "id long")
+    won = []
 
     try:
         for it in range(max_iter):
-            if n_cand == 0:
-                break
             pri = cand.select("id", F.md5(F.concat_ws(
                 ":", F.lit(str(seed)), F.lit(str(it)),
                 F.col("id").cast("string")).cast("binary")).alias("p"))
-            # min neighbor priority among REMAINING candidates (edges with
-            # both ends still candidate)
-            live = (
-                sym.join(pri.withColumnsRenamed({"id": "src", "p": "_ps"}), "src")
-                .join(pri.select(F.col("id").alias("dst")), "dst", "left_semi")
-            )
-            nbr_min = live.groupBy(F.col("dst").alias("id")).agg(F.min("_ps").alias("_np"))
-            winners = (
-                pri.join(nbr_min, "id", "left")
-                .filter(F.col("_np").isNull() | (F.col("p") < F.col("_np")))
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
+            winners = local_extrema(sym, pri, n_cand).localCheckpoint(eager=True)
+            won.append(winners)
             # remove winners and their neighbors from the candidate set.
             # No distinct: dead only feeds a left_anti join, whose result is
             # identical with duplicates on the right — the dedup would cost
@@ -75,23 +67,20 @@ def maximal_independent_set(
                 sym.join(winners.withColumnRenamed("id", "src"), "src")
                 .select(F.col("dst").alias("id"))
             )
-            mis = mis.unionByName(winners).localCheckpoint(eager=True)
             cand, seen = observed_checkpoint(
                 cand.join(dead, "id", "left_anti"), it, [F.count(F.lit(1)).alias("n")])
             n_cand = seen["n"]
+            if n_cand == 0:
+                break
         else:
-            if n_cand:
-                # returning here would violate the MAXIMALITY contract
-                # silently (the set is independent but candidates remain
-                # unexamined) — non-convergence must be loud (ADVICE-r3
-                # pattern). Luby needs O(log n) rounds w.h.p., so hitting
-                # 60 means something is genuinely wrong.
-                raise RuntimeError(
-                    f"maximal_independent_set: candidates remain after "
-                    f"max_iter={max_iter} Luby rounds; raise max_iter")
+            # returning would break the MAXIMALITY contract silently;
+            # Luby needs O(log n) rounds w.h.p., so the cap means a fault
+            raise RuntimeError(
+                f"maximal_independent_set: candidates remain after "
+                f"max_iter={max_iter} Luby rounds; raise max_iter")
 
     finally:
         # unpersist on the raise path too — loud-failure tests run in a
         # shared session and must not accumulate dead caches
         sym.unpersist()
-    return mis
+    return reduce(DataFrame.unionByName, won)

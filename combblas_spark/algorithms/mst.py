@@ -26,6 +26,8 @@ driver reads are empty-frontier checks, same as components.py).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -71,7 +73,7 @@ def boruvka_msf(
         .select("id", F.col("id").alias("c"))
         .localCheckpoint(eager=True)
     )
-    chosen = spark.createDataFrame([], "u long, v long, w double")
+    chosen = []
 
     try:
         for r in range(max_rounds):
@@ -104,9 +106,7 @@ def boruvka_msf(
             )
             # the same edge is picked by both endpoint components when it is
             # the minimum for both — keep one copy
-            chosen = chosen.unionByName(
-                sel.select("u", "v", "w").dropDuplicates(["u", "v"])
-            ).localCheckpoint(eager=True)
+            chosen.append(sel.select("u", "v", "w").dropDuplicates(["u", "v"]))
 
             # hook: p[c] = other component; break the per-tree 2-cycle
             # toward the smaller id (a.oc always appears in sel: it is an
@@ -167,4 +167,6 @@ def boruvka_msf(
         # unpersist on the raise paths too (max_jumps / max_rounds) —
         # loud-failure tests run in a shared session
         cedges.unpersist()
-    return chosen
+    # the rounds' picks, unioned once; with no cross edge at all (a
+    # loop-only input) the forest is empty
+    return reduce(DataFrame.unionByName, chosen, cedges.limit(0))

@@ -20,12 +20,16 @@ Cuthill-McKee oracle).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from combblas_spark.algorithms.bfs import bfs_levels
-from combblas_spark.graph import symmetrize
+from combblas_spark.graph import simple_adjacency, symmetrize
 from combblas_spark.operators.indexing import _perm_by
+from combblas_spark.operators.spmv import local_extrema
+from combblas_spark.runtime.plans import observed_checkpoint, superstep_checkpoint
 
 
 def pseudo_peripheral_root(edges: DataFrame, rounds: int = 2) -> int:
@@ -70,17 +74,17 @@ def rcm_ordering(edges: DataFrame, root: int | None = None) -> DataFrame:
     depth = max(level_sizes)
     total = sum(level_sizes.values())
 
-    spark = edges.sparkSession
-    pos = spark.createDataFrame([(int(root), 0)], "id long, pos long")
+    # one leaf per level (a projection of zip_with_index's checkpoint);
+    # the next level reads only the previous one
+    prev = lv.filter(F.col("level") == 0).select("id", F.lit(0).cast("long").alias("pos"))
+    levels = [prev]
     offset = 1
     for l in range(1, depth + 1):
         cur = lv.filter(F.col("level") == l).select("id")
-        prev = lv.filter(F.col("level") == l - 1).select("id")
         # first-parent position: min CM position among level-(l-1) neighbors
         ppos = (
-            sym.join(prev.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(cur.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .join(pos.withColumnRenamed("id", "src"), "src")
+            sym.join(cur.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            .join(prev.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("pos").alias("ppos"))
         )
@@ -89,10 +93,10 @@ def rcm_ordering(edges: DataFrame, root: int | None = None) -> DataFrame:
             keyed.select("id", "ppos", "d"),
             [F.col("ppos").asc(), F.col("d").asc(), F.col("id").asc()],
         )
-        pos = pos.unionByName(
-            rank.select("id", (F.col("pos") + F.lit(offset)).alias("pos"))
-        ).localCheckpoint(eager=True)
+        prev = rank.select("id", (F.col("pos") + F.lit(offset)).alias("pos"))
+        levels.append(prev)
         offset += level_sizes[l]
+    pos = reduce(DataFrame.unionByName, levels)
 
     # reverse: RCM = CM order flipped
     return pos.select((F.lit(total - 1) - F.col("pos")).alias("pos"), "id")
@@ -121,16 +125,17 @@ def min_degree_ordering(
 
     Per round over the active elimination graph:
       1. external degree per active vertex (groupBy count; isolated
-         vertices count 0);
+         vertices count 0), checkpointed once, with the minimum degree
+         and the active count read on that job;
       2. candidates = vertices at the GLOBAL minimum degree
          (MD.cpp:311's MinElement, widened to the whole tie set);
       3. winners = candidates whose md5("seed:round:id") priority is a
-         strict local minimum among neighboring candidates (Luby
-         round, same discipline as mis.py) — a maximal independent
-         subset of the min-degree tie set;
-      4. winners take the next positions in (id) order; each winner's
-         neighborhood becomes a clique (fill edges), winner-incident
-         edges drop out.
+         strict local minimum among neighboring candidates (the Luby
+         round ``operators.spmv.local_extrema``, as in mis.py) — a
+         maximal independent subset of the min-degree tie set;
+      4. winners take the next positions in (id) order (one leaf per
+         round, unioned once at return); each winner's neighborhood
+         becomes a clique (fill edges), winner-incident edges drop out.
 
     ``rounds=None`` runs to exhaustion (every vertex ordered — the
     full MD permutation). A fixed ``rounds=k`` runs exactly k rounds
@@ -144,55 +149,36 @@ def min_degree_ordering(
     bcsstk01 matrix in tests/test_mm.py against the natural and
     reverse orders.
     """
-    from combblas_spark.runtime.plans import observed_checkpoint, superstep_checkpoint
+    sym = adj = simple_adjacency(edges, "src")
+    deg_aggs = [F.count(F.lit(1)).alias("n"), F.min("d").alias("mindeg")]
+    # (id, d): external degree of every active vertex, checkpointed once
+    # a round with the active count and the minimum degree read on its job
+    deg, seen = observed_checkpoint(
+        sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("d")), 0, deg_aggs)
 
-    spark = edges.sparkSession
-    sym = symmetrize(edges).select("src", "dst").filter(F.col("src") != F.col("dst"))
-    sym = sym.localCheckpoint(eager=True)
-    verts, seen = observed_checkpoint(
-        sym.select(F.col("src").alias("id")).distinct(), 0, [F.count(F.lit(1)).alias("n")])
-
-    pos = spark.createDataFrame([], "pos long, id long")
+    ranks = []
     offset = 0
     if rounds is None:
-        # exhaustion is guaranteed within |V| rounds (every round
-        # eliminates >= 1 Luby winner), so bound by the vertex count —
-        # NOT a fixed cap (review r4: max_rounds=400 silently degraded
-        # dense graphs needing more rounds, e.g. a 500-clique, to the
-        # degree-order tail despite the full-MD-permutation contract).
-        # max_rounds remains an explicit opt-in ceiling below |V|.
-        n_rounds = seen["n"]
-        if max_rounds is not None:
-            n_rounds = min(n_rounds, max_rounds)
+        # every round eliminates >= 1 Luby winner, so |V| rounds exhaust
+        # the graph (a fixed cap would cut a 500-clique to the degree-
+        # order tail); max_rounds is an opt-in ceiling below |V|
+        n_rounds = seen["n"] if max_rounds is None else min(seen["n"], max_rounds)
     else:
         n_rounds = rounds
     for k in range(n_rounds):
-        deg = (
-            verts.join(sym, verts["id"] == sym["src"], "left")
-            .groupBy("id").agg(F.count("dst").alias("d"))
-        )
-        mindeg = deg.agg(F.min("d")).first()[0]
-        if mindeg is None:      # graph exhausted; further rounds no-op
+        if seen["n"] == 0:      # graph exhausted; further rounds no-op
             break
-        cand = deg.filter(F.col("d") == F.lit(int(mindeg))).select(
+        cand = deg.filter(F.col("d") == F.lit(int(seen["mindeg"]))).select(
             "id",
             F.md5(F.concat_ws(
                 ":", F.lit(str(seed)), F.lit(str(k)),
                 F.col("id").cast("string")).cast("binary")).alias("p"),
         )
-        nbr_min = (
-            sym.join(cand.withColumnsRenamed({"id": "src", "p": "_ps"}), "src")
-            .join(cand.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .groupBy(F.col("dst").alias("id")).agg(F.min("_ps").alias("_np"))
-        )
+        # the tie set is at most the active vertex count
         winners, won = observed_checkpoint(
-            cand.join(nbr_min, "id", "left")
-            .filter(F.col("_np").isNull() | (F.col("p") < F.col("_np")))
-            .select("id"), k, [F.count(F.lit(1)).alias("n")])
+            local_extrema(sym, cand, seen["n"]), k, [F.count(F.lit(1)).alias("n")])
         ranked = _perm_by(winners, [F.col("id").asc()])
-        pos = pos.unionByName(
-            ranked.select((F.col("pos") + F.lit(offset)).alias("pos"), "id")
-        ).localCheckpoint(eager=True)
+        ranks.append(ranked.select((F.col("pos") + F.lit(offset)).alias("pos"), "id"))
         offset += won["n"]
 
         # clique fill among each winner's neighbors (independence of the
@@ -212,13 +198,13 @@ def min_degree_ordering(
             .distinct(),
             k,
         )
-        verts = verts.join(winners, "id", "left_anti").localCheckpoint(eager=True)
+        deg, seen = observed_checkpoint(
+            deg.join(winners, "id", "left_anti").select("id")
+            .join(sym.withColumnRenamed("src", "id"), "id", "left")
+            .groupBy("id").agg(F.count("dst").alias("d")), k + 1, deg_aggs)
+    adj.unpersist()
 
     # bounded form: deterministic tail over whatever is still active
-    remaining = (
-        verts.join(sym, verts["id"] == sym["src"], "left")
-        .groupBy("id").agg(F.count("dst").alias("d"))
-    )
-    tail = _perm_by(remaining, [F.col("d").asc(), F.col("id").asc()])
-    return pos.unionByName(
-        tail.select((F.col("pos") + F.lit(offset)).alias("pos"), "id"))
+    tail = _perm_by(deg, [F.col("d").asc(), F.col("id").asc()])
+    ranks.append(tail.select((F.col("pos") + F.lit(offset)).alias("pos"), "id"))
+    return reduce(DataFrame.unionByName, ranks)

@@ -19,11 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.runtime.plans import (
-    broadcastable,
-    observed_checkpoint,
-    superstep_checkpoint,
-)
+from combblas_spark.runtime.plans import broadcastable, observed_checkpoint
 from combblas_spark.runtime.superstep import Supersteps
 
 
@@ -193,18 +189,16 @@ def delta_stepping_sssp(
     dist = dist.localCheckpoint(eager=True)
     bucket_of = lambda c: F.floor(c / F.lit(float(delta)))  # noqa: E731
     step = 0
-    cur = 0
+    # the next non-empty bucket and the rows past the current one (an
+    # upper bound on its size: the next frontier's broadcast gate) are
+    # read on the bucket's last checkpoint, heavy or light
+    cur, n_front = 0, 1  # the root's bucket
     try:
-        while cur < max_buckets:
-            # next non-empty bucket >= cur and its size, in one 1-row
-            # driver read (same class as every convergence read here)
-            row = (dist.filter(bucket_of(F.col("dist")) >= cur)
-                   .groupBy(bucket_of(F.col("dist")).alias("b")).count()
-                   .orderBy("b").limit(1).collect())
-            if not row:
-                break
-            cur, n_front = int(row[0]["b"]), row[0]["count"]
+        while cur is not None:
             in_bucket = bucket_of(F.col("dist")) == cur
+            past = bucket_of(F.col("dist")) > cur
+            ahead = [F.min(F.when(past, bucket_of(F.col("dist")))).alias("next"),
+                     F.sum(past.cast("long")).alias("past")]
             frontier = dist.filter(in_bucket)
             for inner in range(max_inner + 1):
                 if inner == max_inner:
@@ -216,7 +210,7 @@ def delta_stepping_sssp(
                 merged, seen = observed_checkpoint(
                     _min_merge(dist, _relax(light, frontier, n_front)), step,
                     [F.sum((_improved() & in_bucket).cast("long")).alias("front"),
-                     F.sum(in_bucket.cast("long")).alias("members")],
+                     F.sum(in_bucket.cast("long")).alias("members"), *ahead],
                     keep=["id", "dist"])
                 step += 1
                 frontier = _frontier(merged, dist, _improved() & in_bucket)
@@ -230,22 +224,16 @@ def delta_stepping_sssp(
             # heavy relaxation once from the settled bucket members
             n_mem = seen["members"]
             if n_mem > 0:
-                dist = superstep_checkpoint(
-                    _min_merge(dist, _relax(heavy, dist.filter(in_bucket), n_mem))
-                    .select("id", "dist"), step)
+                dist, seen = observed_checkpoint(
+                    _min_merge(dist, _relax(heavy, dist.filter(in_bucket), n_mem)), step,
+                    ahead, keep=["id", "dist"])
                 step += 1
-            cur += 1
-        else:
-            # cur reached max_buckets without the empty-bucket break —
-            # raise ONLY if unsettled distances actually remain (a graph
-            # whose highest bucket index is exactly max_buckets-1 is
-            # complete, not a failure)
-            row = (dist.filter(bucket_of(F.col("dist")) >= cur)
-                   .agg(F.min(bucket_of(F.col("dist"))).alias("b")).collect()[0])
-            if row["b"] is not None:  # pragma: no cover - loud failure
+            if seen["past"] and cur + 1 >= max_buckets:  # pragma: no cover - loud failure
                 raise RuntimeError(
                     f"delta_stepping_sssp: unsettled buckets remain after "
                     f"max_buckets={max_buckets}; raise max_buckets or delta")
+            # "next" over no rows reads 0: no row past cur is no next bucket
+            cur, n_front = int(seen["next"]) if seen["past"] else None, seen["past"]
     finally:
         # unpersist on the raise paths too (max_inner / max_buckets)
         for c in (light, heavy, e):

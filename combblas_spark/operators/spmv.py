@@ -31,6 +31,10 @@ the batched waves of BetwCent.cpp:155-218), and ``frontier_closure``
 the level-synchronous loop around it: the frontier regime choice, the
 per-level checkpoint and the stop rule live there, not in each
 traversal.
+
+``local_extrema`` is one Luby round of the greedy-selection loops (mis,
+jp_coloring, min_degree_ordering): the Select2ndMin SpMV over random
+priorities plus the EWise compare of Applications/FilteredMIS.cpp.
 """
 
 from __future__ import annotations
@@ -168,6 +172,24 @@ def frontier_closure(adj: DataFrame, start: DataFrame, aggs: list[Column] = (),
         frontier = nxt
         depth += 1
     return visited, depth
+
+
+def local_extrema(adj: DataFrame, cand: DataFrame, n: int, better: str = "min") -> DataFrame:
+    """One Luby round: the ``id``s of the ``n``-row candidate vector
+    ``cand`` (``id``, ``p``) whose priority ``p`` strictly beats (is
+    below for ``better="min"``, above for ``"max"``) the ``p`` of every
+    neighbour along ``adj`` that is also a candidate. A candidate with no
+    candidate neighbour wins. The neighbour extremum is ``spmv_agg`` of
+    ``cand`` in the ``broadcastable(n)`` regime, stitched back onto
+    ``cand`` (which drops every non-candidate ``dst``) before the
+    compare."""
+    agg, beats = (F.min, Column.__lt__) if better == "min" else (F.max, Column.__gt__)
+    bc = broadcastable(n)
+    cand = cand.select("id", "p")
+    nbr = spmv_agg(adj, cand, [agg("p").alias("_nbr")], bc)
+    return (stitch(cand, nbr, n, bc)
+            .filter(F.col("_nbr").isNull() | beats(F.col("p"), F.col("_nbr")))
+            .select("id"))
 
 
 def salted_spmv(

@@ -78,18 +78,19 @@ def main() -> None:
     print("dictionary plan + lineage: PYTHON-FREE (asserted)")
 
     print("=== 5. the library's superstep vector exchange in both regimes "
-          "(ANF hop, HITS half-step, FastRP superstep, BFS-family wave) and a "
-          "k-core round ===")
+          "(ANF hop, HITS half-step, FastRP superstep, BFS-family wave, Luby "
+          "round) and a k-core round ===")
     from combblas_spark.algorithms.anf import _init_mask, _or_hop
     from combblas_spark.algorithms.embeddings import projection_entry
     from combblas_spark.graph import simple_adjacency, symmetrize_partitioned
-    from combblas_spark.operators.spmv import frontier_wave
+    from combblas_spark.operators.spmv import frontier_wave, local_extrema
     from combblas_spark.runtime import plans
     from combblas_spark.runtime.plans import layout_vector, superstep_checkpoint
 
     sym = symmetrize_partitioned(g, "dst", 16).select("src", "dst").persist()
     sym.count()
     adj_src = simple_adjacency(g, "src", directed=True)
+    sym_src = simple_adjacency(g, "src")
     e_dst = g.select("src", "dst").repartition(16, "dst").persist()
     e_dst.count()
     n_v = vertices(g).count()
@@ -194,6 +195,20 @@ def main() -> None:
             assert_step_shape(name, df)
             assert len(shuffles(df)) == n_ex, (name, shuffles(df))
             print(f"{name}: {n_ex} exchanges, equi-joins, no window, PYTHON-FREE (asserted)")
+        # one Luby round over a checkpointed (id, p) candidate vector as
+        # mis lays it out. Broadcast regime: candidates broadcast into the
+        # edge join, the neighbour minimum broadcast back, only the
+        # aggregation exchanged. Shuffle regime: also the candidates to
+        # src and, for the stitch, to id.
+        cand = vertices(g).select("id", F.md5(F.col("id").cast("string")).alias("p"))
+        luby = local_extrema(sym_src, cand.localCheckpoint(eager=True), n_v)
+        assert_step_shape("luby_round", luby)
+        plan, n_ex = luby._jdf.queryExecution().executedPlan().toString(), 1 if bc else 3
+        assert len(shuffles(luby)) == n_ex, shuffles(luby)
+        assert not bc or (plan.count("BroadcastHashJoin") == 2
+                          and "SortMergeJoin" not in plan), plan
+        print(f"luby_round: {n_ex} exchanges{', two broadcast joins' if bc else ''}, "
+              "equi-joins, no window, PYTHON-FREE (asserted)")
     plans.BROADCAST_MAX_VERTICES, plans.SMALL_VECTOR_MAX = defaults
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_auto)
 

@@ -2834,6 +2834,29 @@ def test_coloring_proper_total_deterministic(spark):
         jp_coloring(g, seed=42, max_rounds=1)
 
 
+def test_luby_loops_regime_invariant(spark, monkeypatch):
+    """The Luby wave (``operators.spmv.local_extrema``) takes its join
+    regime from ``broadcastable``: MIS, JP colouring and the min-degree
+    ordering return the same rows in the broadcast and the shuffle
+    regime."""
+    from combblas_spark.algorithms.coloring import jp_coloring
+    from combblas_spark.algorithms.mis import maximal_independent_set
+    from combblas_spark.algorithms.ordering import min_degree_ordering
+
+    g = build_graph(rmat_edges(spark, scale=6, edgefactor=4, seed=11),
+                    drop_loops=True, sum_duplicates=True).persist()
+    got = {}
+    for regime in regimes(monkeypatch):
+        got[regime] = (
+            sorted(r["id"] for r in maximal_independent_set(g).collect()),
+            sorted(map(tuple, jp_coloring(g).collect())),
+            sorted(map(tuple, min_degree_ordering(g).collect())),
+        )
+    assert got["broadcast"] == got["shuffle"]
+    assert got["broadcast"][0] and got["broadcast"][1] and got["broadcast"][2]
+    g.unpersist()
+
+
 # ----------------------------------------------------------------- adamic-adar
 
 def test_adamic_adar_known(spark):
