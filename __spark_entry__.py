@@ -45,7 +45,8 @@ from combblas_spark.algorithms.components import connected_components
 from combblas_spark.algorithms.labelprop import label_propagation
 from combblas_spark.algorithms.bfs import bfs_levels
 from combblas_spark.algorithms.sssp import sssp
-from combblas_spark.algorithms.triangles import lower_triangle, triangles_per_vertex
+from combblas_spark.algorithms.triangles import (lower_triangle, oriented_triangles,
+                                                 triangles_per_vertex, undirected_degree)
 from combblas_spark.functions.text import analyze_documents
 from combblas_spark.functions.dedup import (
     exact_duplicates, minhash_signatures, near_dup_clusters, ngram_jaccard,
@@ -219,14 +220,8 @@ def q_dim_apply_colstochastic(spark, sf):
 
 def q_triangle_count(spark, sf):
     g = events_graph(spark, sf)
-    L = lower_triangle(g)
-    ab = L.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = L.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    closed = (
-        ab.join(bc, "b").select("a", "c")
-        .join(L.select(F.col("src").alias("a"), F.col("dst").alias("c")), ["a", "c"], "left_semi")
-    )
-    return closed.agg(F.count(F.lit(1)).alias("n_triangles"))
+    tri = oriented_triangles(lower_triangle(g))
+    return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
 def q_connected_components(spark, sf):
@@ -495,11 +490,9 @@ def q_degree_hist(spark, sf):
     """Degree distribution histogram of the undirected simple graph —
     the power-law diagnostic: (degree, n_vertices), exact counts."""
     g = events_graph(spark, sf)
-    L = lower_triangle(g)
-    dirs = L.unionByName(
-        L.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    deg = dirs.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_vertices"))
+    deg = undirected_degree(lower_triangle(g))
+    return deg.groupBy(F.col("deg").alias("degree")).agg(
+        F.count(F.lit(1)).alias("n_vertices"))
 
 
 def q_weighted_triangles(spark, sf):
@@ -541,11 +534,8 @@ def q_local_clustering(spark, sf):
     re-aggregate without float error."""
     g = events_graph(spark, sf)
     tri = triangles_per_vertex(g).select("id", "tri")
-    L = lower_triangle(g)
-    dirs = L.unionByName(
-        L.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    deg = dirs.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("d"))
-    w = deg.select("id", ((F.col("d") * (F.col("d") - 1)) / 2).cast("long").alias("wedges"))
+    deg = undirected_degree(lower_triangle(g))
+    w = deg.select("id", ((F.col("deg") * (F.col("deg") - 1)) / 2).cast("long").alias("wedges"))
     return (
         w.join(tri, "id", "left")
         .select("id", F.coalesce("tri", F.lit(0)).alias("tri"), "wedges",
@@ -578,21 +568,10 @@ def q_transitivity(spark, sf):
     one double division, NULL when the graph has no wedge."""
     g = events_graph(spark, sf)
     L = lower_triangle(g)
-    ab = L.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = L.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    closed = (
-        ab.join(bc, "b").select("a", "c")
-        .join(L.select(F.col("src").alias("a"), F.col("dst").alias("c")),
-              ["a", "c"], "left_semi")
-    )
-    tri = closed.agg(F.count(F.lit(1)).alias("triangles"))
-    dirs = L.unionByName(
-        L.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    tri = oriented_triangles(L).agg(F.count(F.lit(1)).alias("triangles"))
     # sum d*(d-1) = 2*wedges, so transitivity = 6*T / sum(d*(d-1))
-    w2 = (
-        dirs.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        .agg(F.sum(F.col("d") * (F.col("d") - 1)).alias("w2"))
-    )
+    w2 = undirected_degree(L).agg(
+        F.sum(F.col("deg") * (F.col("deg") - 1)).alias("w2"))
     return tri.crossJoin(w2).select(
         _p6(F.when(F.col("w2") > 0,
                        (F.col("triangles") * 6).cast("double") / F.col("w2"))).alias("transitivity"),

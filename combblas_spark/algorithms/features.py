@@ -37,7 +37,9 @@ from combblas_spark.portable import pround
 
 from combblas_spark.algorithms.components import connected_components
 from combblas_spark.algorithms.kcore import core_numbers
-from combblas_spark.algorithms.triangles import lower_triangle, triangles_per_vertex
+from combblas_spark.algorithms.triangles import (lower_triangle, triangles_per_vertex,
+                                                 undirected_degree)
+from combblas_spark.graph import vertices
 
 
 def component_sizes(edges: DataFrame) -> DataFrame:
@@ -77,31 +79,22 @@ def vertex_features(edges: DataFrame) -> DataFrame:
     constituent). All columns except local_cc are exact integers (see
     module docstring).
     """
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
     de = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
     out_deg = de.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("out_deg"))
     in_deg = de.groupBy(F.col("dst").alias("id")).agg(
         F.count(F.lit(1)).alias("in_deg"))
-    # ONE symmetrize+distinct shuffle shared by und_deg and the triangle
-    # enumeration (triangles_per_vertex would otherwise rebuild it)
+    # ONE canonical pattern (one dedup shuffle) shared by the undirected
+    # degree and the triangle enumeration
     L = lower_triangle(edges).persist()
-    und_deg = (
-        L.select(F.col("src").alias("id"))
-        .unionByName(L.select(F.col("dst").alias("id")))
-        .groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-    )
+    und_deg = undirected_degree(L)
     tri = triangles_per_vertex(edges, lt=L).select("id", "tri")
     core = core_numbers(edges).select("id", "core")
     comp = connected_components(edges).select("id", "comp")
     csize = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("comp_size"))
     wedges = (F.col("deg") * (F.col("deg") - 1) / 2).cast("long")
     out = (
-        verts
+        vertices(edges)
         .join(out_deg, "id", "left")
         .join(in_deg, "id", "left")
         .join(und_deg, "id", "left")

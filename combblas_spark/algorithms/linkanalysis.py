@@ -90,46 +90,29 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
     exact integers; only the final ratio is rounded (6dp) — the same
     integer-moments portability contract as the other similarity ops.
 
-    Scale: one triangle enumeration (the masked-SpGEMM wedge join from
-    algorithms.triangles, fan-out bounded at the low-id vertex) + three
-    narrow unions + one hash agg; degrees are one more agg. No all-pairs
-    stage — only existing edges are scored.
+    Scale: one triangle enumeration (triangles.oriented_triangles, the
+    masked-SpGEMM wedge join, fan-out bounded at the low-id vertex)
+    attributed to its three edges (triangles.edge_support) + the
+    degree read from the same canonical pattern
+    (triangles.undirected_degree). No all-pairs stage — only existing
+    edges are scored.
     """
-    from combblas_spark.algorithms.triangles import lower_triangle
+    from combblas_spark.algorithms.triangles import (edge_support, lower_triangle,
+                                                     oriented_triangles, undirected_degree)
 
     L = lower_triangle(edges).persist()
-    ab = L.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = L.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    tri = (
-        ab.join(bc, "b")
-        .join(L.select(F.col("src").alias("a"), F.col("dst").alias("c")),
-              ["a", "c"], "left_semi")
-    )
-    # triangle (a,b,c), a<b<c, raises the count of its three edges
-    per_edge = (
-        tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
-        .unionByName(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-        .groupBy("u", "v").agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    deg = (
-        L.select(F.col("src").alias("id"))
-        .unionByName(L.select(F.col("dst").alias("id")))
-        .groupBy("id").agg(F.count(F.lit(1)).alias("_d"))
-    )
+    deg = undirected_degree(L)
+    n_common = F.coalesce("sup", F.lit(0))
     out = (
-        L.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .join(per_edge, ["u", "v"], "left")
-        .join(deg.select(F.col("id").alias("u"), F.col("_d").alias("deg_u")), "u")
-        .join(deg.select(F.col("id").alias("v"), F.col("_d").alias("deg_v")), "v")
+        L.join(edge_support(oriented_triangles(L)), ["src", "dst"], "left")
+        .join(deg.select(F.col("id").alias("src"), F.col("deg").alias("deg_u")), "src")
+        .join(deg.select(F.col("id").alias("dst"), F.col("deg").alias("deg_v")), "dst")
         .select(
-            "u", "v",
-            F.coalesce("n_common", F.lit(0)).alias("n_common"),
+            F.col("src").alias("u"), F.col("dst").alias("v"),
+            n_common.alias("n_common"),
             "deg_u", "deg_v",
-            pround(
-                F.coalesce("n_common", F.lit(0)).cast("double")
-                / (F.col("deg_u") + F.col("deg_v")
-                   - F.coalesce("n_common", F.lit(0)))).alias("jaccard"),
+            pround(n_common.cast("double")
+                   / (F.col("deg_u") + F.col("deg_v") - n_common)).alias("jaccard"),
         )
     )
     out = out.localCheckpoint(eager=True)
@@ -150,15 +133,10 @@ def rich_club(edges: DataFrame, k: int) -> DataFrame:
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    from combblas_spark.algorithms.triangles import lower_triangle
+    from combblas_spark.algorithms.triangles import lower_triangle, undirected_degree
 
     L = lower_triangle(edges).persist()
-    deg = (
-        L.select(F.col("src").alias("id"))
-        .unionByName(L.select(F.col("dst").alias("id")))
-        .groupBy("id").agg(F.count(F.lit(1)).alias("_d"))
-    )
-    rich = deg.where(F.col("_d") > k).select("id")
+    rich = undirected_degree(L).where(F.col("deg") > k).select("id")
     e_rich = (
         L.join(rich.withColumnRenamed("id", "src"), "src", "left_semi")
         .join(rich.withColumnRenamed("id", "dst"), "dst", "left_semi")

@@ -1,4 +1,5 @@
-"""Triangle counting — the masked-SpGEMM lower-triangle trick.
+"""Triangle counting — the masked-SpGEMM lower-triangle trick, and the
+one home of the triangle family's enumeration.
 
 Standard CombBLAS usage (not in the reference repo itself; north rule
 requires it): with L the strictly-lower-triangular pattern of the
@@ -7,10 +8,14 @@ pushed into the plan as a semi-join BEFORE aggregation (see
 operators.spgemm.masked_spgemm), so wedges that close no triangle are
 filtered at the join, not materialized.
 
-Ordering vertices by id (src < dst canonical form) bounds the join fan-
-out by the smaller endpoint's degree — the classic heavy-hitter
-mitigation for power-law graphs (each wedge is generated at its lowest
-vertex).
+``lower_triangle`` builds the canonical pattern L and
+``oriented_triangles`` the masked wedge join over it; the per-edge
+support, the per-vertex counts, the undirected degree, k-truss,
+trussness, edge embeddedness, the rich club and the feature table all
+read them instead of rebuilding either. Orienting every pair low ->
+high bounds the join fan-out by the smaller endpoint's out-degree —
+the classic heavy-hitter mitigation for power-law graphs (each wedge
+is generated at its lowest vertex).
 """
 
 from __future__ import annotations
@@ -18,47 +23,95 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from combblas_spark.graph import symmetrize
+from combblas_spark.graph import vertices
 
 
 def lower_triangle(edges: DataFrame, order_by_degree: bool = False) -> DataFrame:
-    """Canonical undirected pattern: distinct pairs oriented low -> high.
+    """Canonical simple undirected pattern (src, dst): one row per
+    undirected edge of ``edges``, loops dropped, oriented low -> high.
+    Built from the distinct (least, greatest) pairs: one exchange of m
+    rows, where symmetrizing first would shuffle 2m.
 
     order_by_degree=False orients by vertex id (src < dst) — the cheap
     default, and the oracle-stable one. order_by_degree=True orients by
-    (degree, id) rank: every wedge is generated at its LOWEST-DEGREE
-    vertex, which bounds the join fan-out by the smaller endpoint degree
-    — the standard heavy-hitter mitigation on power-law graphs (at web
-    scale a hub with degree 10^7 would otherwise emit 10^14 wedges).
-    Triangle counts are orientation-invariant (property-tested).
+    (degree, id) rank, swapping a pair whose src has the higher degree:
+    every wedge is generated at its LOWEST-DEGREE vertex, which bounds
+    the join fan-out by the smaller endpoint degree — the standard
+    heavy-hitter mitigation on power-law graphs (at web scale a hub with
+    degree 10^7 would otherwise emit 10^14 wedges). The degree is the
+    simple undirected one (``undirected_degree``). Triangle counts are
+    orientation-invariant (property-tested).
     """
-    sym = symmetrize(edges)
+    L = (
+        edges.where(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"))
+        .distinct()
+    )
     if not order_by_degree:
-        return sym.filter(F.col("src") < F.col("dst")).select("src", "dst")
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("_d"))
-    s = deg.select(F.col("id").alias("src"), F.col("_d").alias("_ds"))
-    d = deg.select(F.col("id").alias("dst"), F.col("_d").alias("_dd"))
-    ranked = sym.join(s, "src").join(d, "dst")
-    lower = (F.col("_ds") < F.col("_dd")) | (
-        (F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst")))
-    return ranked.filter(lower).select("src", "dst")
+        return L
+    deg = undirected_degree(L)
+    ranked = (
+        L.join(deg.select(F.col("id").alias("src"), F.col("deg").alias("_ds")), "src")
+        .join(deg.select(F.col("id").alias("dst"), F.col("deg").alias("_dd")), "dst")
+    )
+    swap = F.col("_ds") > F.col("_dd")  # a degree tie keeps src < dst
+    return ranked.select(F.when(swap, F.col("dst")).otherwise(F.col("src")).alias("src"),
+                         F.when(swap, F.col("src")).otherwise(F.col("dst")).alias("dst"))
+
+
+def _pairs(L: DataFrame, u: str, v: str) -> DataFrame:
+    """The oriented pairs of ``L`` as columns (``u``, ``v``)."""
+    return L.select(F.col("src").alias(u), F.col("dst").alias(v))
+
+
+def _per_vertex(df: DataFrame, cols: tuple[str, ...], name: str) -> DataFrame:
+    """(id, ``name``): how many rows of ``df`` hold each id in one of
+    ``cols``. One scan of ``df`` (an explode, not a union of projections
+    that would plan ``df``'s subtree once per column) and one hash
+    aggregate."""
+    return (df.select(F.explode(F.array(*cols)).alias("id"))
+            .groupBy("id").agg(F.count(F.lit(1)).alias(name)))
+
+
+def undirected_degree(L: DataFrame) -> DataFrame:
+    """(id, deg): the simple undirected degree, read from the canonical
+    pattern ``L`` (each undirected edge is one row of it). Vertices with
+    no non-loop edge have no row."""
+    return _per_vertex(L, ("src", "dst"), "deg")
+
+
+def oriented_triangles(L: DataFrame) -> DataFrame:
+    """(a, b, c): every triangle of the oriented pattern ``L`` exactly
+    once, as L(a,b), L(b,c), L(a,c). The wedge join ab ⋈ bc on b is
+    closed by a semi-join on L(a,c) — the mask of sum(L .* (L x L)) —
+    so an open wedge is dropped at the join and never aggregated.
+    ``L`` is read three times: a caller that acts on the result more
+    than once, or over an expensive ``L``, persists ``L`` first."""
+    return (
+        _pairs(L, "a", "b").join(_pairs(L, "b", "c"), "b")
+        .join(_pairs(L, "a", "c"), ["a", "c"], "left_semi")
+        .select("a", "b", "c")
+    )
+
+
+def edge_support(tri: DataFrame) -> DataFrame:
+    """(src, dst, sup): for each pair of ``L`` that closes a triangle of
+    ``tri`` (``oriented_triangles(L)``), the number of triangles through
+    it — each triangle adds one to each of its three edges. Pairs in no
+    triangle have no row."""
+    sides = F.array(*[F.struct(F.col(u).alias("src"), F.col(v).alias("dst"))
+                      for u, v in (("a", "b"), ("b", "c"), ("a", "c"))])
+    return tri.select(F.inline(sides)).groupBy("src", "dst").agg(
+        F.count(F.lit(1)).alias("sup"))
 
 
 def triangle_count(edges: DataFrame, order_by_degree: bool = False) -> int:
     """Total number of triangles in the undirected view of ``edges``."""
     # L feeds the plan THREE times (both wedge sides + the closing mask)
-    # and Catalyst does NOT reuse the symmetrize-dedup subtree across
-    # them (measured: 9 exchanges, 0 ReusedExchange on the events graph)
-    # — persist it so the dedup runs once.
+    # and Catalyst does NOT reuse the dedup subtree across them —
+    # persist it so the dedup runs once.
     L = lower_triangle(edges, order_by_degree).persist()
-    # wedges a<b<c from L(a,b) and L(b,c); close with L(a,c)
-    ab = L.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = L.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    wedges = ab.join(bc, "b").select("a", "c")
-    closed = wedges.join(
-        L.select(F.col("src").alias("a"), F.col("dst").alias("c")), ["a", "c"], "left_semi"
-    )
-    n = closed.count()
+    n = oriented_triangles(L).count()
     L.unpersist()
     return n
 
@@ -71,28 +124,26 @@ def triangles_per_vertex(edges: DataFrame, order_by_degree: bool = False,
     the result is materialized (eager localCheckpoint) so the cache can
     be released before returning. ``lt`` lets a caller that already
     holds the persisted lower triangle (e.g. vertex_features) pass it
-    in, skipping the second symmetrize+distinct shuffle; ownership stays
-    with the caller (not unpersisted here)."""
+    in, skipping a second dedup shuffle; ownership stays with the
+    caller (not unpersisted here)."""
     caller_owns = lt is not None
     L = lt if caller_owns else lower_triangle(edges, order_by_degree).persist()
-    ab = L.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = L.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    tri = (
-        ab.join(bc, "b")
-        .join(L.select(F.col("src").alias("a"), F.col("dst").alias("c")), ["a", "c"], "left_semi")
-        .select("a", "b", "c")
-    )
-    per_v = (
-        tri.select(F.col("a").alias("id"))
-        .unionByName(tri.select(F.col("b").alias("id")))
-        .unionByName(tri.select(F.col("c").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("tri"))
-    )
+    per_v = _per_vertex(oriented_triangles(L), ("a", "b", "c"), "tri")
     per_v = per_v.localCheckpoint(eager=True)
     if not caller_owns:
         L.unpersist()
     return per_v
+
+
+def _four_cliques(L: DataFrame) -> DataFrame:
+    """(a, b, c, d): every K4 of the oriented pattern ``L`` exactly once —
+    each oriented triangle extended along L(c, d), kept where L(a, d)
+    and L(b, d) close it (two semi-join masks)."""
+    return (
+        oriented_triangles(L).join(_pairs(L, "c", "d"), "c")
+        .join(_pairs(L, "a", "d"), ["a", "d"], "left_semi")
+        .join(_pairs(L, "b", "d"), ["b", "d"], "left_semi")
+    )
 
 
 def four_cliques_per_vertex(edges: DataFrame,
@@ -106,10 +157,11 @@ def four_cliques_per_vertex(edges: DataFrame,
     k-cliques in Sparse Real-World Graphs", WWW 2018): orient edges
     (id order by default, degree order for power-law scale — the same
     ``order_by_degree`` lever as triangle_count, counts are
-    orientation-invariant), enumerate oriented triangles a<b<c, then
-    close each with a fourth vertex d adjacent to all three via one
-    equi-join on the (c, d) edge plus two semi-join masks — every K4 is
-    produced exactly once at its sorted orientation.
+    orientation-invariant), enumerate the oriented triangles a<b<c
+    (``oriented_triangles``), then close each with a fourth vertex d
+    adjacent to all three via one equi-join on the (c, d) edge plus two
+    semi-join masks — every K4 is produced exactly once at its sorted
+    orientation.
 
     Scale shape: the K4 join fans out from the triangle table by the
     orientation-bounded out-degree of c (degree ordering bounds it by
@@ -118,33 +170,8 @@ def four_cliques_per_vertex(edges: DataFrame,
     narrow unions + one hash agg.
     """
     L = lower_triangle(edges, order_by_degree).persist()
-    ab = L.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = L.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    tri = (
-        ab.join(bc, "b")
-        .join(L.select(F.col("src").alias("a"), F.col("dst").alias("c")),
-              ["a", "c"], "left_semi")
-    )
-    k4 = (
-        tri.join(L.select(F.col("src").alias("c"), F.col("dst").alias("d")), "c")
-        .join(L.select(F.col("src").alias("a"), F.col("dst").alias("d")),
-              ["a", "d"], "left_semi")
-        .join(L.select(F.col("src").alias("b"), F.col("dst").alias("d")),
-              ["b", "d"], "left_semi")
-    )
-    contrib = (
-        k4.select(F.col("a").alias("id"))
-        .unionByName(k4.select(F.col("b").alias("id")))
-        .unionByName(k4.select(F.col("c").alias("id")))
-        .unionByName(k4.select(F.col("d").alias("id")))
-        .groupBy("id").agg(F.count(F.lit(1)).alias("k4"))
-    )
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    out = verts.join(contrib, "id", "left").select(
+    contrib = _per_vertex(_four_cliques(L), ("a", "b", "c", "d"), "k4")
+    out = vertices(edges).join(contrib, "id", "left").select(
         "id", F.coalesce("k4", F.lit(0)).alias("k4"))
     out = out.localCheckpoint(eager=True)
     L.unpersist()
@@ -168,8 +195,6 @@ def weighted_triangle_intensity(edges: DataFrame,
     becomes an inner join only to fetch the third weight. Skew and
     cost are the triangle enumeration's, unchanged.
     """
-    from combblas_spark.graph import vertices
-
     und = (
         edges.where(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("a"),

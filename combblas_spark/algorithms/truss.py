@@ -8,17 +8,17 @@ Applications/TriCnt*.cpp), so an extension row.
 
 Peel loop, all relational:
 
-  support(u,v) = |N(u) ∩ N(v)|  — one wedge join per round: the
-  canonical edge list joins the symmetric adjacency once per endpoint
-  on the shared third vertex, then counts per edge (map-side
-  combinable; the same masked-SpGEMM shape as triangles.py, with the
-  mask being the edge list itself).
+  support(u,v) = triangles through (u,v) — one oriented triangle
+  enumeration per round over the surviving canonical edges
+  (triangles.oriented_triangles, the masked wedge join of
+  triangle_count) attributed to its three edges
+  (triangles.edge_support, map-side combinable).
   drop edges with support < k-2; repeat until no edge drops.
 
 Rounds follow the peel depth (like k-core), each round's work is the
-wedge enumeration bounded by sum-of-degrees over surviving edges —
-shrinking monotonically. Oracle: the DuckDB twin unrolls the identical
-rounds (extra rounds past the fixed point are no-ops).
+oriented wedge enumeration over surviving edges — shrinking
+monotonically. Oracle: the DuckDB twin unrolls the identical rounds
+(extra rounds past the fixed point are no-ops).
 """
 
 from __future__ import annotations
@@ -27,40 +27,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from combblas_spark.algorithms.triangles import (edge_support, lower_triangle,
+                                                 oriented_triangles)
 from combblas_spark.runtime.plans import observed_checkpoint
+
+
+def _uv(L: DataFrame) -> DataFrame:
+    """The canonical pattern's pairs as (u, v), u < v."""
+    return L.select(F.col("src").alias("u"), F.col("dst").alias("v"))
 
 
 def k_truss(edges: DataFrame, k: int, max_rounds: int = 64) -> DataFrame:
     """Returns the canonical undirected edge list (u, v) with u < v of
     the k-truss subgraph (k >= 3; k <= 2 returns all edges)."""
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-    )
+    L = lower_triangle(edges)
     if k <= 2:
-        return e.localCheckpoint(eager=True)
-    e, seen = observed_checkpoint(e, 0, [F.count(F.lit(1)).alias("n")])
+        return _uv(L).localCheckpoint(eager=True)
+    L, seen = observed_checkpoint(L, 0, [F.count(F.lit(1)).alias("n")])
     n_e = seen["n"]
     converged = n_e == 0
     for r in range(max_rounds):
         if n_e == 0:
             converged = True
             break
-        sym = e.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-            e.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        n1 = sym.select(F.col("a").alias("u"), F.col("b").alias("w"))
-        n2 = sym.select(F.col("a").alias("v"), F.col("b").alias("w"))
-        survivors = (
-            e.join(n1, "u")
-            .join(n2, ["v", "w"])
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("_sup"))
-            .where(F.col("_sup") >= k - 2)
-            .select("u", "v")
-        )
-        e, seen = observed_checkpoint(survivors, r, [F.count(F.lit(1)).alias("n")])
+        # survivors as a semi-join onto L keep L's size estimate; the
+        # support aggregate's own estimate compounds every round and
+        # plans each later round by shuffle, one more Spark job a round
+        supported = edge_support(oriented_triangles(L)).where(F.col("sup") >= k - 2)
+        survivors = L.join(supported, ["src", "dst"], "left_semi")
+        L, seen = observed_checkpoint(survivors, r, [F.count(F.lit(1)).alias("n")])
         n_s = seen["n"]
         if n_s == n_e:
             converged = True
@@ -73,7 +68,7 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 64) -> DataFrame:
         raise RuntimeError(
             f"k_truss did not converge within max_rounds={max_rounds}; "
             "raise max_rounds (each round is one wedge-join job)")
-    return e
+    return _uv(L)
 
 
 def trussness(
@@ -97,9 +92,10 @@ def trussness(
     is enumerated ONCE (static incidence — no re-peeling per k, unlike
     the peel-based k_truss above which answers one fixed k).
 
-    Scale shape: one oriented triangle enumeration (the masked-SpGEMM
-    wedge join of triangles.py) -> a 3-rows-per-triangle incidence
-    table, persisted; each round is two equi-joins of the edge-value
+    Scale shape: one oriented triangle enumeration
+    (triangles.oriented_triangles), persisted and read as three
+    incidence rows per triangle; t_0 is its triangles.edge_support.
+    Each round is two equi-joins of the edge-value
     vector onto the incidence plus ONE per-edge window (cardinality =
     that edge's triangle count, never global) and a map-side-combinable
     max agg. Convergence via the same sum-fixpoint read as core_numbers
@@ -109,17 +105,13 @@ def trussness(
     """
     from pyspark.sql import Window
 
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=True)
-    )
-    ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = ab.join(bc, "b").join(ac, ["a", "c"])  # rows unique: a < b < c
+    L = lower_triangle(edges).localCheckpoint(eager=True)
+    e = _uv(L)
+    # the triangle table is the static part: cached once, three
+    # incidence rows per triangle (edge, partner 1, partner 2) read
+    # lazily over it every round
+    tri = oriented_triangles(L).persist(StorageLevel.MEMORY_AND_DISK)
+    tri.count()
     inc = (
         tri.select(F.col("a").alias("eu"), F.col("b").alias("ev"),
                    F.col("a").alias("p1u"), F.col("c").alias("p1v"),
@@ -132,13 +124,11 @@ def trussness(
             tri.select(F.col("b").alias("eu"), F.col("c").alias("ev"),
                        F.col("a").alias("p1u"), F.col("b").alias("p1v"),
                        F.col("a").alias("p2u"), F.col("c").alias("p2v")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    inc.count()
-
-    sup = inc.groupBy("eu", "ev").agg(F.count(F.lit(1)).alias("t"))
+    sup = edge_support(tri).select(F.col("src").alias("u"), F.col("dst").alias("v"),
+                                   F.col("sup").alias("t"))
     t, seen = observed_checkpoint(
-        e.join(sup, (e["u"] == sup["eu"]) & (e["v"] == sup["ev"]), "left")
+        e.join(sup, ["u", "v"], "left")
         .select("u", "v", F.coalesce("t", F.lit(0)).cast("long").alias("t")), 0,
         [F.sum("t").alias("s")])
     prev_s = seen["s"]
@@ -168,7 +158,7 @@ def trussness(
             converged = True
         prev_s = s
 
-    inc.unpersist()
+    tri.unpersist()
     if not converged:
         raise RuntimeError(
             f"trussness did not converge within max_iters={max_iters}; "

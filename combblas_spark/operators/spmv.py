@@ -180,16 +180,19 @@ def local_extrema(adj: DataFrame, cand: DataFrame, n: int, better: str = "min") 
     below for ``better="min"``, above for ``"max"``) the ``p`` of every
     neighbour along ``adj`` that is also a candidate. A candidate with no
     candidate neighbour wins. The neighbour extremum is ``spmv_agg`` of
-    ``cand`` in the ``broadcastable(n)`` regime, stitched back onto
-    ``cand`` (which drops every non-candidate ``dst``) before the
-    compare."""
+    ``cand`` in the ``broadcastable(n)`` regime. It holds a row per
+    neighbour of a candidate, so it is first joined to ``cand`` in the
+    same regime: only the candidates that lose reach the ``stitch``, at
+    most ``n`` rows, the count its broadcast gate reads."""
     agg, beats = (F.min, Column.__lt__) if better == "min" else (F.max, Column.__gt__)
     bc = broadcastable(n)
     cand = cand.select("id", "p")
     nbr = spmv_agg(adj, cand, [agg("p").alias("_nbr")], bc)
-    return (stitch(cand, nbr, n, bc)
-            .filter(F.col("_nbr").isNull() | beats(F.col("p"), F.col("_nbr")))
-            .select("id"))
+    xv = cand.withColumnRenamed("id", "src")
+    lost = (nbr.join(F.broadcast(xv) if bc else xv, F.col("id") == F.col("src"))
+            .filter(~beats(F.col("p"), F.col("_nbr")))
+            .select("id", F.lit(True).alias("_lost")))
+    return stitch(cand, lost, n, bc).filter(F.col("_lost").isNull()).select("id")
 
 
 def salted_spmv(

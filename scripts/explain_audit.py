@@ -13,7 +13,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from combblas_spark import get_spark
-from combblas_spark.algorithms.triangles import lower_triangle
+from combblas_spark.algorithms.triangles import (_four_cliques, lower_triangle,
+                                                 oriented_triangles)
 from combblas_spark.graph import events_graph, vertices
 
 
@@ -52,15 +53,19 @@ def main() -> None:
              [F.sum(F.col("val") * F.col("_r")).alias("v")], True).explain("formatted")
 
     print("=== 3. triangle count: mask as semi-join before aggregation ===")
-    L = lower_triangle(g)
-    ab = L.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = L.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    (
-        ab.join(bc, "b").select("a", "c")
-        .join(L.select(F.col("src").alias("a"), F.col("dst").alias("c")),
-              ["a", "c"], "left_semi")
-        .agg(F.count(F.lit(1)))
-    ).explain("formatted")
+    tri_count = oriented_triangles(lower_triangle(g)).agg(F.count(F.lit(1)))
+    tri_count.explain("formatted")
+    plan = tri_count._jdf.queryExecution().executedPlan().toString()
+    # the wedge join is the one inner join; the closing mask L(a,c) is a
+    # semi-join, never a materialized second join
+    assert plan.count("LeftSemi") == 1, plan
+    assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan, plan
+    assert "Window" not in plan, plan
+    assert all(m not in plan for m in
+               ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                "PythonRDD")), plan
+    print("triangle_count: closing mask is a LeftSemi join, no window, "
+          "no cartesian, PYTHON-FREE (asserted)")
 
     print("=== 4. id-dictionary (ReadGeneralizedTuples path): Python-free ===")
     from combblas_spark.graph import relabel_to_dense_ids
@@ -197,17 +202,19 @@ def main() -> None:
             print(f"{name}: {n_ex} exchanges, equi-joins, no window, PYTHON-FREE (asserted)")
         # one Luby round over a checkpointed (id, p) candidate vector as
         # mis lays it out. Broadcast regime: candidates broadcast into the
-        # edge join, the neighbour minimum broadcast back, only the
-        # aggregation exchanged. Shuffle regime: also the candidates to
-        # src and, for the stitch, to id.
+        # edge join and onto the neighbour minimum (a row per neighbour of
+        # a candidate), the losers (at most one row per candidate)
+        # broadcast back, only the aggregation exchanged. Shuffle regime:
+        # also the candidates to src (once per join) and, for the stitch,
+        # to id.
         cand = vertices(g).select("id", F.md5(F.col("id").cast("string")).alias("p"))
         luby = local_extrema(sym_src, cand.localCheckpoint(eager=True), n_v)
         assert_step_shape("luby_round", luby)
-        plan, n_ex = luby._jdf.queryExecution().executedPlan().toString(), 1 if bc else 3
+        plan, n_ex = luby._jdf.queryExecution().executedPlan().toString(), 1 if bc else 4
         assert len(shuffles(luby)) == n_ex, shuffles(luby)
-        assert not bc or (plan.count("BroadcastHashJoin") == 2
-                          and "SortMergeJoin" not in plan), plan
-        print(f"luby_round: {n_ex} exchanges{', two broadcast joins' if bc else ''}, "
+        assert plan.count("BroadcastHashJoin") == (3 if bc else 0), plan
+        assert plan.count("SortMergeJoin") == (0 if bc else 3), plan
+        print(f"luby_round: {n_ex} exchanges{', three broadcast joins' if bc else ''}, "
               "equi-joins, no window, PYTHON-FREE (asserted)")
     plans.BROADCAST_MAX_VERTICES, plans.SMALL_VECTOR_MAX = defaults
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_auto)
@@ -469,21 +476,10 @@ def main() -> None:
     print("=== 14. r4 fifth-session ops: K4 clique extension — shapes "
           "asserted ===")
     # four_cliques_per_vertex materializes via localCheckpoint (cache
-    # release), so audit the pre-checkpoint shape: the same oriented
-    # triangle join + one (c,d) extension + two semi-join clique masks.
-    k4L = lower_triangle(g)
-    k4ab = k4L.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    k4bc = k4L.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    k4tri = k4ab.join(k4bc, "b").join(
-        k4L.select(F.col("src").alias("a"), F.col("dst").alias("c")),
-        ["a", "c"], "left_semi")
-    k4df = (
-        k4tri.join(k4L.select(F.col("src").alias("c"), F.col("dst").alias("d")), "c")
-        .join(k4L.select(F.col("src").alias("a"), F.col("dst").alias("d")),
-              ["a", "d"], "left_semi")
-        .join(k4L.select(F.col("src").alias("b"), F.col("dst").alias("d")),
-              ["b", "d"], "left_semi")
-        .groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("k4")))
+    # release), so audit the pre-checkpoint shape: the oriented triangle
+    # join + one (c,d) extension + two semi-join clique masks.
+    k4df = (_four_cliques(lower_triangle(g))
+            .groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("k4")))
     for name, df in (("four_cliques", k4df),):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "HashAggregate" in plan or "SortAggregate" in plan, \

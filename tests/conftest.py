@@ -15,6 +15,9 @@ def spark():
         cores=os.environ.get("SPARK_TEST_CPUS", "4"),
         shuffle_partitions=8,
         driver_memory="4g",
+        # per-call job counts (tests/test_runtime.py::_jobs) read the
+        # retained job list; the default 1,000 truncates long loops
+        extra_conf={"spark.ui.retainedJobs": "100000"},
     )
     yield s
     s.stop()

@@ -299,14 +299,36 @@ def test_triangles_rmat(spark):
 def test_triangles_degree_ordering_invariant(spark):
     """Degree-ordered orientation (power-law wedge bounding) must give
     identical totals AND per-vertex counts to id ordering — on a skewed
-    RMAT graph and on a star+triangle hub fixture."""
+    RMAT graph and on a star+triangle hub fixture. The triangle family
+    (both orientations, per-vertex triangles and 4-cliques, k-truss,
+    edge embeddedness) also answers the same at id offset 0 and 2^60,
+    once shifted back."""
+    from combblas_spark.algorithms.linkanalysis import edge_embeddedness
+    from combblas_spark.algorithms.triangles import four_cliques_per_vertex
+    from combblas_spark.algorithms.truss import k_truss
+
     raw = rmat_edges(spark, scale=6, edgefactor=4, seed=3)
     g = build_graph(raw).persist()
-    assert triangle_count(g, order_by_degree=True) == triangle_count(g)
-    a = {r["id"]: r["tri"] for r in triangles_per_vertex(g).collect()}
-    b = {r["id"]: r["tri"]
-         for r in triangles_per_vertex(g, order_by_degree=True).collect()}
-    assert a == b
+    E = [(r["src"], r["dst"]) for r in g.select("src", "dst").collect()]
+    runs = []
+    for off in (0, 1 << 60):
+        h = df_edges(spark, [(s + off, d + off) for s, d in E])
+        runs.append({
+            "count": triangle_count(h),
+            "count_deg": triangle_count(h, order_by_degree=True),
+            "tri": {r["id"] - off: r["tri"] for r in triangles_per_vertex(h).collect()},
+            "tri_deg": {r["id"] - off: r["tri"]
+                        for r in triangles_per_vertex(h, order_by_degree=True).collect()},
+            "k4": {r["id"] - off: r["k4"] for r in four_cliques_per_vertex(h).collect()},
+            "k_truss": {(r["u"] - off, r["v"] - off) for r in k_truss(h, 4).collect()},
+            "embeddedness": {(r["u"] - off, r["v"] - off): tuple(r)[2:]
+                             for r in edge_embeddedness(h).collect()},
+        })
+    base, shifted = runs
+    assert base["count"] > 0 and base["k_truss"]
+    assert shifted == base
+    assert base["count_deg"] == base["count"] == triangle_count(g)
+    assert base["tri_deg"] == base["tri"]
     # hub fixture: vertex 0 linked to everyone, triangles only via 0
     hub = [(0, i) for i in range(1, 12)] + [(1, 2), (3, 4), (5, 6)]
     h = df_edges(spark, hub)
@@ -2855,6 +2877,34 @@ def test_luby_loops_regime_invariant(spark, monkeypatch):
     assert got["broadcast"] == got["shuffle"]
     assert got["broadcast"][0] and got["broadcast"][1] and got["broadcast"][2]
     g.unpersist()
+
+
+def test_local_extrema_broadcast_inflow_bounded(spark, monkeypatch):
+    """The inflow a Luby round stitches back holds at most one row per
+    candidate, the count its broadcast gate reads: on a star whose only
+    candidate is the hub, the hub's 20 non-candidate leaves never reach
+    the broadcast inflow. The hub has no candidate neighbour, so it
+    wins in both regimes."""
+    from combblas_spark.graph import simple_adjacency
+    from combblas_spark.operators import spmv as spmv_mod
+    from combblas_spark.runtime.plans import small_vector
+
+    seen = []
+    real_stitch = spmv_mod.stitch
+
+    def spy(state, inflow, n, broadcast):
+        seen.append((inflow.count(), n, broadcast and small_vector(n)))
+        return real_stitch(state, inflow, n, broadcast)
+
+    monkeypatch.setattr(spmv_mod, "stitch", spy)
+    adj = simple_adjacency(df_edges(spark, [(0, i) for i in range(1, 21)]), "src")
+    cand = spark.createDataFrame([(0, 0.5)], "id long, p double")
+    for regime in regimes(monkeypatch):
+        got = [r["id"] for r in spmv_mod.local_extrema(adj, cand, 1).collect()]
+        assert got == [0], regime
+    adj.unpersist()
+    assert any(b for _, _, b in seen), seen  # the broadcast arm ran
+    assert all(rows <= n for rows, n, b in seen if b), seen
 
 
 # ----------------------------------------------------------------- adamic-adar

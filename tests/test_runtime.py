@@ -248,7 +248,8 @@ def test_superstep_checkpoint_bounds_plan_stats(spark):
 
 def _jobs(spark, fn) -> int:
     """Spark jobs ``fn()`` runs, counted through its own job group (a
-    RuntimeError from ``fn`` is the loop's cap being hit, expected)."""
+    RuntimeError from ``fn`` is the loop's cap being hit, expected).
+    Fails when the count reaches ``spark.ui.retainedJobs``."""
     import uuid
 
     sc = spark.sparkContext
@@ -260,7 +261,12 @@ def _jobs(spark, fn) -> int:
         pass
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    # the tracker keeps the last spark.ui.retainedJobs jobs only: a count
+    # at that limit may have lost evicted jobs
+    retained = int(sc.getConf().get("spark.ui.retainedJobs", "1000"))
+    assert n < retained, f"{n} jobs reach spark.ui.retainedJobs={retained}"
+    return n
 
 
 def test_superstep_reads_convergence_on_its_checkpoint_job(spark):
